@@ -99,7 +99,6 @@ def funnel_counts(
     ts_col: str = "ts",
     type_col: str = "event_type",
     within: Sequence[str] | None = None,
-    release: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Ordered-funnel summary: one row per stage with the number of
     users who reached it and the conversion rate vs stage 0.
@@ -116,8 +115,8 @@ def funnel_counts(
     plans/r12/funnel_signup_purchase_before.txt). Frames are (user,
     first-ts-per-stage) rows — the shrinking small side of each stage
     join, orders of magnitude below the event stream; MEMORY_AND_DISK
-    spills rather than OOMs. ``release`` receives the handles for
-    explicit unpersist (prefix_sum/global_index lifecycle).
+    spills rather than OOMs. The frames belong to the query-cache owner
+    (prefix_sum/global_index lifecycle).
 
     Gated (r13, VERDICT r12 item 2): the persist pays N stage-boundary
     costs to avoid re-running the stage pyramid, a trade that loses on
@@ -131,7 +130,7 @@ def funnel_counts(
     frames = funnel_stage_users(
         events, stages, user_col, ts_col, type_col, within)
     frames = [persist_if_big(
-        f, events, release=release,
+        f, events,
         min_rows_conf="spark.imp_etl.persist.minFunnelSourceRows",
         default_min_rows=16384) for f in frames]
     rows = None

@@ -102,8 +102,7 @@ def exact_content_dedup(df: DataFrame, text_col: str = "text",
 def _capped_band_pairs(stacked: DataFrame, id_col: str, max_bucket: int,
                        observation=None,
                        extra_cols: Sequence[str] = (),
-                       source: DataFrame | None = None,
-                       release: list[DataFrame] | None = None) -> DataFrame:
+                       source: DataFrame | None = None) -> DataFrame:
     """Banded self-join with a degenerate-bucket cap.
 
     ``stacked`` holds one row per (doc, band) with columns
@@ -122,7 +121,7 @@ def _capped_band_pairs(stacked: DataFrame, id_col: str, max_bucket: int,
     frame whose parquet footer bounds the signature count) gates a
     persist of the windowed frame through ``persist_if_big``: one
     window evaluation at scale, the fused plan on provably tiny
-    corpora. ``release`` receives the handle (dedup-tier lifecycle).
+    corpora.
     """
     wb = Window.partitionBy("band", "sig")
     stats = (
@@ -133,7 +132,7 @@ def _capped_band_pairs(stacked: DataFrame, id_col: str, max_bucket: int,
         from imp_etl_spark.operators.util import persist_if_big
 
         stats = persist_if_big(
-            stats, source, release,
+            stats, source,
             min_rows_conf="spark.imp_etl.persist.minBandStatsSourceRows",
             # A/B at sf0.1 (20k signature rows): the persist WON inside
             # dedup_pipeline (0.63 vs 0.68 — the cands persist above it
@@ -252,9 +251,7 @@ def minhash_stacked(df: DataFrame, text_col: str = "text",
 def minhash_candidates_from_stacked(stacked: DataFrame,
                                     id_col: str = "doc_id",
                                     max_bucket: int = 256,
-                                    observation=None,
-                                    release: list[DataFrame] | None = None,
-                                    ) -> DataFrame:
+                                    observation=None) -> DataFrame:
     """Candidate pairs (id_a < id_b) from an ALREADY-BANDED signature
     table — the consumer half of :func:`build_minhash_index`. One wide
     exchange on (band, sig); over-cap buckets degrade to star pairs.
@@ -263,8 +260,7 @@ def minhash_candidates_from_stacked(stacked: DataFrame,
     evaluate the bucket-stats window once instead of per consumer leg.
     """
     return _capped_band_pairs(stacked, id_col, max_bucket,
-                              observation, source=stacked,
-                              release=release).distinct()
+                              observation, source=stacked).distinct()
 
 
 def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
@@ -472,9 +468,7 @@ def simhash_near_dup_pairs(df: DataFrame, text_col: str = "text",
                            max_hamming: int = 3, bands: int = 4,
                            hash_fn: str = "xxhash64",
                            max_bucket: int = 256,
-                           observation=None,
-                           release: list[DataFrame] | None = None
-                           ) -> DataFrame:
+                           observation=None) -> DataFrame:
     """SimHash near-duplicate pairs: hamming(sig_a, sig_b) <= max_hamming.
 
     Banding uses the pigeonhole principle: with ``bands > max_hamming``
@@ -531,7 +525,7 @@ def simhash_near_dup_pairs(df: DataFrame, text_col: str = "text",
     # free); big or unprovable inputs persist.
     pairs = _capped_band_pairs(blocks, id_col, max_bucket, observation,
                                extra_cols=("fullsig",),
-                               source=df, release=release)
+                               source=df)
     return (
         pairs.withColumn(
             "hamming",
@@ -545,8 +539,7 @@ def simhash_near_dup_pairs(df: DataFrame, text_col: str = "text",
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", n: int = 3,
                         threshold: float = 0.8,
-                        candidates: DataFrame | None = None,
-                        release: list[DataFrame] | None = None
+                        candidates: DataFrame | None = None
                         ) -> DataFrame:
     """Exact token-n-gram Jaccard similarity pairs above ``threshold``.
 
@@ -599,7 +592,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
         # (see persist_if_big).
         from imp_etl_spark.operators.util import persist_if_big
 
-        gramsets = persist_if_big(gramsets, df, release)
+        gramsets = persist_if_big(gramsets, df)
         inter = F.size(F.array_intersect("gs_a", "gs_b"))
         return (
             candidates

@@ -211,8 +211,8 @@ def zscore_outliers(df: DataFrame, group_col, value_col: str,
 
 
 def mad_outliers(df: DataFrame, group_col: str, value_col: str,
-                 tiebreak_col: str, k: int = 5, scale: int = 2,
-                 release: list[DataFrame] | None = None) -> DataFrame:
+                 tiebreak_col: str, k: int = 5,
+                 scale: int = 2) -> DataFrame:
     """Robust per-group outlier detection via the median absolute
     deviation: keep rows where |value - median(group)| > k * MAD(group).
     The companion to ``zscore_outliers`` for heavy-tailed data, where
@@ -242,8 +242,8 @@ def mad_outliers(df: DataFrame, group_col: str, value_col: str,
     a measured 2.3x skew penalty at 25x sf0.1 with ~97% of rows in one
     group (SCALING.md, tools/scale_experiment.py SCALE_MADSKEW25).
     Note the prefix sums run two tiny collects at plan-build time
-    (bench/scale timers treat this query as EAGER_BUILD); ``release``
-    receives the persisted intermediates (see ``global_index``).
+    (bench/scale timers treat this query as EAGER_BUILD); the persisted
+    intermediates belong to the query-cache owner (see ``global_index``).
     The tiny median/MAD frames broadcast back. Output adds
     ``dev``/``mad`` integer-unit columns.
     """
@@ -260,7 +260,7 @@ def mad_outliers(df: DataFrame, group_col: str, value_col: str,
         counts = frame.groupBy(group_col, col).agg(
             F.count(F.lit(1)).alias("__c"))
         cum = prefix_sum(counts, [group_col, col], "__c",
-                         out_col="__gcum", release=release)
+                         out_col="__gcum")
         # per-group start offset (global cum just before the group) and
         # group size: one tiny row per group, broadcast back
         per_g = cum.groupBy(group_col).agg(

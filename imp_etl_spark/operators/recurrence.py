@@ -57,8 +57,8 @@ def _chunk_size(alpha: float) -> int:
 
 def _chunk_frame(df: DataFrame, keys: list[str], order_cols: list[str],
                  value_col: str, alpha: float, beta: float, c_size: int,
-                 mode: str | None, num_partitions: int | None,
-                 release: list[DataFrame] | None) -> DataFrame:
+                 mode: str | None,
+                 num_partitions: int | None) -> DataFrame:
     """Shared front half of the rescaled scan: per-key rank (skew
     dispatch), chunk/offset assignment, and the rescaled within-chunk
     running state ``__local`` — identical float ops in both rank modes.
@@ -90,8 +90,8 @@ def _chunk_frame(df: DataFrame, keys: list[str], order_cols: list[str],
         ranked = df.withColumn("__r", F.row_number().over(w))
     else:
         ranked = group_rank(df, keys, order_cols, rank_col="__r",
-                            n_col="__gn", num_partitions=num_partitions,
-                            release=release).drop("__gn")
+                            n_col="__gn",
+                            num_partitions=num_partitions).drop("__gn")
 
     # ---- shared path: identical float ops in both modes ----
     d = (ranked
@@ -124,7 +124,6 @@ def ewma_scan(df: DataFrame, keys: Sequence[str],
               alpha: float, out_col: str = "ewma",
               mode: str | None = None,
               num_partitions: int | None = None,
-              release: list[DataFrame] | None = None,
               chunk_size: int | None = None) -> DataFrame:
     """Per-row recursive EWMA over each key's ordered sequence:
     ``s_1 = x_1``; ``s_i = alpha*x_i + (1-alpha)*s_{i-1}`` (the
@@ -161,7 +160,7 @@ def ewma_scan(df: DataFrame, keys: Sequence[str],
     order_cols = list(order_cols)
 
     d = _chunk_frame(df, keys, order_cols, value_col, alpha, beta,
-                     c_size, mode, num_partitions, release)
+                     c_size, mode, num_partitions)
 
     # chunk summaries (the carry chain's C-times-compressed frame;
     # per-key groups of key_rows/C rows, chained in one pass)
@@ -223,10 +222,8 @@ def ewma_scan(df: DataFrame, keys: Sequence[str],
         ub = _footer_row_bound(df)
         probe_rows = None
         if ub is not None and ub <= persist_cap:
-            from pyspark.storagelevel import StorageLevel
-            d = d.persist(StorageLevel.MEMORY_AND_DISK)
-            if release is not None:
-                release.append(d)
+            from imp_etl_spark.operators.util import persist
+            d = persist(d)
             summ = _chunk_summaries(d, keys)
             probe_rows = summ.limit(cap + 1).collect()
         if probe_rows is not None and len(probe_rows) <= cap:
@@ -279,7 +276,6 @@ def ewma_final(df: DataFrame, keys: Sequence[str],
                n_col: str = "n_events",
                mode: str | None = None,
                num_partitions: int | None = None,
-               release: list[DataFrame] | None = None,
                chunk_size: int | None = None) -> DataFrame:
     """Per-key FINAL state of the unbounded EWMA recursion (``s_N``
     over the key's full ordered history) plus the key's row count —
@@ -320,7 +316,7 @@ def ewma_final(df: DataFrame, keys: Sequence[str],
     order_cols = list(order_cols)
 
     d = _chunk_frame(df, keys, order_cols, value_col, alpha, beta,
-                     c_size, mode, num_partitions, release)
+                     c_size, mode, num_partitions)
     summ = _chunk_summaries(d, keys)
     spark = df.sparkSession
 

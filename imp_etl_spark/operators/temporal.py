@@ -47,7 +47,6 @@ def asof_join(
     build_cols: Mapping[str, str],
     tolerance: str | None = None,
     num_partitions: int | None = None,
-    release: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Backward as-of join: for each probe row, attach the columns of the
     latest build row with the same key and ``build_ts <= probe_ts``
@@ -70,8 +69,7 @@ def asof_join(
     summary collect. Results are invariant to ``num_partitions`` (pinned
     by tests/test_temporal.py). The ranged union is persisted so the
     summary pass and the caller's action see the same partition
-    boundaries — pass ``release=[]`` to receive it for ``unpersist()``
-    in long-lived drivers (same lifecycle contract as
+    boundaries; it belongs to the query-cache owner (same lifecycle as
     window.global_index).
     """
     on = [on] if isinstance(on, str) else list(on)
@@ -124,11 +122,9 @@ def asof_join(
         unioned.repartitionByRange(n, *order_cols)
         .withColumn("__pid", F.spark_partition_id())
     )
-    from pyspark.storagelevel import StorageLevel
+    from imp_etl_spark.operators.util import persist
 
-    d = d.persist(StorageLevel.MEMORY_AND_DISK)
-    if release is not None:
-        release.append(d)
+    d = persist(d)
 
     # ROW-ATOMIC fill struct: the whole matched build row as one value.
     # A per-column last(ignorenulls) would forward-fill each output

@@ -12,7 +12,10 @@ out of big-data plans).
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
+from pyspark.storagelevel import StorageLevel
 
 
 def spread_small_scan(df: DataFrame, min_partitions: int | None = None,
@@ -36,8 +39,55 @@ def spread_small_scan(df: DataFrame, min_partitions: int | None = None,
     return df
 
 
+# The one owner of every frame the operators and registered queries
+# persist. Spark's CacheManager keeps a cache entry until an explicit
+# unpersist (ContextCleaner never collects a cached plan), so a
+# long-lived driver — the HTTP/cron controller, a streaming query —
+# would otherwise hold every query's intermediates until it exits.
+# ``release_query_caches`` is the single release path: the controller
+# calls it after every run and every scheduled epoch, and
+# ``run_etl_stream``'s ``on_epoch_end`` defaults to it. Nothing on a
+# query's own path releases, so one-shot drivers see plain
+# session-lifetime caches. (The ETL's branch-point persist is NOT
+# here: the runner unpersists it after its own merge.)
+_QUERY_PERSISTS: list[DataFrame] = []
+_QUERY_PERSISTS_LOCK = threading.Lock()
+
+
+def persist(df: DataFrame,
+            level: StorageLevel = StorageLevel.MEMORY_AND_DISK) -> DataFrame:
+    """Persist ``df`` (default MEMORY_AND_DISK) and hand it to the
+    query-cache owner; :func:`release_query_caches` unpersists it.
+    Returns the persisted frame. The registered queries' ad-hoc
+    multi-consumer frames pass ``MEMORY_AND_DISK_DESER``, the
+    ``DataFrame.persist()`` default."""
+    d = df.persist(level)
+    with _QUERY_PERSISTS_LOCK:
+        _QUERY_PERSISTS.append(d)
+    return d
+
+
+def release_query_caches(blocking: bool = False) -> int:
+    """Unpersist every frame :func:`persist` registered, clear the
+    registry, and drop the lag-dispatch probe memo (a scheduled driver
+    sees new data every run, and a fresh probe is two map-side passes);
+    returns the number of frames plus memo entries released.
+    Idempotent. The dedup tier's shared MinHash signature artifact is a
+    DISK parquet memo keyed on corpus mtime, not a block-manager
+    persist, so it is not touched."""
+    from imp_etl_spark.operators.window import release_probe_memo
+
+    with _QUERY_PERSISTS_LOCK:
+        frames, _QUERY_PERSISTS[:] = list(_QUERY_PERSISTS), []
+    for d in frames:
+        try:
+            d.unpersist(blocking=blocking)
+        except Exception:
+            pass  # session already stopped — nothing to release
+    return len(frames) + release_probe_memo()
+
+
 def persist_if_big(df: DataFrame, source: DataFrame,
-                   release: list[DataFrame] | None = None,
                    min_rows_conf: str = "spark.imp_etl.persist.minSourceRows",
                    default_min_rows: int = 16384,
                    max_rows_conf: str | None = None,
@@ -55,8 +105,8 @@ def persist_if_big(df: DataFrame, source: DataFrame,
     nearly free. So: a footer bound BELOW the threshold keeps the
     fused no-persist plan; anything bigger — or any input whose size
     cannot be proven (joins, in-memory frames, non-parquet sources,
-    where the safe assumption is big) — persists. ``release``
-    receives the handle for explicit unpersist (prefix_sum lifecycle).
+    where the safe assumption is big) — persists. The persisted frame
+    belongs to the query-cache owner (:func:`release_query_caches`).
 
     ``max_rows_conf``/``default_max_rows`` (r13, ADVICE r12): an
     optional UPPER crossover for frames whose materialized size grows
@@ -67,8 +117,6 @@ def persist_if_big(df: DataFrame, source: DataFrame,
     (the two bounds only ever act on footer-provable scans, where both
     directions of the trade are measurable).
     """
-    from pyspark.storagelevel import StorageLevel
-
     from imp_etl_spark.operators.window import _footer_row_bound
 
     conf = df.sparkSession.conf
@@ -81,10 +129,7 @@ def persist_if_big(df: DataFrame, source: DataFrame,
     ub = _footer_row_bound(source)
     if ub is not None and (ub < thr or (cap is not None and ub >= cap)):
         return df
-    d = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if release is not None:
-        release.append(d)
-    return d
+    return persist(df)
 
 
 def fs_write_text(spark, path: str, content: str) -> None:

@@ -25,10 +25,11 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from imp_etl_spark.operators.util import persist
+
 
 def global_index(df: DataFrame, order_col: str, col_name: str = "__rn",
                  num_partitions: int | None = None,
-                 release: list[DataFrame] | None = None,
                  use_id_projection: bool = True,
                  unique_order: bool = False) -> DataFrame:
     """Distributed 1-based global row index over a total order on
@@ -46,11 +47,8 @@ def global_index(df: DataFrame, order_col: str, col_name: str = "__rn",
     both see the SAME materialized partitions — without that, range
     boundaries and any nondeterministic upstream (sample(), changed
     input files) would recompute between jobs and could duplicate or
-    skip indices. Pass ``release=[]`` to receive the persisted
-    intermediate and ``unpersist()`` it after the consuming action
-    (long-lived drivers: controller/scheduled runs); with
-    ``release=None`` the blocks wait for ContextCleaner GC — fine for
-    one-shot queries, documented pressure for resident processes.
+    skip indices. Every frame it persists belongs to the query-cache
+    owner (``operators.util.release_query_caches``).
 
     ``unique_order=True`` is the caller's certificate that
     ``order_col`` is a UNIQUE total order (every in-repo consumer packs
@@ -65,13 +63,9 @@ def global_index(df: DataFrame, order_col: str, col_name: str = "__rn",
     paths may rank ties differently, and this function promises only
     consistency within one plan.
     """
-    from pyspark.storagelevel import StorageLevel
-
     spark = df.sparkSession
     if unique_order:
-        d0 = df.persist(StorageLevel.MEMORY_AND_DISK)
-        if release is not None:
-            release.append(d0)
+        d0 = persist(df)
         small = int(float(spark.conf.get(
             "spark.imp_etl.prefixSum.maxSingleSortRows", "1048576")))
         if d0.count() <= small:
@@ -81,19 +75,14 @@ def global_index(df: DataFrame, order_col: str, col_name: str = "__rn",
             # persist the ranked result: multi-consumer callers (the
             # sorted-neighborhood join reads it as BOTH legs) would
             # otherwise re-run the single-partition sort per consumer
-            out = out.persist(StorageLevel.MEMORY_AND_DISK)
-            if release is not None:
-                release.append(out)
-            return out
+            return persist(out)
         df = d0  # big: fall through, range-sampling reads the cache
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     d = (df.repartitionByRange(n, F.col(order_col).asc())
          .sortWithinPartitions(F.col(order_col).asc())
          .select("*", F.monotonically_increasing_id().alias("__mid"),
                  F.spark_partition_id().alias("__pid")))
-    d = d.persist(StorageLevel.MEMORY_AND_DISK)
-    if release is not None:
-        release.append(d)
+    d = persist(d)
     stats = {r["__pid"]: (r["c"], r["mn"], r["mx"]) for r in
              d.groupBy("__pid").agg(F.count(F.lit(1)).alias("c"),
                                     F.min("__mid").alias("mn"),
@@ -141,13 +130,12 @@ def global_index(df: DataFrame, order_col: str, col_name: str = "__rn",
     )
 
 
-def paginate(df: DataFrame, order_col: str, offset: int, limit: int,
-             release: list[DataFrame] | None = None) -> DataFrame:
+def paginate(df: DataFrame, order_col: str, offset: int,
+             limit: int) -> DataFrame:
     """S2/O2 — deterministic batch window over a total order, built on
-    the distributed ``global_index`` (no single-partition sort).
-    ``release`` forwards to :func:`global_index` (persist lifecycle)."""
+    the distributed ``global_index`` (no single-partition sort)."""
     return (
-        global_index(df, order_col, release=release)
+        global_index(df, order_col)
         .filter((F.col("__rn") > offset) & (F.col("__rn") <= offset + limit))
         .drop("__rn")
     )
@@ -208,8 +196,7 @@ def rolling_time(df: DataFrame, key: Sequence[str] | str, ts_col: str,
 
 def prefix_sum(df: DataFrame, order_cols: Sequence[str], value_col: str,
                out_col: str = "cum",
-               num_partitions: int | None = None,
-               release: list[DataFrame] | None = None) -> DataFrame:
+               num_partitions: int | None = None) -> DataFrame:
     """Distributed inclusive running sum of ``value_col`` over the total
     order given by ``order_cols`` (which must be a UNIQUE key — ties
     would make the intermediate sums order-dependent).
@@ -219,8 +206,8 @@ def prefix_sum(df: DataFrame, order_cols: Sequence[str], value_col: str,
     partition base offsets from a totals pass (one tiny collect of one
     sum per partition). The naive empty-partitionBy running-sum window
     funnels the entire table through one task; this never does.
-    ``release`` receives the persisted intermediate for explicit
-    ``unpersist()`` after the consuming action (see ``global_index``).
+    Every frame it persists belongs to the query-cache owner
+    (``operators.util.release_query_caches``).
 
     r13 (VERDICT r12 item 6 — the machinery's fixed costs were the
     bench's worst scaling ratios): the INPUT is persisted and counted
@@ -236,14 +223,10 @@ def prefix_sum(df: DataFrame, order_cols: Sequence[str], value_col: str,
     frames keep the skew-immune distributed shape, whose pre-exchange
     cache is dropped as soon as the ranged frame materializes.
     """
-    from pyspark.storagelevel import StorageLevel
-
     spark = df.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism
     cols = [F.col(c).asc() for c in order_cols]
-    d0 = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if release is not None:
-        release.append(d0)
+    d0 = persist(df)
     n_rows = d0.count()
     small = int(float(spark.conf.get(
         "spark.imp_etl.prefixSum.maxSingleSortRows", "1048576")))
@@ -257,15 +240,9 @@ def prefix_sum(df: DataFrame, order_cols: Sequence[str], value_col: str,
         # each consumer would re-run the single-partition sort — the
         # A/B measurement that set the crossover had exactly that
         # double-sort dominating the small path on wide count frames
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-        if release is not None:
-            release.append(out)
-        return out
-    d = (d0.repartitionByRange(n, *cols)
-         .withColumn("__pid", F.spark_partition_id()))
-    d = d.persist(StorageLevel.MEMORY_AND_DISK)
-    if release is not None:
-        release.append(d)
+        return persist(out)
+    d = persist(d0.repartitionByRange(n, *cols)
+                .withColumn("__pid", F.spark_partition_id()))
     totals = {r["__pid"]: r["t"] for r in
               d.groupBy("__pid").agg(
                   F.sum(F.col(value_col)).alias("t")).collect()}
@@ -319,8 +296,7 @@ def seq_lag(df: DataFrame, keys: Sequence[str], order_cols: Sequence[str],
             lags: LagSpec = None,
             leads: LagSpec = None,
             k: int = 1,
-            num_partitions: int | None = None,
-            release: list[DataFrame] | None = None) -> DataFrame:
+            num_partitions: int | None = None) -> DataFrame:
     """Hot-key-immune ``lag(col, k)`` / ``lead(col, k)`` ``OVER
     (PARTITION BY keys ORDER BY order_cols)`` — the fourth machinery of
     the per-key sequential-window family (SCALING.md watch table):
@@ -357,13 +333,12 @@ def seq_lag(df: DataFrame, keys: Sequence[str], order_cols: Sequence[str],
     dedupes). The boundary exchange carries ``max(offsets)`` rows per
     edge and only in the requested directions (tails for lags, heads
     for leads). Results are invariant to ``num_partitions`` (pinned by
-    tests). ``release`` receives the persisted ranged frame for
-    explicit ``unpersist()`` (same lifecycle as ``global_index``).
+    tests). The persisted ranged frame belongs to the query-cache
+    owner (same lifecycle as ``global_index``).
     """
     from collections import deque
 
     from pyspark.sql import types as T
-    from pyspark.storagelevel import StorageLevel
 
     lag_specs = _norm_specs(lags, k)
     lead_specs = _norm_specs(leads, k)
@@ -375,12 +350,9 @@ def seq_lag(df: DataFrame, keys: Sequence[str], order_cols: Sequence[str],
     n = num_partitions or spark.sparkContext.defaultParallelism
     order = [F.col(c).asc() for c in [*keys, *order_cols]]
 
-    d = (df.repartitionByRange(n, *order)
-         .withColumn("__pid", F.spark_partition_id())
-         .withColumn("__edge", F.lit(0)))
-    d = d.persist(StorageLevel.MEMORY_AND_DISK)
-    if release is not None:
-        release.append(d)
+    d = persist(df.repartitionByRange(n, *order)
+                .withColumn("__pid", F.spark_partition_id())
+                .withColumn("__edge", F.lit(0)))
 
     # a lag/lead source may itself be a key or order column — dedupe so
     # the payload struct (and its `__row.*` expansion) stays collision-free
@@ -450,8 +422,7 @@ def seq_lag(df: DataFrame, keys: Sequence[str], order_cols: Sequence[str],
 def group_rank(df: DataFrame, group_cols: Sequence[str],
                order_cols: Sequence[str],
                rank_col: str = "__grk", n_col: str = "__gn",
-               num_partitions: int | None = None,
-               release: list[DataFrame] | None = None) -> DataFrame:
+               num_partitions: int | None = None) -> DataFrame:
     """Per-group 1-based row rank over a UNIQUE (group + order) total
     order, plus the group size — WITHOUT a per-group window. This is
     the giant-group-safe replacement for
@@ -461,14 +432,13 @@ def group_rank(df: DataFrame, group_cols: Sequence[str],
     over the (group, order) range partitioning spreads every group
     across tasks, and per-group offsets come back as one broadcast row
     per group (bounded by the group DOMAIN, not the data). Same
-    two-phase machinery and persist/release lifecycle as
+    two-phase machinery and persist lifecycle as
     ``prefix_sum``/``global_index``; the r8 mad_outliers rank-pick is
     the count-collapsed sibling of this per-row form.
     """
     cum = prefix_sum(df.withColumn("__one", F.lit(1)),
                      [*group_cols, *order_cols], "__one",
-                     out_col="__cum", num_partitions=num_partitions,
-                     release=release)
+                     out_col="__cum", num_partitions=num_partitions)
     per_g = cum.groupBy(*group_cols).agg(
         (F.min("__cum") - 1).alias("__off"),
         F.count(F.lit(1)).alias(n_col))
@@ -501,8 +471,8 @@ def group_rank(df: DataFrame, group_cols: Sequence[str],
 #: is benign BY CONSTRUCTION: the memoized value only ever picks the
 #: window-vs-seq plan, and both plans are value-exact — a stale hit
 #: can cost a suboptimal shape for one run, never a wrong answer.
-#: Released with the same between-run hygiene as the dedup artifact
-#: memo (plans/control.py / streaming/etl_stream.py hooks), and CAPPED
+#: Released with the query caches (operators/util.release_query_caches,
+#: called by the controller and the streaming epoch hook), and CAPPED
 #: (r10, ADVICE): sessions that never hit those hooks (fuzzer sweeps,
 #: ad-hoc drivers) must not pin unbounded py4j JVM plan references —
 #: beyond ``_PROBE_MEMO_CAP`` distinct plan-hash slots the
@@ -820,7 +790,6 @@ def lag_dispatch(df: DataFrame, keys: Sequence[str],
                  order_cols: Sequence[str],
                  lags: LagSpec = None, leads: LagSpec = None, k: int = 1,
                  num_partitions: int | None = None,
-                 release: list[DataFrame] | None = None,
                  mode: str | None = None,
                  threshold: float | None = None,
                  support: float | None = None,
@@ -872,7 +841,7 @@ def lag_dispatch(df: DataFrame, keys: Sequence[str],
                             support=support)
     if mode == "seq":
         return seq_lag(df, keys, order_cols, lags=lags, leads=leads, k=k,
-                       num_partitions=num_partitions, release=release)
+                       num_partitions=num_partitions)
     lag_specs = _norm_specs(lags, k)
     lead_specs = _norm_specs(leads, k)
     assert lag_specs or lead_specs, "need at least one of lags/leads"
@@ -890,7 +859,6 @@ def trailing_time_sums(df: DataFrame, key: Sequence[str] | str,
                        mode: str | None = None,
                        hot_rows: int | None = None,
                        num_partitions: int | None = None,
-                       release: list[DataFrame] | None = None,
                        probe: DataFrame | None = None) -> DataFrame:
     """Per-key trailing TIME-window count/sums with a skew dispatch —
     the trailing-RANGE sibling of :func:`lag_dispatch` (VERDICT r10
@@ -1002,12 +970,8 @@ def trailing_time_sums(df: DataFrame, key: Sequence[str] | str,
     # per-partition cumsum + driver-chained partition offsets (the
     # prefix_sum shape, generalized to several exact columns)
     cols = [F.col("__k").asc(), F.col("__ep").asc()]
-    from pyspark.storagelevel import StorageLevel
-    p = (g.repartitionByRange(n, *cols)
-         .withColumn("__pid", F.spark_partition_id())
-         .persist(StorageLevel.MEMORY_AND_DISK))
-    if release is not None:
-        release.append(p)
+    p = persist(g.repartitionByRange(n, *cols)
+                .withColumn("__pid", F.spark_partition_id()))
     totals = (p.groupBy("__pid")
               .agg(*[F.sum(c).alias(c) for c in val_cols]).collect())
     acc = {c: 0 for c in val_cols}
@@ -1060,7 +1024,7 @@ def trailing_time_sums(df: DataFrame, key: Sequence[str] | str,
     res = asof_join(
         probe_f, build, on="__k", probe_ts="__bnd", build_ts="__bts",
         build_cols={f"__bb{c}": f"__pb{c}" for c in val_cols},
-        num_partitions=num_partitions, release=release)
+        num_partitions=num_partitions)
 
     # frame sum = csum difference, but NULL when the frame holds zero
     # NON-NULL values (the window shape's SUM-of-empty semantics — the

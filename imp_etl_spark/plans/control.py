@@ -27,27 +27,9 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from imp_etl_spark.operators.util import release_query_caches
 from imp_etl_spark.plans.runner import run_etl
 from imp_etl_spark.streaming.etl_stream import run_etl_stream
-
-
-def _release_query_caches() -> int:
-    """Between-run cache hygiene for a LONG-LIVED controller (VERDICT r6
-    item 3): the dedup tier tracks its candidate/verified-pair persists
-    in a module registry that holds STRONG references — Spark's
-    CacheManager keeps cached plans until an explicit unpersist, so
-    nothing is reclaimed implicitly. A driver that interleaves dedup
-    queries with scheduled ETL epochs would grow that registry without
-    bound; releasing here (after every run_once and every scheduled
-    epoch) keeps it empty between runs. Cheap no-op (returns 0) when no
-    dedup query ran since the last release. Also drops the lag-dispatch
-    probe memo (round 9) so the next run re-probes fresh data — memo
-    staleness is benign (plan choice only) but a scheduled driver sees
-    new data every epoch, and the fresh probe is two map-side passes."""
-    from imp_etl_spark.operators.window import release_probe_memo
-    from imp_etl_spark.queries_llm import release_dedup_caches
-
-    return release_dedup_caches() + release_probe_memo()
 
 
 class EtlController:
@@ -89,7 +71,7 @@ class EtlController:
             return self._last_summary
         finally:
             self._started_at = None
-            _release_query_caches()
+            release_query_caches()
 
     # -- start-etl (scheduled) --------------------------------------------
     def schedule(self, queue_stream: DataFrame, voucher: DataFrame,
@@ -129,7 +111,7 @@ class EtlController:
                     voucher_path, txn_path, checkpoint_dir,
                     available_now=False, processing_time=kind[1],
                     epoch_summaries=self.epoch_summaries,
-                    on_epoch_end=_release_query_caches, **kwargs)
+                    on_epoch_end=release_query_caches, **kwargs)
             else:
                 def _fire() -> None:
                     q = run_etl_stream(
@@ -137,7 +119,7 @@ class EtlController:
                         voucher_path, txn_path, checkpoint_dir,
                         available_now=True,
                         epoch_summaries=self.epoch_summaries,
-                        on_epoch_end=_release_query_caches, **kwargs)
+                        on_epoch_end=release_query_caches, **kwargs)
                     # register the fire's query on the controller while
                     # the epoch runs (r11, ADVICE): stop() can then
                     # q.stop() an epoch that outlasts the scheduler

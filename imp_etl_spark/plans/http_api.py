@@ -30,9 +30,11 @@ Design notes:
   AvailableNow epoch per match against the same checkpoint. Only
   genuinely invalid patterns get the reference's 400 shape.
 - SSE tail: each connection polls the log file by offset (the ``tail``
-  package's fs.watch, minus the dependency); truncation is detected by
-  shrinkage and surfaces as the same ``event: clear`` the reference
-  broadcasts from DELETE.
+  package's fs.watch, minus the dependency). DELETE bumps a clear
+  generation that every tail compares on each poll, so a clear surfaces
+  as the same ``event: clear`` the reference broadcasts even when the
+  file regrows past the tail's offset within one poll; an external
+  truncation is detected by shrinkage.
 """
 
 from __future__ import annotations
@@ -183,7 +185,10 @@ class EtlHttpServer:
         self.log_path.touch(exist_ok=True)
         self._stopping = threading.Event()
         self._lock = threading.Lock()
+        # guards appends, clears and each tail's (generation, read)
+        # snapshot, so a tail never reads a regrown file as new lines
         self._log_write_lock = threading.Lock()
+        self._log_generation = 0
         self._forcing = False
         # epoch completions log themselves into the served log file,
         # like the reference's per-run logger lines
@@ -446,9 +451,13 @@ class EtlHttpServer:
         })
 
     def _clear_logs(self, h: _Handler) -> None:
-        # truncation is the broadcast: every attached SSE tail sees the
-        # shrink and emits `event: clear` (reference: index.js:259-262)
-        self.log_path.write_text("")
+        # the generation bump is the broadcast: every attached SSE tail
+        # sees it on its next poll and emits `event: clear` (reference:
+        # index.js:259-262). A truncate in place keeps the inode, so
+        # shrinkage alone misses a file that regrew within one poll.
+        with self._log_write_lock:
+            self.log_path.write_text("")
+            self._log_generation += 1
         h._json(200, {"message": "Logs cleared successfully"})
 
     def _stream_logs(self, h: _Handler) -> None:
@@ -464,25 +473,33 @@ class EtlHttpServer:
                 f"event: {event}\ndata: {json.dumps(payload)}\n\n".encode())
             h.wfile.flush()
 
+        # tail from NOW, like Tail: take the offset BEFORE announcing the
+        # connection, so a line appended right after `connected` streams
+        with self._log_write_lock:
+            gen = self._log_generation
+            offset = self.log_path.stat().st_size
         emit("connected", {"message": "Connected to log stream"})
-        offset = self.log_path.stat().st_size  # tail from NOW, like Tail
         last_write = time.monotonic()
         try:
             while not self._stopping.is_set():
-                size = self.log_path.stat().st_size
-                if size < offset:
+                chunk = ""
+                with self._log_write_lock:
+                    size = self.log_path.stat().st_size
+                    cleared = gen != self._log_generation or size < offset
+                    gen = self._log_generation
+                    if cleared:
+                        offset = 0
+                    if size > offset:
+                        with self.log_path.open("r") as f:
+                            f.seek(offset)
+                            chunk = f.read()
+                            offset = f.tell()
+                if cleared:
                     emit("clear", {})
-                    offset = 0
-                    last_write = time.monotonic()
-                    continue
-                if size > offset:
-                    with self.log_path.open("r") as f:
-                        f.seek(offset)
-                        chunk = f.read()
-                        offset = f.tell()
-                    for ln in chunk.splitlines():
-                        if ln.strip():
-                            emit("log", parse_log_line(ln))
+                for ln in chunk.splitlines():
+                    if ln.strip():
+                        emit("log", parse_log_line(ln))
+                if cleared or chunk:
                     last_write = time.monotonic()
                     continue
                 # idle heartbeat: an SSE comment every couple of seconds

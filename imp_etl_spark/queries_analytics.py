@@ -24,8 +24,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from imp_etl_spark.operators import behavior, join, quality, sampling
+from imp_etl_spark.operators.util import persist, persist_if_big
 from imp_etl_spark.registry import register
 from imp_etl_spark.sources.parquet import read_table
 
@@ -74,20 +76,7 @@ def funnel_signup_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     only within its window (click <=12h after signup, purchase <=24h
     after that click). 150 -> 28 -> 16 users on the sf0.01 fixture."""
     ev = read_table(spark, sf_dir, "events")
-    # the operator persists its per-stage user frames (r12); track the
-    # handles with the dedup tier's registry so long-lived drivers
-    # release them with the other staged tiny frames
-    from imp_etl_spark.queries_llm import (
-        _DEDUP_PERSISTS,
-        _DEDUP_PERSISTS_LOCK,
-    )
-
-    rel: list[DataFrame] = []
-    out = behavior.funnel_counts(
-        ev, _FUNNEL_STAGES, within=_FUNNEL_WITHIN, release=rel)
-    with _DEDUP_PERSISTS_LOCK:
-        _DEDUP_PERSISTS.extend(rel)
-    return out
+    return behavior.funnel_counts(ev, _FUNNEL_STAGES, within=_FUNNEL_WITHIN)
 
 
 # ---------------------------------------------------------------------------
@@ -1084,16 +1073,13 @@ def hll_user_overlap_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (plans/r12/hll_user_overlap_halves_before.txt: 6 parquet scans,
     # 0 ReusedExchange). The persisted frame is one row per
     # (event_type, half) at 16 KiB per sketch — exactly the persisted
-    # "sketch table" the operator's 100 TB story assumes. Tracked for
-    # release like the dedup tier's pair frames. Gated (r13, VERDICT
+    # "sketch table" the operator's 100 TB story assumes. Gated (r13, VERDICT
     # r12 item 2): the sketch rebuild the persist saves is a cheap
     # map-side-combined agg, so the crossover sits far above the
     # operator default — the driver measured this row 0.71x at sf0.1's
     # 100k events with the persist unconditional, and the fused
     # 3-evaluation plan wins until the event scan itself dominates.
-    from imp_etl_spark.queries_llm import _track_persist_if_big
-
-    sk = _track_persist_if_big(
+    sk = persist_if_big(
         sharded_distinct_sketch(
             ev, ["event_type"], "user_id", shard=F.col("__dom") <= 15),
         ev, "spark.imp_etl.persist.minSketchSourceRows", 1_048_576)
@@ -1489,8 +1475,8 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
               # PARTIAL crosses int64 (the r9 calibration-overflow
               # class)
               F.sum(cents.cast("decimal(38,0)")).cast("long")
-              .alias("monetary_cents"))
-         .persist())
+              .alias("monetary_cents")))
+    c = persist(c, StorageLevel.MEMORY_AND_DISK_DESER)
     n = c.agg(F.count(F.lit(1)).alias("n"))
 
     def rank_bin(metric: str, out: str) -> DataFrame:
@@ -1574,8 +1560,8 @@ def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows.
     """
     ev = read_table(spark, sf_dir, "events")
-    d = (ev.select(F.to_date("ts").alias("day"), "user_id").distinct()
-         .persist())
+    d = persist(ev.select(F.to_date("ts").alias("day"), "user_id")
+                .distinct(), StorageLevel.MEMORY_AND_DISK_DESER)
     g = d.select("day").distinct()
     contrib = (
         d.select(
@@ -1639,8 +1625,9 @@ def basket_part_pairs_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded heap. Lift stays deterministic: exact integer counts, one
     IEEE division each.
     """
-    d = (read_table(spark, sf_dir, "lineitem")
-         .select("l_orderkey", "l_partkey").distinct().persist())
+    d = persist(read_table(spark, sf_dir, "lineitem")
+                .select("l_orderkey", "l_partkey").distinct(),
+                StorageLevel.MEMORY_AND_DISK_DESER)
     n = d.agg(F.count_distinct("l_orderkey").alias("n_orders"))
     pc = d.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("part_orders"))
     a = d.alias("a")

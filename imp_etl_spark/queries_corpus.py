@@ -34,9 +34,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from imp_etl_spark.functions.hashing import shingles
 from imp_etl_spark.functions.text import lang_id, quality_score, tokens
+from imp_etl_spark.operators.util import persist
 from imp_etl_spark.operators.window import group_rank
 from imp_etl_spark.registry import register
 from imp_etl_spark.queries_sqlfrag import DUCK_TOKS as _DUCK_TOKS
@@ -93,8 +95,8 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.explode(F.array_distinct(shingles(tokens(F.col("text")), 5))
                       ).alias("gram"))
-         .select("doc_id", F.xxhash64("gram").alias("gh"))
-         .persist())
+         .select("doc_id", F.xxhash64("gram").alias("gh")))
+    g = persist(g, StorageLevel.MEMORY_AND_DISK_DESER)
     per_doc = g.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     novel = (g.groupBy("gh").agg(F.min("doc_id").alias("first_doc"))
              .groupBy("first_doc").agg(F.count(F.lit(1)).alias("novel")))
@@ -339,9 +341,9 @@ def oov_rate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared tokenize pass (r13): the vocab build and the coverage join
     # are two consumers of one token stream — same two-sided gated
     # persist as tfidf_top_term / doc_token_rarity (queries_llm)
-    from imp_etl_spark.queries_llm import _track_persist_if_token_scale
+    from imp_etl_spark.queries_llm import _persist_if_token_scale
 
-    tok = _track_persist_if_token_scale(
+    tok = _persist_if_token_scale(
         docs.select(
             "doc_id", F.explode(tokens(F.col("text"))).alias("tok")),
         docs)
@@ -451,7 +453,8 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         "doc_id", "source", "text",
         F.size(tokens(F.col("text"))).alias("ntok"),
-        quality_score("text").alias("q")).persist()
+        quality_score("text").alias("q"))
+    base = persist(base, StorageLevel.MEMORY_AND_DISK_DESER)
     # stage-1 quality gate: distributed per-source rank (group_rank —
     # giant-source-safe, r8) instead of a per-source percent_rank
     # window; percent_rank is 0.0 for a single-doc source by definition

@@ -247,7 +247,7 @@ def doc_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cap (a corpus-scale cache would spill ~its own input to local
     # disk; past the cap the two-pass streaming plan is the cheaper
     # side of the trade, the r12 position, now conf-tunable).
-    toks = _track_persist_if_token_scale(
+    toks = _persist_if_token_scale(
         docs.select("doc_id",
                     F.explode(tokens(F.col("text"))).alias("tok")),
         docs)
@@ -330,7 +330,7 @@ def tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared tokenize pass (r13) — same two-sided gate as
     # doc_token_rarity: tf and df are two aggregations over one
     # token stream
-    toks = _track_persist_if_token_scale(
+    toks = _persist_if_token_scale(
         docs.select("doc_id",
                     F.explode(tokens(F.col("text"))).alias("tok")),
         docs)
@@ -602,40 +602,7 @@ _MINHASH_IDX: dict[tuple, str] = {}
 # first callers would each mint their own lock and both run the build)
 _MINHASH_IDX_LOCK = threading.Lock()
 
-# Session-scoped persists the dedup tier creates (candidate-pair and
-# verified-pair frames). NOTHING reclaims these implicitly: this list
-# holds strong references and Spark's CacheManager keeps cache entries
-# until an explicit unpersist (ContextCleaner only collects frames with
-# NO live reference — these always have one, so it never fires).
-# release_dedup_caches() is therefore the ONLY release path; the
-# controller invokes it after every run_once and every scheduled epoch
-# (plans/control.py _release_query_caches — VERDICT r6 item 3), and
-# run_etl_stream's ``on_epoch_end`` DEFAULTS to the same hook (VERDICT
-# r7 item 4), so both the wrapped and the direct streaming entry get
-# the bounded lifecycle — the same explicit discipline
-# operators/window.global_index exposes via its ``release`` parameter
-# (VERDICT r5 item 4). The registered query signature is fixed at
-# (spark, sf_dir), so the hook is module-level rather than a per-call
-# argument. Growth between releases is bounded by persists-per-query ×
-# queries-run, and each frame is pairs-only (tiny); a one-shot process
-# can skip the release entirely.
-_DEDUP_PERSISTS: list[DataFrame] = []
-_DEDUP_PERSISTS_LOCK = threading.Lock()
-
-
-def _track_persist(df: DataFrame) -> DataFrame:
-    """Persist MEMORY_AND_DISK and record the frame for explicit
-    release. Returns the persisted frame."""
-    from pyspark.storagelevel import StorageLevel
-
-    d = df.persist(StorageLevel.MEMORY_AND_DISK)
-    with _DEDUP_PERSISTS_LOCK:
-        _DEDUP_PERSISTS.append(d)
-    return d
-
-
-def _track_persist_if_token_scale(toks: DataFrame,
-                                  docs: DataFrame) -> DataFrame:
+def _persist_if_token_scale(toks: DataFrame, docs: DataFrame) -> DataFrame:
     """Gated persist for a per-doc exploded token stream (r13, VERDICT
     r12 item 5): the two-aggregation corpus queries (tfidf_top_term,
     doc_token_rarity, oov_rate_docs) consume their token frame twice,
@@ -648,55 +615,22 @@ def _track_persist_if_token_scale(toks: DataFrame,
     measured crossover window between the bounds)."""
     from imp_etl_spark.operators.util import persist_if_big
 
-    rel: list[DataFrame] = []
-    out = persist_if_big(
-        toks, docs, release=rel,
+    return persist_if_big(
+        toks, docs,
         min_rows_conf="spark.imp_etl.persist.minTokenSourceRows",
         default_min_rows=2048,
         max_rows_conf="spark.imp_etl.persist.maxTokenSourceRows",
         default_max_rows=16_777_216)
-    if rel:
-        with _DEDUP_PERSISTS_LOCK:
-            _DEDUP_PERSISTS.extend(rel)
-    return out
 
 
-def _track_persist_if_big(df: DataFrame, source: DataFrame,
-                          min_rows_conf: str,
-                          default_min_rows: int) -> DataFrame:
-    """``persist_if_big`` routed through the dedup tier's release
-    registry (r13, VERDICT r12 item 2): the query-level persists that
-    stayed unconditional in r12 (verified pairs, candidate pairs, the
-    HLL sketch frame) now gate on the SOURCE's footer row bound like
-    the operator-level ones, each family with its own conf-overridable
-    crossover. Returns ``df`` unchanged (fused plan) below the gate."""
+def _persist_verify_tier(df: DataFrame, docs: DataFrame) -> DataFrame:
+    """The dedup tier's staged pair-table persist (candidate and
+    verified pairs): gated (r13, VERDICT r12 item 2) on the corpus
+    footer bound with the verify-tier crossover."""
     from imp_etl_spark.operators.util import persist_if_big
 
-    rel: list[DataFrame] = []
-    out = persist_if_big(df, source, release=rel,
-                         min_rows_conf=min_rows_conf,
-                         default_min_rows=default_min_rows)
-    if rel:
-        with _DEDUP_PERSISTS_LOCK:
-            _DEDUP_PERSISTS.extend(rel)
-    return out
-
-
-def release_dedup_caches(blocking: bool = False) -> int:
-    """Unpersist every dedup-tier frame tracked by ``_track_persist``
-    and clear the registry; returns how many were released. The shared
-    MinHash signature artifact (``_MINHASH_IDX``) is a DISK parquet
-    memo, not a block-manager persist — it holds no executor memory and
-    is invalidated by corpus mtime, so it is deliberately not touched
-    here."""
-    with _DEDUP_PERSISTS_LOCK:
-        frames, _DEDUP_PERSISTS[:] = list(_DEDUP_PERSISTS), []
-    for d in frames:
-        try:
-            d.unpersist(blocking=blocking)
-        except Exception:
-            pass  # session already stopped — nothing to release
-    return len(frames)
+    return persist_if_big(
+        df, docs, "spark.imp_etl.persist.minVerifySourceRows", 256)
 
 
 def _shared_minhash_stacked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -768,30 +702,23 @@ def dedup_pipeline_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidates come off the SHARED banded-signature artifact (one
     # build per corpus, _shared_minhash_stacked); the pair frame feeds
     # BOTH the posting-list prune and the pair semi-join inside
-    # ngram_jaccard_pairs, so persist it (tiny — pairs only; tracked
-    # for explicit release via release_dedup_caches). Gated (r13) on
-    # the corpus footer bound like every other staged persist: the
-    # Jaccard verify these frames cache is expensive per doc, so the
+    # ngram_jaccard_pairs, so persist it (tiny — pairs only). Gated
+    # (r13) on the corpus footer bound like every other staged persist:
+    # the Jaccard verify these frames cache is expensive per doc, so the
     # crossover sits at hundreds of docs, far below the operator-level
     # 16384 default — only toy corpora keep the fused plan.
-    _rel: list[DataFrame] = []
-    cands = _track_persist_if_big(
+    cands = _persist_verify_tier(
         minhash_candidates_from_stacked(_shared_minhash_stacked(
-            spark, sf_dir), release=_rel),
-        docs, "spark.imp_etl.persist.minVerifySourceRows", 256)
+            spark, sf_dir)), docs)
     # the verified-pair table is the NEXT staged artifact after the
     # signatures: survivor selection here and cluster assignment
     # (dedup_cluster_assign) consume the SAME pairs, so persist them —
     # the cache manager dedupes by logical plan and the second consumer
     # skips the whole Jaccard verify (a production crawl materializes
     # exactly this table between its verify and cluster stages)
-    verified = _track_persist_if_big(
+    verified = _persist_verify_tier(
         ngram_jaccard_pairs(docs, "text", "doc_id", n=5,
-                            threshold=0.5, candidates=cands,
-                            release=_rel),
-        docs, "spark.imp_etl.persist.minVerifySourceRows", 256)
-    with _DEDUP_PERSISTS_LOCK:
-        _DEDUP_PERSISTS.extend(_rel)
+                            threshold=0.5, candidates=cands), docs)
     removed = verified.select(F.col("id_b").alias("doc_id")).distinct()
     return docs.join(F.broadcast(removed), on="doc_id",
                      how="left_anti").select("doc_id", "n_chars")
@@ -862,26 +789,21 @@ def cross_corpus_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    stacked.filter(~is_new))
     # reuse the self-join verifier on the union frame: ids are globally
     # unique, and the candidate set already constrains pairs to new↔ref
-    pairs = _track_persist_if_big(cand.select(
+    pairs = _persist_verify_tier(cand.select(
         F.least("id_new", "id_ref").alias("id_a"),
         F.greatest("id_new", "id_ref").alias("id_b"),
-    ), docs, "spark.imp_etl.persist.minVerifySourceRows", 256)
+    ), docs)
     # persist the verified pairs too (r12): the removed-set union below
     # consumes them through BOTH legs (id_a and id_b), and without the
     # persist each leg re-ran the whole Jaccard verify — including its
     # two gramset joins — so the before plan re-scanned documents four
     # times (plans/r12/cross_corpus_survivors_before.txt). Same staged
     # pair-table treatment as dedup_pipeline_survivors' verified frame;
-    # pairs-only, tiny, released via release_dedup_caches; gated (r13)
-    # on the corpus footer bound with the verify-tier crossover.
-    _rel: list[DataFrame] = []
-    verified = _track_persist_if_big(
+    # pairs-only, tiny; gated (r13) on the corpus footer bound with the
+    # verify-tier crossover.
+    verified = _persist_verify_tier(
         ngram_jaccard_pairs(docs, "text", "doc_id", n=5,
-                            threshold=0.5, candidates=pairs,
-                            release=_rel),
-        docs, "spark.imp_etl.persist.minVerifySourceRows", 256)
-    with _DEDUP_PERSISTS_LOCK:
-        _DEDUP_PERSISTS.extend(_rel)
+                            threshold=0.5, candidates=pairs), docs)
     removed = (
         verified.select(F.col("id_a").alias("doc_id"))
         .unionByName(verified.select(F.col("id_b").alias("doc_id")))
@@ -968,23 +890,16 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from imp_etl_spark.operators.graph import cluster_assignments
 
     docs = read_table(spark, sf_dir, "documents")
-    _rel: list[DataFrame] = []
-    cands = _track_persist_if_big(
+    cands = _persist_verify_tier(
         minhash_candidates_from_stacked(_shared_minhash_stacked(
-            spark, sf_dir), release=_rel),
-        docs, "spark.imp_etl.persist.minVerifySourceRows", 256)
+            spark, sf_dir)), docs)
     # same logical plan as dedup_pipeline_survivors' verified frame —
     # the persist makes the shared Jaccard verify a cache hit when both
-    # run in one session (the staged pair-table artifact; tracked for
-    # release_dedup_caches in long-lived drivers); gated (r13) on the
-    # corpus footer bound with the verify-tier crossover
-    verified = _track_persist_if_big(
+    # run in one session (the staged pair-table artifact); gated (r13)
+    # on the corpus footer bound with the verify-tier crossover
+    verified = _persist_verify_tier(
         ngram_jaccard_pairs(docs, "text", "doc_id", n=5,
-                            threshold=0.5, candidates=cands,
-                            release=_rel),
-        docs, "spark.imp_etl.persist.minVerifySourceRows", 256)
-    with _DEDUP_PERSISTS_LOCK:
-        _DEDUP_PERSISTS.extend(_rel)
+                            threshold=0.5, candidates=cands), docs)
     return cluster_assignments(docs.select("doc_id"), verified,
                                id_col="doc_id")
 
@@ -997,13 +912,8 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the signature pass itself is amortized across the dedup tier."""
     from imp_etl_spark.operators.dedup import minhash_candidates_from_stacked
 
-    _rel: list[DataFrame] = []
-    out = minhash_candidates_from_stacked(
-        _shared_minhash_stacked(spark, sf_dir), release=_rel)
-    if _rel:
-        with _DEDUP_PERSISTS_LOCK:
-            _DEDUP_PERSISTS.extend(_rel)
-    return out
+    return minhash_candidates_from_stacked(
+        _shared_minhash_stacked(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -1337,16 +1247,9 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from imp_etl_spark.operators.dedup import simhash_near_dup_pairs
 
     docs = read_table(spark, sf_dir, "documents")
-    # the operator persists its banded-signature frame (r12); hand the
-    # handle to the dedup tier's tracker so long-lived drivers release
-    # it with the other staged pair-table artifacts
-    rel: list[DataFrame] = []
-    out = simhash_near_dup_pairs(docs, "text", "doc_id",
-                                 bits=48, max_hamming=6, bands=8,
-                                 hash_fn="md5", release=rel)
-    with _DEDUP_PERSISTS_LOCK:
-        _DEDUP_PERSISTS.extend(rel)
-    return out
+    return simhash_near_dup_pairs(docs, "text", "doc_id",
+                                  bits=48, max_hamming=6, bands=8,
+                                  hash_fn="md5")
 
 
 @register("multimodal_features", """

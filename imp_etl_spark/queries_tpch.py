@@ -25,7 +25,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
+from imp_etl_spark.operators.util import persist
 from imp_etl_spark.queries_sqlfrag import dec_sum as _dec_sum
 from imp_etl_spark.registry import register
 from imp_etl_spark.sources.parquet import read_table
@@ -611,11 +613,12 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= _ts("1996-01-01"))
         & (F.col("l_shipdate") < _ts("1996-04-01")))
-    revenue = (
+    # tiny (one row per supplier); serves both max and filter
+    revenue = persist(
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(_dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")),
-                      "total_revenue", 6))
-    ).cache()  # tiny (one row per supplier); serves both max and filter
+                      "total_revenue", 6)),
+        StorageLevel.MEMORY_AND_DISK_DESER)
     max_rev = revenue.agg(F.max("total_revenue")).collect()[0][0]
     s = read_table(spark, sf_dir, "supplier")
     return (

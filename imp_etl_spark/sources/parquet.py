@@ -44,14 +44,18 @@ _EVENTS_SCHEMA_CACHE_CAP = 8
 
 def _events_schema_key(path: str) -> tuple | None:
     """Cache key: abspath + top mtime + leaf-file inventory (count and
-    max leaf mtime for directory tables). None = unstattable (no
-    caching)."""
+    max leaf mtime for directory tables). None = no caching: the path
+    is unstattable, or it is a partitioned layout, whose leaves sit in
+    subdirectories where a file added to an existing partition changes
+    neither the top mtime nor the top-level inventory."""
     try:
         apath = os.path.abspath(path)
         top = os.path.getmtime(apath)
         if os.path.isdir(apath):
-            leaves = [e for e in os.scandir(apath)
-                      if e.name.endswith(".parquet")]
+            entries = list(os.scandir(apath))
+            if any(e.is_dir() for e in entries):
+                return None
+            leaves = [e for e in entries if e.name.endswith(".parquet")]
             inv = (len(leaves),
                    max((e.stat().st_mtime for e in leaves), default=0.0))
         else:

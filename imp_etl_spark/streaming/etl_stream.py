@@ -34,25 +34,9 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from imp_etl_spark.operators.util import release_query_caches
 from imp_etl_spark.plans.pipeline import build_pipeline
 from imp_etl_spark.plans.upsert import merge_upsert
-
-
-def _release_dedup_caches_hook() -> int:
-    """Default ``on_epoch_end``: the same between-epoch cache hygiene
-    the controller wires in (plans/control.py _release_query_caches) —
-    unpersist the dedup tier's tracked candidate/verified-pair frames
-    so a long-lived driver that interleaves dedup queries with
-    streaming epochs stays bounded WITHOUT having to run under the
-    controller (VERDICT r7 item 4: direct callers of the public API
-    previously had to opt in). Cheap no-op (returns 0) when no dedup
-    query ran since the last release. Late import: queries_llm pulls
-    in the full query surface, which streaming callers shouldn't pay
-    for at import time."""
-    from imp_etl_spark.operators.window import release_probe_memo
-    from imp_etl_spark.queries_llm import release_dedup_caches
-
-    return release_dedup_caches() + release_probe_memo()
 
 
 def run_etl_stream(spark: SparkSession, queue_stream: DataFrame,
@@ -67,7 +51,7 @@ def run_etl_stream(spark: SparkSession, queue_stream: DataFrame,
                    processing_time: str | None = None,
                    epoch_summaries: list[dict[str, Any]] | None = None,
                    on_epoch_end: Callable[[], Any] | None =
-                   _release_dedup_caches_hook,
+                   release_query_caches,
                    ) -> StreamingQuery:
     """Start the incremental ETL query over a streaming work queue.
 
@@ -77,11 +61,11 @@ def run_etl_stream(spark: SparkSession, queue_stream: DataFrame,
     ``epoch_summaries``, if given, collects one reference-shaped summary
     dict per epoch (driver-side list — test/observability hook).
     ``on_epoch_end`` runs driver-side after each epoch commits; its
-    failure must not fail the epoch. It DEFAULTS to the between-epoch
-    cache-release hook (``_release_dedup_caches_hook``, the same
-    hygiene the controller wires in via plans/control.py), so direct
-    callers get the bounded dedup-cache lifecycle without opting in;
-    pass ``None`` to disable, or your own callable to replace it.
+    failure must not fail the epoch. It DEFAULTS to
+    ``operators.util.release_query_caches`` (the same between-epoch
+    hygiene the controller wires in), so direct callers get the bounded
+    query-cache lifecycle without opting in; pass ``None`` to disable,
+    or your own callable to replace it.
     """
     vkey = voucher_key or ["voucher_id", "reference_no"]
     tkey = transaction_key or ["voucher_details_id", "reference_no"]

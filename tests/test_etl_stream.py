@@ -265,17 +265,18 @@ def test_incremental_view_adopts_existing_bucket_count(spark, tmp_path):
 def test_direct_stream_run_releases_dedup_caches_by_default(
         spark, tmp_path):
     """VERDICT r7 item 4: ``run_etl_stream`` called DIRECTLY (no
-    controller) must release the dedup tier's tracked persists after
-    each epoch, because ``on_epoch_end`` now defaults to the release
-    hook instead of None. Seed the tracker with a genuine tracked
-    persist (what a dedup query leaves behind), run one epoch, and the
-    tracker must come back empty with the frame unpersisted."""
-    from imp_etl_spark import queries_llm
+    controller) must release the query tier's tracked persists after
+    each epoch, because ``on_epoch_end`` defaults to
+    ``release_query_caches`` instead of None. Seed the owner with a
+    genuine tracked persist (what a dedup query leaves behind), run one
+    epoch, and the owner must come back empty with the frame
+    unpersisted."""
+    from imp_etl_spark.operators import util
 
-    seeded = queries_llm._track_persist(
-        spark.range(8).withColumnRenamed("id", "id_a"))
+    util.release_query_caches(blocking=True)
+    seeded = util.persist(spark.range(8).withColumnRenamed("id", "id_a"))
     seeded.count()  # materialize the cache entry
-    assert len(queries_llm._DEDUP_PERSISTS) == 1
+    assert len(util._QUERY_PERSISTS) == 1
     assert seeded.storageLevel.useMemory
 
     queue = _queue_frames(spark).limit(50)
@@ -289,5 +290,5 @@ def test_direct_stream_run_releases_dedup_caches_by_default(
                        str(tmp_path / "ckpt"))
     q.awaitTermination(180)
 
-    assert queries_llm._DEDUP_PERSISTS == []
+    assert util._QUERY_PERSISTS == []
     assert not seeded.storageLevel.useMemory  # actually unpersisted

@@ -197,16 +197,22 @@ def _read_sse_events(sock_file, want: int, timeout: float = 30):
     return events
 
 
-def test_sse_stream_tail_and_clear(server):
+def _sse_connect(server):
+    """Open ``GET /api/logs/stream`` on a raw socket; returns the socket
+    and a reader positioned after the response headers."""
     import urllib.parse
     u = urllib.parse.urlparse(server.address)
     sock = socket.create_connection((u.hostname, u.port), timeout=30)
     sock.sendall(b"GET /api/logs/stream HTTP/1.1\r\n"
                  b"Host: x\r\nAccept: text/event-stream\r\n\r\n")
     f = sock.makefile("rb")
-    # skip response headers
     while f.readline().strip():
         pass
+    return sock, f
+
+
+def test_sse_stream_tail_and_clear(server):
+    sock, f = _sse_connect(server)
     events = _read_sse_events(f, 1)
     assert events and events[0][0] == "connected"
     with open(server.log_path, "a") as lf:
@@ -225,6 +231,27 @@ def test_sse_stream_tail_and_clear(server):
     events = _read_sse_events(f, 2)
     assert [e for e, _ in events] == ["clear", "log"]
     assert events[1][1]["message"] == "after clear"
+    sock.close()
+
+
+def test_sse_clear_then_regrow_past_offset(server):
+    """A clear followed at once by more bytes than the tail's old offset
+    (the file regrows within one poll, so its size never shrinks under
+    the tail) still streams ``clear`` and then every new line."""
+    sock, f = _sse_connect(server)
+    assert _read_sse_events(f, 1)[0][0] == "connected"
+    with open(server.log_path, "a") as lf:
+        lf.write("[2024-01-01T00:00:00] before\n")
+    assert [e for e, _ in _read_sse_events(f, 1)] == ["log"]
+    code, _ = _call(server.address, "DELETE", "/api/logs")
+    assert code == 200
+    with open(server.log_path, "a") as lf:
+        for i in range(3):
+            lf.write(f"[2024-01-01T00:00:0{i}] regrown {i} padding\n")
+    events = _read_sse_events(f, 4)
+    assert [e for e, _ in events] == ["clear", "log", "log", "log"]
+    assert [p["message"] for _, p in events[1:]] == [
+        f"regrown {i} padding" for i in range(3)]
     sock.close()
 
 

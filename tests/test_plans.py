@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from imp_etl_spark.operators.util import release_query_caches
 from imp_etl_spark.queries import REGISTRY
 from tests.conftest import SF_DIR
 
@@ -20,7 +21,7 @@ from contextlib import contextmanager
 def _force_distributed(spark):
     """Pin the skew-safe DISTRIBUTED machinery shape (r13): provably
     small frames now dispatch to a single-partition sort (value-equal,
-    pinned in test_r13_optimizations), so plan pins that exist to
+    pinned at the end of this file), so plan pins that exist to
     guarantee the at-scale shape force the big path — a corpus-scale
     frame can never take the small path (it is count-proven), so the
     shape under this conf IS the shape at 100 TB."""
@@ -169,24 +170,22 @@ def test_global_index_single_shuffle_no_window(spark):
     from imp_etl_spark.sources.parquet import read_table
 
     o = read_table(spark, SF_DIR, "orders").select("o_orderkey")
-    handle: list = []
-    idx = global_index(o, "o_orderkey", "gidx", num_partitions=8,
-                       release=handle)
+    idx = global_index(o, "o_orderkey", "gidx", num_partitions=8)
     try:
         plan = idx._jdf.queryExecution().executedPlan().toString()
         assert "rangepartitioning" in plan.lower()
         assert "hashpartitioning" not in plan.lower()
         assert "Window" not in plan
     finally:
-        for d in handle:
-            d.unpersist()
+        release_query_caches()
 
 
 def test_window_ops_release_lifecycle(spark):
     with _force_distributed(spark):
-        """global_index/prefix_sum with release=[] leave NO persisted RDD
-        blocks behind once the caller unpersists after its action — the
+        """global_index/prefix_sum leave NO persisted RDD blocks behind
+        once the query-cache owner releases after the action — the
         long-lived-driver contract (VERDICT r4 item 4)."""
+        from imp_etl_spark.operators import util
         from imp_etl_spark.operators.window import global_index, prefix_sum
         from imp_etl_spark.sources.parquet import read_table
 
@@ -194,21 +193,19 @@ def test_window_ops_release_lifecycle(spark):
             return set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
                        .toArray())
 
+        release_query_caches(blocking=True)
         before = persisted_ids()
         o = read_table(spark, SF_DIR, "orders").select("o_orderkey")
-        handle: list = []
-        idx = global_index(o, "o_orderkey", "gidx", num_partitions=8,
-                           release=handle)
+        idx = global_index(o, "o_orderkey", "gidx", num_partitions=8)
         ps = prefix_sum(o, ["o_orderkey"], "o_orderkey", out_col="cum",
-                        num_partitions=8, release=handle)
+                        num_partitions=8)
         assert idx.count() > 0 and ps.count() > 0
         # r13: prefix_sum registers its input persist too (the range
-        # sampling no longer recomputes the child), so the handle holds
+        # sampling no longer recomputes the child), so the owner holds
         # 3 frames; the release contract below is what matters
-        assert len(handle) == 3
+        assert len(util._QUERY_PERSISTS) == 3
         assert persisted_ids() - before  # blocks live until released
-        for d in handle:
-            d.unpersist(blocking=True)
+        release_query_caches(blocking=True)
         assert persisted_ids() - before == set()
 
 
@@ -649,17 +646,14 @@ def test_global_index_window_fallback_matches_projection(spark):
     from imp_etl_spark.sources.parquet import read_table
 
     o = read_table(spark, SF_DIR, "orders").select("o_orderkey")
-    handle: list = []
-    fast = global_index(o, "o_orderkey", "gidx", num_partitions=8,
-                        release=handle)
+    fast = global_index(o, "o_orderkey", "gidx", num_partitions=8)
     slow = global_index(o, "o_orderkey", "gidx", num_partitions=8,
-                        release=handle, use_id_projection=False)
+                        use_id_projection=False)
     try:
         assert (sorted(map(tuple, fast.collect()))
                 == sorted(map(tuple, slow.collect())))
     finally:
-        for d in handle:
-            d.unpersist()
+        release_query_caches()
 
 
 def test_minhash_pairs_plan_reads_index_not_text(spark):
@@ -670,3 +664,52 @@ def test_minhash_pairs_plan_reads_index_not_text(spark):
     assert "minhash_idx_" in plan          # scans the index artifact
     assert "md5" not in plan.lower()       # no signature recompute
     assert "documents.parquet" not in plan # raw text never touched
+
+
+# ---------------------------------------------------------------------------
+# prefix_sum / global_index small-frame dispatch
+# ---------------------------------------------------------------------------
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_prefix_sum_small_path_matches_distributed(spark):
+    from imp_etl_spark.operators.window import prefix_sum
+
+    rows = [("g%d" % (i % 3), i, (i * 7) % 11) for i in range(500)]
+    df = spark.createDataFrame(rows, "g string, k int, v int")
+    conf = "spark.imp_etl.prefixSum.maxSingleSortRows"
+    old = spark.conf.get(conf, None)
+    try:
+        spark.conf.set(conf, "1000000")  # small path
+        small = _rows(prefix_sum(df, ["g", "k"], "v", out_col="cum"))
+        spark.conf.set(conf, "0")        # force the distributed machinery
+        big = _rows(prefix_sum(df, ["g", "k"], "v", out_col="cum"))
+    finally:
+        if old is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, old)
+    assert small == big
+
+
+def test_global_index_unique_order_small_path_matches(spark):
+    from imp_etl_spark.operators.window import global_index
+
+    df = spark.range(0, 700).select(
+        (F.col("id") * 13 % 701).alias("ord"), F.col("id").alias("payload"))
+    conf = "spark.imp_etl.prefixSum.maxSingleSortRows"
+    old = spark.conf.get(conf, None)
+    try:
+        spark.conf.set(conf, "1000000")
+        small = _rows(global_index(df, "ord", "rn", unique_order=True))
+        spark.conf.set(conf, "0")
+        big = _rows(global_index(df, "ord", "rn", unique_order=True))
+        legacy = _rows(global_index(df, "ord", "rn"))
+    finally:
+        if old is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, old)
+    assert small == big == legacy

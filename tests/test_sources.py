@@ -385,3 +385,76 @@ def test_events_declared_schema_read_is_neutral(spark, tmp_path):
     x = sorted(map(tuple, back_inferred.collect()))
     y = sorted(map(tuple, ev.collect()))
     assert x == y
+
+
+def test_events_schema_cache_bounded_and_inventory_keyed(tmp_path, spark):
+    import os
+    import shutil
+    import time
+
+    from imp_etl_spark.sources import parquet as P
+
+    src = os.path.join(SF_DIR, "events.parquet")
+    P._EVENTS_SCHEMA_CACHE.clear()
+    # cap: more distinct keys than the cap never grows the dict past it
+    for i in range(P._EVENTS_SCHEMA_CACHE_CAP + 3):
+        d = tmp_path / ("sf_%d" % i)
+        d.mkdir()
+        shutil.copy(src, d / "events.parquet") if os.path.isfile(src) \
+            else shutil.copytree(src, d / "events.parquet")
+        P.read_table(spark, str(d), "events")
+    assert len(P._EVENTS_SCHEMA_CACHE) <= P._EVENTS_SCHEMA_CACHE_CAP
+
+    # leaf-inventory key: an in-place leaf change (same top-level mtime)
+    # still changes the key for directory tables
+    d = tmp_path / "inv"
+    d.mkdir()
+    tbl = d / "events.parquet"
+    if os.path.isfile(src):
+        tbl.mkdir()
+        shutil.copy(src, tbl / "part-000.parquet")
+    else:
+        shutil.copytree(src, tbl)
+    k1 = P._events_schema_key(str(tbl))
+    time.sleep(0.02)
+    # touch a leaf without touching the directory mtime
+    leaves = [p for p in os.listdir(tbl) if p.endswith(".parquet")]
+    os.utime(tbl / leaves[0])
+    k2 = P._events_schema_key(str(tbl))
+    assert k1 != k2
+
+
+def test_events_schema_not_cached_for_partitioned_layout(tmp_path, spark):
+    """A file added inside an EXISTING partition directory changes
+    neither the table's top-level mtime nor its top-level inventory, so
+    a cached schema would go stale: the new file's column must be
+    readable on the next read_table."""
+    from pyspark.sql.utils import AnalysisException
+
+    from imp_etl_spark.sources import parquet as P
+
+    sf = tmp_path / "sf"
+    part = sf / "events.parquet" / "part=1"
+    rows = [(1, "2024-01-01 00:00:00", "u1", "click", 1.5)]
+    cols = "event_id long, ts string, user_id string, event_type string, " \
+        "value double"
+    ev = spark.createDataFrame(rows, cols).withColumn(
+        "ts", F.col("ts").cast("timestamp"))
+    ev.write.parquet(str(part))          # no props column yet
+    merge = "spark.sql.parquet.mergeSchema"
+    old = spark.conf.get(merge, None)
+    spark.conf.set(merge, "true")
+    try:
+        with pytest.raises(AnalysisException):
+            read_table(spark, str(sf), "events")   # props missing
+        ev.withColumn("event_id", F.lit(2).cast("long")).withColumn(
+            "props", F.lit("{}")).write.mode("append").parquet(str(part))
+        got = read_table(spark, str(sf), "events")
+        assert sorted((r["event_id"], r["props"]) for r in got.collect()) \
+            == [(1, None), (2, "{}")]
+    finally:
+        if old is None:
+            spark.conf.unset(merge)
+        else:
+            spark.conf.set(merge, old)
+    assert P._events_schema_key(str(sf / "events.parquet")) is None

@@ -154,7 +154,11 @@ def test_persist_if_big_gates_on_footer_bound(spark, tmp_path):
     """persist_if_big: a provably tiny parquet source keeps the
     unpersisted plan; a big (or unprovable) source persists — and the
     threshold is conf-driven."""
-    from imp_etl_spark.operators.util import persist_if_big
+    from imp_etl_spark.operators import util
+    from imp_etl_spark.operators.util import (
+        persist_if_big,
+        release_query_caches,
+    )
 
     p = str(tmp_path / "tiny.parquet")
     spark.createDataFrame([(i,) for i in range(100)], ["id"]) \
@@ -166,16 +170,16 @@ def test_persist_if_big_gates_on_footer_bound(spark, tmp_path):
     out = persist_if_big(derived, src)
     assert out.storageLevel.useMemory is False
 
-    # force the threshold below the bound: persists + release-tracked
-    rel = []
+    # force the threshold below the bound: persists + owner-tracked
+    release_query_caches()
     spark.conf.set("spark.imp_etl.persist.minSourceRows", "10")
     try:
-        out2 = persist_if_big(derived, src, rel)
+        out2 = persist_if_big(derived, src)
         assert out2.storageLevel.useMemory is True
-        assert rel == [out2]
+        assert util._QUERY_PERSISTS == [out2]
     finally:
         spark.conf.unset("spark.imp_etl.persist.minSourceRows")
-        out2.unpersist()
+        release_query_caches()
 
     # unprovable source (in-memory frame): safe assumption is big
     mem = spark.createDataFrame([(1,)], ["id"])

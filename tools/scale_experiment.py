@@ -224,11 +224,9 @@ def main_25x() -> None:
     build/consume split); the build is its own row. ETL reuses the
     plain-copy build (the MERGE asymptote is rows-per-bucket, which
     plain copies scale correctly)."""
+    from imp_etl_spark.operators.util import release_query_caches
     from imp_etl_spark.queries import REGISTRY
-    from imp_etl_spark.queries_llm import (
-        _shared_minhash_stacked,
-        release_dedup_caches,
-    )
+    from imp_etl_spark.queries_llm import _shared_minhash_stacked
 
     spark = get_spark("scale-experiment-25x")
     spark.sparkContext.setLogLevel("ERROR")
@@ -285,7 +283,7 @@ def main_25x() -> None:
         s1 = time_query(fn, spark, SF_DIR, name)
         s25 = time_query(fn, spark, big, name)
         print(f"| {name} | {s1:.2f} | {s25:.2f} | {s25 / s1:.2f} |")
-        release_dedup_caches(blocking=True)
+        release_query_caches(blocking=True)
     e1, r1 = time_etl(spark, SF_DIR)
     e25, r25 = time_etl(spark, big)
     print(f"| etl_pipeline ({r1} -> {r25} recs) | {e1:.2f} | {e25:.2f} "
