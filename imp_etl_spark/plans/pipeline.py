@@ -6,17 +6,21 @@ row-at-a-time cleanse -> falsy-key validity filter -> transactional bulk
 upsert, with {processed, skipped, warnings} accounting.
 
 Spark shape: instead of N point lookups at 4-way concurrency, each branch
-is *one* broadcast-semi-joined scan; cleanse is Column expressions inside
-whole-stage codegen; validity filtering splits into a kept frame and a
-skipped side-output (the reference's warning lines); last-writer-wins
-dedup prepares unique keys for the MERGE-style sink.
+is *one* broadcast-semi-joined scan; cleanse is one projection of SQL-text
+rules inside whole-stage codegen; validity filtering splits into a kept
+frame and a skipped side-output (the reference's warning lines);
+last-writer-wins dedup prepares unique keys for the MERGE-style sink.
+The J3 warnings (queue refs with no voucher or no transaction rows) are
+one aggregate over the queue refs and both branch points.
 
 Scale notes: the deduped reference-key set is orders of magnitude smaller
 than the entity tables -> broadcast (no shuffle of either fact table).
-The only wide exchange in the whole plan is the per-PK dedup window,
-partitioned by the same key the sink upserts on, so the exchange is
-reused by the sink's own key-partitioned write. Counters ride
-``observe()`` — zero extra passes over the data.
+Each branch's dedup exchanges its rows once, on the sink's own bucket
+expression, so a table-creating write needs no second exchange. A partial
+merge into an existing table adds one more exchange on that same
+expression: the batch and the touched buckets' rows fold together there
+(``upsert.merge_upsert``). The warnings aggregate shuffles only reference
+numbers. Counters ride ``observe()`` — zero extra passes over the data.
 """
 
 from __future__ import annotations
@@ -30,8 +34,9 @@ from pyspark.storagelevel import StorageLevel
 
 from imp_etl_spark.functions import cleanse
 from imp_etl_spark.operators.dedup import latest_per_key
-from imp_etl_spark.operators.join import anti_missing, semi_prune
+from imp_etl_spark.operators.join import semi_prune
 from imp_etl_spark.operators.util import spread_small_scan
+from imp_etl_spark.plans.upsert import _dedup_in_bucket_layout
 
 
 def clean_queue(queue: DataFrame) -> DataFrame:
@@ -51,37 +56,38 @@ def reference_keys(queue: DataFrame) -> DataFrame:
 
 
 def cleanse_voucher(df: DataFrame, compat: bool = True) -> DataFrame:
-    """processVoucherData (etlService.js:118-156) as Column expressions.
+    """processVoucherData (etlService.js:118-156) as one projection of
+    the SQL-text rules (``functions/cleanse.py``).
 
     Rules apply only to columns present in the frame — the reference
     guards each field with existence checks, so a narrow source simply
-    gets fewer rules.
+    gets fewer rules. The rule lists are disjoint, so applying them in
+    one ``withColumns`` equals applying them one by one.
     """
     cols = set(df.columns)
-    out = df
+    rules = {}
     if "sex" in cols:
-        out = out.withColumn("sex", cleanse.enum_domain("sex", ["MALE", "FEMALE"]))
+        rules["sex"] = cleanse.enum_domain("sex", ["MALE", "FEMALE"])
     for f_ in cleanse.VOUCHER_UPPER_FIELDS:
         if f_ in cols:
-            out = out.withColumn(f_, cleanse.upper_trim(f_))
+            rules[f_] = cleanse.upper_trim(f_)
     for f_ in cleanse.VOUCHER_NUMERIC_FIELDS:
         if f_ in cols:
-            out = out.withColumn(f_, cleanse.parse_float(f_, compat=compat))
+            rules[f_] = cleanse.parse_float(f_, compat=compat)
     for f_ in cleanse.VOUCHER_DATE_FIELDS:
         if f_ in cols:
-            out = out.withColumn(f_, cleanse.date_norm_utc(f_))
-    return out
+            rules[f_] = cleanse.date_norm_utc(f_)
+    return df.withColumns(rules)
 
 
 _NUMERIC_DTYPES = {"tinyint", "smallint", "int", "bigint", "float",
                    "double", "decimal"}
 
 
-def _is_numeric_dtype(df: DataFrame, col: str) -> bool:
+def _is_numeric_dtype(dtype: str) -> bool:
     # match the BASE type exactly — a prefix test would classify
     # 'interval day to second' as numeric via startswith('int')
-    dt = dict(df.dtypes).get(col, "")
-    return dt.split("(")[0] in _NUMERIC_DTYPES
+    return dtype.split("(")[0] in _NUMERIC_DTYPES
 
 
 def cleanse_transaction(df: DataFrame, compat: bool = True) -> DataFrame:
@@ -93,24 +99,24 @@ def cleanse_transaction(df: DataFrame, compat: bool = True) -> DataFrame:
     sources keep quirk Q3 ("0" -> 1) — matching what the JS
     ``record[field] ? 1 : 0`` sees from each driver type.
     """
-    cols = set(df.columns)
-    out = df
+    dtypes = dict(df.dtypes)
+    rules = {}
     for f_ in cleanse.TXN_NUMERIC_FIELDS:
-        if f_ in cols:
-            out = out.withColumn(f_, cleanse.parse_float(f_, compat=compat))
-    if "payout" in cols:
-        out = out.withColumn("payout", cleanse.char_flag("payout"))
+        if f_ in dtypes:
+            rules[f_] = cleanse.parse_float(f_, compat=compat)
+    if "payout" in dtypes:
+        rules["payout"] = cleanse.char_flag("payout")
     for f_ in cleanse.TXN_BOOL_FIELDS:
-        if f_ in cols:
-            out = out.withColumn(f_, cleanse.truthy_int(
-                f_, compat=compat, numeric=_is_numeric_dtype(df, f_)))
+        if f_ in dtypes:
+            rules[f_] = cleanse.truthy_int(
+                f_, compat=compat, numeric=_is_numeric_dtype(dtypes[f_]))
     for f_ in cleanse.TXN_DATE_FIELDS:
-        if f_ in cols:
-            out = out.withColumn(f_, cleanse.date_norm_utc(f_))
+        if f_ in dtypes:
+            rules[f_] = cleanse.date_norm_utc(f_)
     for f_ in cleanse.TXN_UPPER_FIELDS:
-        if f_ in cols:
-            out = out.withColumn(f_, cleanse.upper_trim(f_))
-    return out
+        if f_ in dtypes:
+            rules[f_] = cleanse.upper_trim(f_)
+    return df.withColumns(rules)
 
 
 @dataclass
@@ -120,7 +126,6 @@ class BranchResult:
     from observe() in the runner."""
     valid: DataFrame          # cleansed, key-valid, deduped (ready to MERGE)
     skipped: DataFrame        # falsy-key rejects (P4/P5 side-output)
-    missing_refs: DataFrame   # queue refs with no rows in this entity (J3)
     cleansed: DataFrame | None = None  # persisted branch point (unpersist me)
     # observe() metrics (A2/A3): recorded for free during the first action
     # that executes the branch (normally the MERGE write) — zero extra
@@ -168,58 +173,8 @@ class PipelineResult:
     voucher: BranchResult
     transaction: BranchResult
     keys: DataFrame
+    warnings: DataFrame       # J3 lines, one ``warning`` column, no order
     extras: dict = field(default_factory=dict)
-
-
-def _dedup_in_bucket_layout(df: DataFrame, pk: list[str], order_col: str,
-                            n_buckets: int,
-                            files_per_bucket: int = 1) -> DataFrame:
-    """Last-writer-wins dedup fused INTO the sink's bucket layout (r13,
-    VERDICT r12 item 3 — the dedup↔bucket-write double exchange).
-
-    ``latest_per_key`` exchanges the full branch payload on hash(pk)
-    and the bucketed sink then re-exchanges it on hash(bucket) — two
-    wide shuffles of every row to answer one clustering question,
-    because ``__bucket`` IS a pure function of pk. Instead: ONE
-    exchange on the sink's own bucket expression, then a lag-based
-    first-row-of-key filter inside a window PARTITIONED BY that same
-    expression (same clustering — Catalyst inserts no second
-    exchange). Sorting by (pk asc, order desc) makes the first row of
-    each key block the max-``order_col`` row — the same winner
-    ``latest_per_key``'s row_number pick selects (ties within a key
-    share the order value and are arbitrary in both shapes). The sink
-    (``merge_upsert(batch_pre_clustered=True)``) then writes the
-    already-clustered rows without re-partitioning.
-
-    ``files_per_bucket`` keeps the fused shape scale-adaptive: with
-    one partition per bucket, a big batch sorts in only ``n_buckets``
-    tasks (measured at 100x sf0.1: 45.7M rows through 16 tasks left
-    half of local[32] idle). ``files_per_bucket > 1`` sub-splits each
-    bucket by a second key hash — the EXACT expression the sink's
-    wide-write path uses, so the pre-clustered promise still holds and
-    each (bucket, sub) task lands one file, the documented wide-bucket
-    layout. Per-key dedup stays valid because the sub key is a pure
-    function of pk.
-    """
-    from pyspark.sql import Window
-
-    from imp_etl_spark.plans.upsert import _bucket_expr
-
-    bucket = _bucket_expr(pk, n_buckets)
-    parts = [bucket]
-    if files_per_bucket > 1:
-        parts.append(F.pmod(
-            F.xxhash64(*[F.col(k) for k in pk], F.lit("sub")),
-            F.lit(files_per_bucket)))
-    ks = F.struct(*[F.col(k) for k in pk])
-    w = Window.partitionBy(*parts).orderBy(
-        *[F.col(k).asc() for k in pk], F.col(order_col).desc())
-    return (
-        df.repartition(*parts)
-        .withColumn("__first", ~F.lag(ks).over(w).eqNullSafe(ks))
-        .filter(F.col("__first"))
-        .drop("__first")
-    )
 
 
 def _branch(entity: DataFrame, keys: DataFrame, pk: list[str],
@@ -268,20 +223,39 @@ def _branch(entity: DataFrame, keys: DataFrame, pk: list[str],
                        desc=True))
     valid = deduped.observe(obs_valid,
                             F.count(F.lit(1)).alias("processed"))
-    # J3 off the SAME branch point the merge materializes: a key present
-    # in the entity always survives the semi prune, and cleanse never
-    # rewrites reference_no, so keys ∖ cleansed.refs == keys ∖
-    # entity.refs — the runner's warning sample then reads the persisted
-    # blocks instead of re-running the entity scan (which for derived
-    # entities is a whole join). Without the persisted branch point the
-    # equivalence still holds but the cleansed lineage would RECOMPUTE
-    # the CPU-bound cleanse just to list refs — anti-join the raw
-    # entity there instead.
-    missing = anti_missing(keys, cleansed if persist else entity,
-                           "reference_no")
-    return BranchResult(valid=valid, skipped=skipped, missing_refs=missing,
+    return BranchResult(valid=valid, skipped=skipped,
                         cleansed=cleansed if persist else None,
                         obs_cleansed=obs_cleansed, obs_valid=obs_valid)
+
+
+def missing_ref_warnings(queue: DataFrame, voucher: DataFrame,
+                         transaction: DataFrame) -> DataFrame:
+    """J3 (etlService.js:499-510): one ``warning`` row for every
+    ``reference_no`` of ``queue`` with no ``voucher`` rows and one for
+    every one with no ``transaction`` rows, in no defined order.
+
+    One aggregate instead of an anti join per entity: the three ref
+    columns are unioned with a source flag each and grouped by ref, so
+    the sample costs one shuffle of reference numbers."""
+    def flagged(df: DataFrame, q: int, v: int, t: int) -> DataFrame:
+        return df.select("reference_no", F.lit(q).alias("q"),
+                         F.lit(v).alias("v"), F.lit(t).alias("t"))
+
+    def line(flag: str, entity: str) -> str:
+        return (f"CASE WHEN q = 1 AND {flag} = 0 THEN concat("
+                f"'No {entity} data found for reference: ', reference_no) "
+                "END")
+
+    return (
+        flagged(queue, 1, 0, 0)
+        .unionByName(flagged(voucher, 0, 1, 0))
+        .unionByName(flagged(transaction, 0, 0, 1))
+        .groupBy("reference_no")
+        .agg(F.max("q").alias("q"), F.max("v").alias("v"),
+             F.max("t").alias("t"))
+        .selectExpr(f"explode(filter(array({line('v', 'voucher')}, "
+                    f"{line('t', 'transaction')}), w -> w IS NOT NULL)) "
+                    "AS warning"))
 
 
 def build_pipeline(queue: DataFrame, voucher: DataFrame,
@@ -313,4 +287,14 @@ def build_pipeline(queue: DataFrame, voucher: DataFrame,
                  transaction_key or ["voucher_details_id", "reference_no"],
                  cleanse_transaction, order_col, compat, persist,
                  sink_buckets, sink_files_per_bucket)
-    return PipelineResult(voucher=vb, transaction=tb, keys=keys)
+    # a key present in an entity always survives the semi prune and
+    # cleanse never rewrites reference_no, so the persisted branch
+    # points hold the same refs as the entities — the warnings then read
+    # cached blocks instead of re-running the entity scans. Without the
+    # branch points the cleansed lineage would recompute the cleanse just
+    # to list refs: read the raw entities there instead.
+    warnings = missing_ref_warnings(
+        clean_queue(queue), vb.cleansed if persist else voucher,
+        tb.cleansed if persist else transaction)
+    return PipelineResult(voucher=vb, transaction=tb, keys=keys,
+                          warnings=warnings)

@@ -93,7 +93,7 @@ def run_etl(spark: SparkSession, queue: DataFrame, voucher: DataFrame,
 
     # fused dedup↔bucket layout (r13): the branches exchange ONCE on
     # the manifest sink's own bucket expression and the sink writes
-    # them pre-clustered — see plans.pipeline._dedup_in_bucket_layout.
+    # them pre-clustered — see plans.upsert._dedup_in_bucket_layout.
     # The JDBC sink ignores clustering (any layout is a valid batch),
     # so one fused shape serves both sinks. files_per_bucket keeps the
     # fused dedup sort scale-adaptive: 'auto' sub-splits each bucket so
@@ -122,21 +122,13 @@ def run_etl(spark: SparkSession, queue: DataFrame, voucher: DataFrame,
     # etlService.js:545-556).
     from concurrent.futures import ThreadPoolExecutor
 
-    # The warning sample (J3 anti joins over the persisted branch
-    # points) and the high-watermark scan are independent of the sink
-    # writes — submit them into the same pool so their jobs overlap the
-    # merges instead of serializing after them (the persisted cleansed
-    # blocks are computed once whichever consumer gets there first;
+    # The warning sample (one aggregate over the queue refs and the
+    # persisted branch points, plans.pipeline.missing_ref_warnings) and
+    # the high-watermark scan are independent of the sink writes —
+    # submit them into the same pool so their jobs overlap the merges
+    # instead of serializing after them (the persisted cleansed blocks
+    # are computed once whichever consumer gets there first;
     # BlockManager serializes per-block computation).
-    warnings = (
-        result.voucher.missing_refs.withColumn(
-            "warning", F.concat(F.lit("No voucher data found for reference: "),
-                                F.col("reference_no")))
-        .unionByName(result.transaction.missing_refs.withColumn(
-            "warning", F.concat(
-                F.lit("No transaction data found for reference: "),
-                F.col("reference_no"))))
-    )
     retry_warnings: list[str] = []
     v_keys = voucher_key or ["voucher_id", "reference_no"]
     t_keys = transaction_key or ["voucher_details_id", "reference_no"]
@@ -176,9 +168,10 @@ def run_etl(spark: SparkSession, queue: DataFrame, voucher: DataFrame,
             retry_with_delay, t_write,
             "transaction records", retry_warnings,
             limit=retry_limit, delay_s=retry_delay_s, sleep=_sleep)
-        # sample 5, as the reference logs slice(0,5) (etlService.js:499-510)
-        fw = pool.submit(
-            lambda: [r["warning"] for r in warnings.limit(5).collect()])
+        # sample 5, as the reference logs slice(0,5) (etlService.js:499-510);
+        # neither picks a defined 5
+        fw = pool.submit(lambda: [
+            r["warning"] for r in result.warnings.limit(5).collect()])
         fwm = pool.submit(
             lambda: queue.agg(F.max("log_id").alias("wm")).collect()[0])
         _, _, v_ok = fv.result()

@@ -50,6 +50,46 @@ def test_parse_float_compat(spark, value, expected):
     assert _one(spark, cleanse.parse_float("x", compat=True), value) == expected
 
 
+# Rows where a slip in the SQL-text rules' literal escaping would show: a
+# regex backslash class (\s, \d, \.) lost to string unescaping, or the
+# quoted 'T' of the ISO-offset format. Expected values are JS parity
+# (module docstring): parseFloat prefix-parses after leading whitespace.
+@pytest.mark.parametrize("value,expected", [
+    ("  3.75", 3.75),
+    ("\t12", 12.0),
+    (".5e1", 5.0),
+    ("+.5", 0.5),
+    ("1e3", 1000.0),
+    ("-7.25", -7.25),
+    ("1,000", 1.0),        # parseFloat stops at the comma
+    ("12abc", 12.0),
+])
+def test_parse_float_escape_sensitive_rows(spark, value, expected):
+    assert _one(spark, cleanse.parse_float("x", compat=True), value) == expected
+
+
+@pytest.mark.parametrize("value,expected", [
+    ("2024-03-05T01:30:00+08:00", "2024-03-04"),   # Q4 UTC shift
+    ("2024/03/05", "2024-03-05"),
+])
+def test_date_norm_utc_escape_sensitive_rows(spark, value, expected):
+    assert _one(spark, cleanse.date_norm_utc("x"), value) == expected
+
+
+def test_sql_literals_round_trip(spark):
+    """The SQL-text rules' literals reach the engine verbatim: the ISO
+    offset format with its quoted 'T' (whose parse arm the default
+    parse shadows for every value tried, so no date row can show a slip
+    there) and the parseFloat regex with its backslash classes."""
+    texts = [cleanse._ISO_OFFSET_FMT, "a'b\\c", cleanse._PARSEFLOAT_RE,
+             cleanse._LEADING_WS_RE]
+    row = spark.range(1).select(
+        F.expr(cleanse._lit(texts[0])), F.expr(cleanse._lit(texts[1])),
+        F.expr(cleanse._raw(texts[2])), F.expr(cleanse._raw(texts[3]))
+    ).collect()[0]
+    assert list(row) == texts
+
+
 def test_parse_float_clean_keeps_zero(spark):
     assert _one(spark, cleanse.parse_float("x", compat=False), "0.00") == 0.0
     assert _one(spark, cleanse.parse_float("x", compat=False), "12abc") is None

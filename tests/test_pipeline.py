@@ -44,8 +44,9 @@ def test_pipeline_branches(spark):
     assert v3["birthday"] is None
 
     # missing refs: REF-GONE has no voucher and no txn rows
-    assert {r["reference_no"] for r in res.voucher.missing_refs.collect()} == {"REF-GONE"}
-    assert {r["reference_no"] for r in res.transaction.missing_refs.collect()} == {"REF-GONE"}
+    assert sorted(r["warning"] for r in res.warnings.collect()) == [
+        "No transaction data found for reference: REF-GONE",
+        "No voucher data found for reference: REF-GONE"]
 
     t = {r["voucher_details_id"]: r for r in res.transaction.valid.collect()}
     assert t["T1"]["ishold"] == 1            # Q3: '0' truthy
@@ -807,7 +808,7 @@ def test_run_etl_jdbc_sink_end_to_end(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Fused dedup↔bucket layout (plans/pipeline._dedup_in_bucket_layout)
+# Fused dedup↔bucket layout (plans/upsert._dedup_in_bucket_layout)
 # ---------------------------------------------------------------------------
 
 def _rows(df):
@@ -822,7 +823,7 @@ def _dup_frame(spark):
 
 def test_fused_dedup_matches_latest_per_key(spark):
     from imp_etl_spark.operators.dedup import latest_per_key
-    from imp_etl_spark.plans.pipeline import _dedup_in_bucket_layout
+    from imp_etl_spark.plans.upsert import _dedup_in_bucket_layout
 
     df = _dup_frame(spark)
     fused = _dedup_in_bucket_layout(
@@ -836,7 +837,7 @@ def test_fused_dedup_single_exchange(spark):
     """The whole point of the fusion: ONE exchange covers dedup + the
     sink's bucket clustering (the r12 plan paid hash(pk) AND
     hash(bucket))."""
-    from imp_etl_spark.plans.pipeline import _dedup_in_bucket_layout
+    from imp_etl_spark.plans.upsert import _dedup_in_bucket_layout
 
     df = _dup_frame(spark)
     plan = _dedup_in_bucket_layout(
@@ -850,7 +851,7 @@ def test_pre_clustered_merge_equals_replanned_merge(spark, tmp_path):
     commits the exact table the unfused path commits, with the same
     one-file-per-bucket layout."""
     from imp_etl_spark.operators.dedup import latest_per_key
-    from imp_etl_spark.plans.pipeline import _dedup_in_bucket_layout
+    from imp_etl_spark.plans.upsert import _dedup_in_bucket_layout
     from imp_etl_spark.plans.upsert import merge_upsert, read_target
 
     df = _dup_frame(spark)
@@ -878,7 +879,7 @@ def test_fused_dedup_sub_split_matches_and_single_exchange(spark, tmp_path):
     same rows as latest_per_key, still ONE exchange, and the
     pre-clustered wide write commits the identical table."""
     from imp_etl_spark.operators.dedup import latest_per_key
-    from imp_etl_spark.plans.pipeline import _dedup_in_bucket_layout
+    from imp_etl_spark.plans.upsert import _dedup_in_bucket_layout
     from imp_etl_spark.plans.upsert import merge_upsert, read_target
 
     df = _dup_frame(spark)
@@ -927,3 +928,126 @@ def test_run_etl_plan_has_single_branch_exchange(spark, tmp_path):
     # shuffles).
     assert plan.count("REPARTITION_BY_COL") == 1, plan
     assert "Exchange hashpartitioning(voucher_id" not in plan, plan
+
+
+# ---------------------------------------------------------------------------
+# Fire cost: jobs and shuffles of a cron fire into an existing table
+# ---------------------------------------------------------------------------
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+class _SqlStore:
+    """The SQL status store read as JSON, one JVM call per object (the
+    way perfbench/tracing.py reads it). It retains only the newest
+    executions, so executions are found by id, not by list offset."""
+
+    def __init__(self, spark):
+        jvm = spark.sparkContext._jvm
+        self._bus = spark.sparkContext._jsc.sc().listenerBus()
+        self._store = spark._jsparkSession.sharedState().statusStore()
+        self._mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+        self._mapper.registerModule(
+            jvm.com.fasterxml.jackson.module.scala.DefaultScalaModule())
+
+    def _json(self, obj):
+        import json
+
+        return json.loads(self._mapper.writeValueAsString(obj))
+
+    def _newest(self, k: int) -> list[dict]:
+        self._bus.waitUntilEmpty()
+        n = self._store.executionsCount()
+        if n == 0:
+            return []
+        return self._json(self._store.executionsList(max(0, n - k),
+                                                     min(n, k)))
+
+    def last_id(self) -> int:
+        newest = self._newest(1)
+        return newest[-1]["executionId"] if newest else -1
+
+    def payload_exchanges_per_write(self, after_id: int, under: str):
+        """For every SQL execution after ``after_id`` that writes below
+        ``under``: its ``Exchange hashpartitioning`` nodes that shuffle
+        row payloads. The queue-key dedup under the semi join's
+        broadcast shuffles reference numbers only and is left out."""
+        out = []
+        for e in self._newest(200):
+            if e["executionId"] <= after_id:
+                continue
+            nodes = self._json(
+                self._store.planGraph(e["executionId"]).allNodes())
+            if any("InsertIntoHadoopFsRelationCommand" in nd["name"]
+                   and under in nd["desc"] for nd in nodes):
+                out.append([
+                    nd["desc"] for nd in nodes
+                    if nd["desc"].startswith("Exchange hashpartitioning")
+                    and not nd["desc"].startswith(
+                        "Exchange hashpartitioning(reference_no#")])
+        return out
+
+
+def test_partial_merge_fire_cost(spark, tmp_path):
+    """A cron fire into an existing table (the partial-merge path) stays
+    within its measured job count, and each branch's write shuffles its
+    rows exactly twice: the batch's dedup exchange and the merge's fold
+    of batch and touched-bucket rows, both on the bucket expression.
+    The job bound is the count measured on this fixture."""
+    queue, voucher, txn = make_frames(spark)
+    v_path, t_path = str(tmp_path / "v"), str(tmp_path / "t")
+    run_etl(spark, queue, voucher, txn, v_path, t_path)      # create
+    store = _SqlStore(spark)
+    after_id = store.last_id()
+    job0 = _next_job_id(spark)
+    summary = run_etl(spark, queue, voucher, txn, v_path, t_path)
+    jobs = _next_job_id(spark) - job0
+    assert summary["processedVoucherCount"] == 3
+    assert summary["processedTransactionCount"] == 3
+    assert jobs <= 22, jobs
+
+    writes = store.payload_exchanges_per_write(after_id, str(tmp_path))
+    assert len(writes) == 2, writes
+    for exchanges in writes:
+        assert len(exchanges) == 2, exchanges
+        assert all("xxhash64" in x for x in exchanges), exchanges
+
+
+def test_lookup_reads_recorded_schema(spark, tmp_path):
+    """A point lookup reads its bucket dir with the manifest's recorded
+    schema, so it runs no footer-inference job: at most three Spark
+    jobs, and the lookup still finds the row."""
+    from imp_etl_spark.plans.upsert import lookup
+
+    path = str(tmp_path / "tbl")
+    merge_upsert(spark, path, spark.createDataFrame(
+        [(k, f"R{k % 3}", f"p{k}") for k in range(40)],
+        "k int, ref string, p string"), ["k", "ref"])
+    for _ in range(2):  # the first call also pays first-use codegen
+        job0 = _next_job_id(spark)
+        rows = lookup(spark, path, {"k": 7, "ref": "R1"}).collect()
+        assert _next_job_id(spark) - job0 <= 3
+        assert [r["p"] for r in rows] == ["p7"]
+
+
+def test_read_target_without_recorded_schema(spark, tmp_path):
+    """A manifest without a recorded schema (written before manifests
+    carried one) still reads: the schema is inferred from the files."""
+    import json
+
+    from imp_etl_spark.plans.upsert import _MANIFEST_FMT, _latest_version
+
+    path = str(tmp_path / "tbl")
+    merge_upsert(spark, path, spark.createDataFrame(
+        [(k, f"p{k}") for k in range(20)], "k int, p string"), ["k"])
+    man_path = os.path.join(path, _MANIFEST_FMT.format(
+        _latest_version(path)))
+    with open(man_path) as f:
+        man = json.load(f)
+    del man["schema"]
+    with open(man_path, "w") as f:
+        json.dump(man, f)
+    df = read_target(spark, path)
+    assert dict(df.dtypes) == {"k": "int", "p": "string"}
+    assert df.count() == 20
