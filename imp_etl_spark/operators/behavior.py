@@ -40,6 +40,10 @@ from pyspark.sql import functions as F
 
 from imp_etl_spark.operators.temporal import asof_join
 
+#: Funnel stage-frame persist crossover (r13): below this many source
+#: events the stage pyramid recomputes cheaper than N persists cost.
+FUNNEL_PERSIST_MIN_SOURCE_ROWS = 16_384
+
 
 def funnel_stage_users(
     events: DataFrame,
@@ -122,17 +126,15 @@ def funnel_counts(
     costs to avoid re-running the stage pyramid, a trade that loses on
     tiny fixtures (the measured ~+0.3 s persist-overhead class), so it
     engages only when ``events``' footer bound clears
-    ``spark.imp_etl.persist.minFunnelSourceRows`` — or cannot be
-    proven, the safe big assumption.
+    :data:`FUNNEL_PERSIST_MIN_SOURCE_ROWS` — or cannot be proven, the
+    safe big assumption.
     """
     from imp_etl_spark.operators.util import persist_if_big
 
     frames = funnel_stage_users(
         events, stages, user_col, ts_col, type_col, within)
-    frames = [persist_if_big(
-        f, events,
-        min_rows_conf="spark.imp_etl.persist.minFunnelSourceRows",
-        default_min_rows=16384) for f in frames]
+    frames = [persist_if_big(f, events, FUNNEL_PERSIST_MIN_SOURCE_ROWS)
+              for f in frames]
     rows = None
     for i, (stage, frame) in enumerate(zip(stages, frames)):
         one = frame.agg(F.count(F.lit(1)).alias("users")).select(

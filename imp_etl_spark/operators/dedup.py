@@ -40,6 +40,19 @@ from imp_etl_spark.functions.hashing import (
 from imp_etl_spark.functions.text import tokens
 from imp_etl_spark.operators.util import spread_small_scan
 
+#: Persist crossover for the (band, sig) stats window (r13). A/B at
+#: sf0.1 (20k signature rows): the persist WON inside dedup_pipeline
+#: (0.63 vs 0.68 s — the cands persist above it absorbs most reuse) but
+#: LOST standalone minhash_lsh_pairs 1.08 vs 0.69 s — breaking the
+#: legs' pipelined exchange reuse costs more than 3 window sorts over a
+#: tiny cached frame. Set a decade above the fixture: the persist is
+#: for genuinely large or unprovable signature tables, where one window
+#: sort of the index dominates.
+BAND_STATS_PERSIST_MIN_SOURCE_ROWS = 1_048_576
+#: Signature rows per file of the MinHash index write (r12): bounds
+#: each writer task; tiny corpora land one file per band.
+MINHASH_INDEX_ROWS_PER_FILE = 4_000_000
+
 
 def latest_per_key(df: DataFrame, key: Sequence[str],
                    order_by: Sequence[Column | str],
@@ -131,18 +144,8 @@ def _capped_band_pairs(stacked: DataFrame, id_col: str, max_bucket: int,
     if source is not None:
         from imp_etl_spark.operators.util import persist_if_big
 
-        stats = persist_if_big(
-            stats, source,
-            min_rows_conf="spark.imp_etl.persist.minBandStatsSourceRows",
-            # A/B at sf0.1 (20k signature rows): the persist WON inside
-            # dedup_pipeline (0.63 vs 0.68 — the cands persist above it
-            # absorbs most reuse) but LOST standalone minhash_lsh_pairs
-            # 1.08 vs 0.69 — breaking the legs' pipelined exchange
-            # reuse costs more than 3 window sorts over a tiny cached
-            # frame. Crossover set a decade above the fixture: the
-            # persist is for genuinely large or unprovable signature
-            # tables, where one window sort of the index dominates.
-            default_min_rows=1_048_576)
+        stats = persist_if_big(stats, source,
+                               BAND_STATS_PERSIST_MIN_SOURCE_ROWS)
     if observation is not None:
         stats = stats.observe(
             observation,
@@ -295,29 +298,25 @@ def _coalesce_band_write(stacked: DataFrame, source: DataFrame,
     VERDICT r11 item 5: the index write was producing scan-tasks x
     bands tiny files — measured 108 files for 928 KB at sf0.1, ~8.6 KB
     each, re-opened by every consumer scan). One explicit exchange on
-    (band, sub) lays each band out as ``ceil(docs / rowsPerFile)``
-    files: tiny corpora land one file per band, while at 100 TB the
-    file count grows with the footer-proved row bound so no writer
-    task exceeds ~rowsPerFile signature rows. The shuffle moves only
-    the signature table (~num_hashes ints per doc — orders of
-    magnitude below the corpus), the standard price of a
-    hash-distributed write layout. An unprovable input (no parquet
-    footer bound) keeps the old spread write: blind coalescing there
-    could funnel an arbitrarily large build through ``bands`` tasks.
+    (band, sub) lays each band out as
+    ``ceil(docs / MINHASH_INDEX_ROWS_PER_FILE)`` files: tiny corpora
+    land one file per band, while at 100 TB the file count grows with
+    the footer-proved row bound so no writer task exceeds that many
+    signature rows. The shuffle moves only the signature table
+    (~num_hashes ints per doc — orders of magnitude below the corpus),
+    the standard price of a hash-distributed write layout. An
+    unprovable input (no parquet footer bound) keeps the old spread
+    write: blind coalescing there could funnel an arbitrarily large
+    build through ``bands`` tasks.
     """
     import math
 
-    spark = stacked.sparkSession
-    rows_per_file = int(float(spark.conf.get(
-        "spark.imp_etl.minhashIndex.rowsPerFile", "4000000")))
-    if rows_per_file <= 0:
-        return stacked
     from imp_etl_spark.operators.window import _footer_row_bound
 
     ub = _footer_row_bound(source)
     if ub is None:
         return stacked
-    fpb = max(1, math.ceil(ub / rows_per_file))
+    fpb = max(1, math.ceil(ub / MINHASH_INDEX_ROWS_PER_FILE))
     sub = F.pmod(F.xxhash64(F.col(id_col)), F.lit(fpb))
     return stacked.repartition(bands * fpb, F.col("band"), sub)
 
@@ -590,9 +589,12 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
         # broadcast above. Gated on the corpus's footer row bound —
         # a provably tiny corpus keeps the fused two-evaluation plan
         # (see persist_if_big).
-        from imp_etl_spark.operators.util import persist_if_big
+        from imp_etl_spark.operators.util import (
+            PERSIST_MIN_SOURCE_ROWS,
+            persist_if_big,
+        )
 
-        gramsets = persist_if_big(gramsets, df)
+        gramsets = persist_if_big(gramsets, df, PERSIST_MIN_SOURCE_ROWS)
         inter = F.size(F.array_intersect("gs_a", "gs_b"))
         return (
             candidates

@@ -43,6 +43,25 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: EWMA's hot-share cutoff for the rank dispatch (r9): its seq-rank tax
+#: is steeper than the lag class's (group_rank's prefix_sum persists and
+#: re-joins the whole frame: measured 2.8x at 100x uniform vs seq_lag's
+#: ~2x) and its measured crossover sits at near-total shares on
+#: test-scale keys — parity at a 96%-share 2.4M-row key, seq 0.74x ahead
+#: at a 99%-share 10M-row key (SCALING.md r9) — moving lower as the hot
+#: key's ABSOLUTE size grows (the window rank is a one-task sort, linear
+#: in the key). High threshold = the bounded ~2.8x insurance only
+#: engages where the unbounded straggler is plausible.
+EWMA_THRESHOLD = 0.9
+#: Largest chunk-summary frame whose carry chain runs on the driver
+#: (r11, VERDICT item 1): a LIMIT cap+1 probe collects at most this
+#: many rows; more means the distributed Arrow chain.
+EWMA_DRIVER_CHAIN_ROWS = 100_000
+#: ewma_scan's driver chain needs the chunked frame persisted (both
+#: jobs must see one evaluation); inputs footer-proved above this many
+#: rows take the distributed chain instead of a cache that large.
+EWMA_PERSIST_ROWS = 10_000_000
+
 
 def _chunk_size(alpha: float) -> int:
     """Largest chunk whose rescale factor beta^-(C-1) stays safely
@@ -63,27 +82,16 @@ def _chunk_frame(df: DataFrame, keys: list[str], order_cols: list[str],
     dispatch), chunk/offset assignment, and the rescaled within-chunk
     running state ``__local`` — identical float ops in both rank modes.
 
-    Dispatch: EWMA has its own threshold (conf
-    ``spark.imp_etl.ewmaScan.threshold``, default 0.9): its seq-rank
-    tax is steeper than the lag class's (group_rank's prefix_sum
-    persists and re-joins the whole frame: measured 2.8x at 100x
-    uniform vs seq_lag's ~2x) and its measured crossover sits at
-    near-total shares on test-scale keys — parity at a 96%-share
-    2.4M-row key, seq 0.74x ahead at a 99%-share 10M-row key
-    (SCALING.md r9) — moving lower as the hot key's ABSOLUTE size
-    grows (the window rank is a one-task sort, linear in the key).
-    High threshold = the bounded ~2.8x insurance only engages where
-    the unbounded straggler is plausible.
+    Dispatch: the lag class's resolver at EWMA's own hot-share cutoff,
+    :data:`EWMA_THRESHOLD`.
     """
     from imp_etl_spark.operators.window import (
         group_rank,
         resolve_lag_mode,
     )
 
-    thr = float(df.sparkSession.conf.get(
-        "spark.imp_etl.ewmaScan.threshold", "0.9"))
     mode = resolve_lag_mode(df.select(*keys), keys, mode=mode,
-                            threshold=thr)
+                            threshold=EWMA_THRESHOLD)
     if mode == "window":
         w = Window.partitionBy(*keys).orderBy(
             *[F.col(c).asc() for c in order_cols])
@@ -140,8 +148,8 @@ def ewma_scan(df: DataFrame, keys: Sequence[str],
     ``"window"`` (plain ``row_number`` per key: one shuffle, but a hot
     key's rank sort runs in one task) or ``"seq"`` (``group_rank``'s
     distributed prefix-sum rank: hot-key-immune, two-phase tax); None
-    resolves via the same probe/conf dispatch as the lag class
-    (``spark.imp_etl.lagDispatch.*``). EVERYTHING after the rank is
+    resolves via the same probe dispatch as the lag class
+    (``window.resolve_lag_mode``). EVERYTHING after the rank is
     shared code — identical float operations in identical order — so
     the two modes are bit-equal (pinned by tests), and both match the
     naive sequential recursion to ~1e-12 relative (also pinned; exact
@@ -199,10 +207,9 @@ def ewma_scan(df: DataFrame, keys: Sequence[str],
     # chain replays chain()'s float op sequence literally (same
     # CPython/libm mult-add-pow on the same doubles), so the two
     # paths are bit-equal (pinned in tests/test_recurrence.py).
-    cap = int(float(df.sparkSession.conf.get(
-        "spark.imp_etl.ewmaScan.driverChainRows", "100000")))
+    cap = EWMA_DRIVER_CHAIN_ROWS
     carries = None
-    if c_size >= 64 and cap > 0:
+    if c_size >= 64:
         # The probe and the final action are SEPARATE jobs over the
         # same rank+chunk-window subtree, so carries collected in job 1
         # joined against ranks recomputed in job 2 are only consistent
@@ -217,11 +224,9 @@ def ewma_scan(df: DataFrame, keys: Sequence[str],
         # join-back evaluate inside one query — at 100 TB nothing
         # changes and no probe pass is wasted.
         from imp_etl_spark.operators.window import _footer_row_bound
-        persist_cap = int(float(df.sparkSession.conf.get(
-            "spark.imp_etl.ewmaScan.persistRows", "10000000")))
         ub = _footer_row_bound(df)
         probe_rows = None
-        if ub is not None and ub <= persist_cap:
+        if ub is not None and ub <= EWMA_PERSIST_ROWS:
             from imp_etl_spark.operators.util import persist
             d = persist(d)
             summ = _chunk_summaries(d, keys)
@@ -302,9 +307,9 @@ def ewma_final(df: DataFrame, keys: Sequence[str],
     Math.pow at exponents > 1, which only enters the JOIN-BACK side).
 
     Chain placement: when a LIMIT cap+1 probe shows the summary frame
-    is small (<= ``spark.imp_etl.ewmaScan.driverChainRows``, default
-    100k), the chain runs on the driver and the result is a literal
-    local frame — total cost one distributed pass. Bigger summary
+    is small (<= :data:`EWMA_DRIVER_CHAIN_ROWS`), the chain runs on
+    the driver and the result is a literal local frame — total cost
+    one distributed pass. Bigger summary
     frames run the distributed Arrow chain emitting one row per key
     (a 10^12-row corpus at default chunking is ~4x10^8 summary rows:
     far past any collect, exactly the applyInPandas shape).
@@ -320,8 +325,7 @@ def ewma_final(df: DataFrame, keys: Sequence[str],
     summ = _chunk_summaries(d, keys)
     spark = df.sparkSession
 
-    cap = int(float(spark.conf.get(
-        "spark.imp_etl.ewmaScan.driverChainRows", "100000")))
+    cap = EWMA_DRIVER_CHAIN_ROWS
     # Probe gate (ADVICE r11): at tiny chunk sizes the summary frame
     # approaches the full input, so an unconditional LIMIT cap+1 probe
     # on a large chunk=1 input collects up to `cap` rows and pays a
@@ -334,14 +338,10 @@ def ewma_final(df: DataFrame, keys: Sequence[str],
     # is no consistency hazard here: a successful probe builds the
     # entire answer from the collected rows (no join-back, no second
     # evaluation).
-    if cap > 0:
-        from imp_etl_spark.operators.window import _footer_row_bound
+    from imp_etl_spark.operators.window import _footer_row_bound
 
-        ub = _footer_row_bound(df)
-        probe_ok = c_size >= 64 or (ub is not None and ub <= cap)
-    else:
-        probe_ok = False
-    if probe_ok:
+    ub = _footer_row_bound(df)
+    if c_size >= 64 or (ub is not None and ub <= cap):
         probe_rows = summ.limit(cap + 1).collect()
         if len(probe_rows) <= cap:
             groups: dict[tuple, list] = {}

@@ -34,6 +34,10 @@ from pyspark.sql import functions as F
 from imp_etl_spark.functions.vector import cosine
 from imp_etl_spark.operators.util import spread_small_scan
 
+#: Vectors per file of the IVF index write (r12): bounds each writer
+#: task; small corpora land one file per inverted list.
+IVF_INDEX_ROWS_PER_FILE = 250_000
+
 
 @lru_cache(maxsize=None)
 def srp_plane_components(planes: int, dim: int) -> tuple[tuple[float, ...], ...]:
@@ -338,25 +342,20 @@ def _coalesce_list_write(assigned: DataFrame, source: DataFrame,
     small-files fix as the MinHash signature table): without it the
     partitioned write lands scan-tasks x nlist tiny files that every
     probe re-opens. One exchange on (__list, sub) lays each list out
-    as ``ceil(vectors / rowsPerFile)`` files — one per list for small
-    corpora, growing with the footer-proved row bound at scale. The
-    shuffle moves (id, vector, list) rows once, the standard price of
-    a hash-distributed write layout; unprovable inputs keep the
-    spread write (blind coalescing could funnel a huge build through
-    ``nlist`` tasks)."""
+    as ``ceil(vectors / IVF_INDEX_ROWS_PER_FILE)`` files — one per
+    list for small corpora, growing with the footer-proved row bound
+    at scale. The shuffle moves (id, vector, list) rows once, the
+    standard price of a hash-distributed write layout; unprovable
+    inputs keep the spread write (blind coalescing could funnel a huge
+    build through ``nlist`` tasks)."""
     import math
 
-    spark = assigned.sparkSession
-    rows_per_file = int(float(spark.conf.get(
-        "spark.imp_etl.ivfIndex.rowsPerFile", "250000")))
-    if rows_per_file <= 0:
-        return assigned
     from imp_etl_spark.operators.window import _footer_row_bound
 
     ub = _footer_row_bound(source)
     if ub is None:
         return assigned
-    fpl = max(1, math.ceil(ub / rows_per_file))
+    fpl = max(1, math.ceil(ub / IVF_INDEX_ROWS_PER_FILE))
     sub = F.pmod(F.xxhash64(F.col(id_col)), F.lit(fpl))
     return assigned.repartition(nlist * fpl, F.col("__list"), sub)
 

@@ -87,11 +87,14 @@ def release_query_caches(blocking: bool = False) -> int:
     return len(frames) + release_probe_memo()
 
 
-def persist_if_big(df: DataFrame, source: DataFrame,
-                   min_rows_conf: str = "spark.imp_etl.persist.minSourceRows",
-                   default_min_rows: int = 16384,
-                   max_rows_conf: str | None = None,
-                   default_max_rows: int | None = None) -> DataFrame:
+#: The operator-level persist crossover (r12): a multi-consumer frame
+#: whose source is provably below this many rows keeps the fused
+#: no-persist plan (see :func:`persist_if_big`).
+PERSIST_MIN_SOURCE_ROWS = 16_384
+
+
+def persist_if_big(df: DataFrame, source: DataFrame, min_rows: int,
+                   max_rows: int | None = None) -> DataFrame:
     """Persist ``df`` (MEMORY_AND_DISK) unless ``source`` is PROVABLY
     tiny from parquet footer bounds (r12).
 
@@ -102,32 +105,30 @@ def persist_if_big(df: DataFrame, source: DataFrame,
     LOSES on tiny fixtures: the persist's fixed overhead (extra stage
     boundaries, block writes, per-block read locks) measured ~+0.3 s
     at sf0.1's 500-doc corpus, where 4x recompute of the pass is
-    nearly free. So: a footer bound BELOW the threshold keeps the
+    nearly free. So: a footer bound BELOW ``min_rows`` keeps the
     fused no-persist plan; anything bigger — or any input whose size
     cannot be proven (joins, in-memory frames, non-parquet sources,
     where the safe assumption is big) — persists. The persisted frame
     belongs to the query-cache owner (:func:`release_query_caches`).
 
-    ``max_rows_conf``/``default_max_rows`` (r13, ADVICE r12): an
-    optional UPPER crossover for frames whose materialized size grows
-    with the source (a token stream is ~corpus bytes). A source
-    PROVABLY at/above the cap keeps the streaming two-pass plan —
-    re-reading a compressed parquet scan twice beats spilling a
-    corpus-scale cache to local disk. Unprovable sources still persist
-    (the two bounds only ever act on footer-provable scans, where both
-    directions of the trade are measurable).
+    ``max_rows`` (r13, ADVICE r12): an optional UPPER crossover for
+    frames whose materialized size grows with the source (a token
+    stream is ~corpus bytes). A source PROVABLY at/above the cap keeps
+    the streaming two-pass plan — re-reading a compressed parquet scan
+    twice beats spilling a corpus-scale cache to local disk. With a
+    cap, an UNPROVABLE source streams too: its size may be anything,
+    and a corpus-sized cache is the side of the trade that does not
+    survive 100 TB.
+
+    Callers pass their crossovers as values — each is a named module
+    constant beside its consumer (e.g. :data:`PERSIST_MIN_SOURCE_ROWS`).
     """
     from imp_etl_spark.operators.window import _footer_row_bound
 
-    conf = df.sparkSession.conf
-    thr = int(float(conf.get(min_rows_conf, str(default_min_rows))))
-    cap = None
-    if max_rows_conf is not None or default_max_rows is not None:
-        raw = conf.get(max_rows_conf, str(default_max_rows)) \
-            if max_rows_conf is not None else str(default_max_rows)
-        cap = int(float(raw)) if raw not in (None, "None") else None
     ub = _footer_row_bound(source)
-    if ub is not None and (ub < thr or (cap is not None and ub >= cap)):
+    if ub is None:
+        return df if max_rows is not None else persist(df)
+    if ub < min_rows or (max_rows is not None and ub >= max_rows):
         return df
     return persist(df)
 

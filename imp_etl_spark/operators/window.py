@@ -27,6 +27,12 @@ from pyspark.sql import functions as F
 
 from imp_etl_spark.operators.util import persist
 
+#: ``global_index(unique_order=True)`` and ``prefix_sum`` rank a frame
+#: of at most this many rows with ONE single-partition window instead
+#: of the range/offset machinery (r13, VERDICT r12 item 6): the A/B
+#: crossover of the machinery's fixed jobs against one task's sort.
+PREFIX_SUM_MAX_SINGLE_SORT_ROWS = 1_048_576
+
 
 def global_index(df: DataFrame, order_col: str, col_name: str = "__rn",
                  num_partitions: int | None = None,
@@ -55,7 +61,7 @@ def global_index(df: DataFrame, order_col: str, col_name: str = "__rn",
     a unique id into its sort key precisely so ranks are
     deterministic). It unlocks the r13 small-frame dispatch (VERDICT
     r12 item 6): persist + count the input, and at or under
-    ``spark.imp_etl.prefixSum.maxSingleSortRows`` rank with ONE
+    :data:`PREFIX_SUM_MAX_SINGLE_SORT_ROWS` rank with ONE
     single-partition row_number window — bit-identical ranks (the
     order is tie-free), none of the range-sampling/pid/offset jobs
     whose fixed cost dominated the sub-second bench rows. Ties-allowed
@@ -63,12 +69,9 @@ def global_index(df: DataFrame, order_col: str, col_name: str = "__rn",
     paths may rank ties differently, and this function promises only
     consistency within one plan.
     """
-    spark = df.sparkSession
     if unique_order:
         d0 = persist(df)
-        small = int(float(spark.conf.get(
-            "spark.imp_etl.prefixSum.maxSingleSortRows", "1048576")))
-        if d0.count() <= small:
+        if d0.count() <= PREFIX_SUM_MAX_SINGLE_SORT_ROWS:
             w = Window.orderBy(F.col(order_col).asc())
             out = d0.withColumn(
                 col_name, F.row_number().over(w).cast("long"))
@@ -216,7 +219,7 @@ def prefix_sum(df: DataFrame, order_cols: Sequence[str], value_col: str,
     alone executes its child TWICE (the range-sampling job, then the
     real exchange) — the input persist makes that one pass plus cache
     reads. The count then dispatches: a frame at or under
-    ``spark.imp_etl.prefixSum.maxSingleSortRows`` skips the whole
+    :data:`PREFIX_SUM_MAX_SINGLE_SORT_ROWS` skips the whole
     range/offset machinery for one single-partition running-sum window
     (exact same values — the order is unique by contract — with zero
     extra exchanges, no pid bookkeeping and no second collect); bigger
@@ -227,10 +230,7 @@ def prefix_sum(df: DataFrame, order_cols: Sequence[str], value_col: str,
     n = num_partitions or spark.sparkContext.defaultParallelism
     cols = [F.col(c).asc() for c in order_cols]
     d0 = persist(df)
-    n_rows = d0.count()
-    small = int(float(spark.conf.get(
-        "spark.imp_etl.prefixSum.maxSingleSortRows", "1048576")))
-    if n_rows <= small:
+    if d0.count() <= PREFIX_SUM_MAX_SINGLE_SORT_ROWS:
         w = (Window.orderBy(*cols)
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
         out = d0.withColumn(
@@ -678,50 +678,74 @@ def _rows_at_most(df: DataFrame, limit: int,
     return bound is not None and bound <= limit
 
 
+#: Lag-class (and trailing-class) dispatch mode: ``"auto"`` probes the
+#: data; ``"window"``/``"seq"`` force a shape and skip the probe (the
+#: fuzzer's forced-shape axis monkeypatches this).
+LAG_MODE = "auto"
+#: Metadata row-count floor (r10, VERDICT item 1): below this many rows
+#: the window shape wins at EVERY hot-key share (SCALING.md's crossover
+#: sweep — at <=10M rows even a 100%-share key is a single task over
+#: <=10M rows, a bounded few seconds, while seq_lag's two-phase tax is
+#: unconditional), so a bare local-parquet probe whose footers prove it
+#: this small takes the window shape without the probe's two jobs.
+LAG_ROW_FLOOR = 10_000_000
+#: Hot-share cutoff: the measured 25x crossover sits at a 32-40% share
+#: (seq/window wall ratio 1.87 at ~0% share, 1.37 at 24%, 1.07 at 32%,
+#: 0.83 at 40%, 0.42 at 96% — SCALING.md r9 table). Just below
+#: crossover is the right bias: a false seq pick costs a bounded <=7%
+#: there, while a false window pick at a genuinely hot key is an
+#: unbounded single-task straggler whose penalty GROWS with the key's
+#: absolute size.
+LAG_THRESHOLD = 0.34
+#: freqItems support of the lag probe; the probe runs at
+#: ``min(LAG_SUPPORT, threshold)`` so the no-false-negatives guarantee
+#: covers the cutoff.
+LAG_SUPPORT = 0.125
+#: Trailing-class seq trigger: the hottest key's ABSOLUTE row count.
+#: The regret-minimizing point of the measured quadratic curve (r10): at
+#: LOW frame occupancy a 50k-key window costs about the seq machinery's
+#: fixed tax (false seq ~= free), while at high occupancy it is already
+#: an order of magnitude past it and growing quadratically.
+TRAILING_HOT_ROWS = 50_000
+#: A fixed trailing-probe support, or None to derive it from the footer
+#: bound (see :func:`resolve_trailing_mode`).
+TRAILING_SUPPORT: float | None = None
+#: Floor of the derived trailing-probe support — the probe-cost bound:
+#: below it the counter map and the verification pass grow past the
+#: point where probing is cheap, and a key that small a share of a
+#: table that large is the documented residual blind spot.
+TRAILING_MIN_SUPPORT = 1.0 / 4096
+
+
 def resolve_lag_mode(probe: DataFrame, keys: Sequence[str],
                      mode: str | None = None,
-                     threshold: float | None = None,
-                     support: float | None = None) -> str:
+                     threshold: float | None = None) -> str:
     """Resolve the lag-class dispatch decision to ``"window"`` or
     ``"seq"`` — the probe half of :func:`lag_dispatch`, exposed so a
     caller with SEVERAL window passes over one input (state_intervals:
     lag over the full frame, then lead over the change points) probes
-    ONCE and reuses the decision. Conf keys documented on
-    :func:`lag_dispatch`."""
-    conf = probe.sparkSession.conf
-    mode = mode or conf.get("spark.imp_etl.lagDispatch.mode", "auto")
+    ONCE and reuses the decision.
+
+    ``mode`` forces a shape (default :data:`LAG_MODE`). In auto mode a
+    probe that Parquet footers prove at most :data:`LAG_ROW_FLOOR` rows
+    takes the window shape with no Spark job (anything unprovable runs
+    the probe); otherwise ``"seq"`` wins iff the probed hottest-key
+    share reaches ``threshold`` (default :data:`LAG_THRESHOLD`; the
+    EWMA class passes its own)."""
+    mode = mode or LAG_MODE
     assert mode in ("auto", "window", "seq"), mode
     if mode != "auto":
         return mode
-    # Row-count floor (r10, VERDICT item 1): below ``rowFloor`` rows
-    # the window shape wins at EVERY hot-key share (SCALING.md's own
-    # crossover sweep — at <=10M rows even a 100%-share key is a single
-    # task over <=10M rows, a bounded few seconds, while seq_lag's
-    # two-phase tax is unconditional), so when the probed frame is a
-    # bare file-scan pipeline whose Parquet footers prove it small, the
-    # dispatch skips the probe's two jobs entirely. Metadata-only, no
-    # Spark job; 0 disables. Footer counts are an upper bound under
-    # filters, so a True answer is sound; anything unprovable (joins,
-    # remote FS, in-memory frames) just runs the probe as before.
-    floor = int(float(conf.get(
-        "spark.imp_etl.lagDispatch.rowFloor", "10000000")))
-    if floor > 0 and _rows_at_most(probe, floor):
+    if _rows_at_most(probe, LAG_ROW_FLOOR):
         return "window"
-    threshold = float(
-        threshold if threshold is not None
-        else conf.get("spark.imp_etl.lagDispatch.threshold", "0.34"))
-    support = float(
-        support if support is not None
-        else conf.get("spark.imp_etl.lagDispatch.support", "0.125"))
-    support = min(support, threshold)
-    share, _ = top_key_share(probe, keys, support, memo=True)
+    threshold = LAG_THRESHOLD if threshold is None else threshold
+    share, _ = top_key_share(probe, keys, min(LAG_SUPPORT, threshold),
+                             memo=True)
     return "seq" if share >= threshold else "window"
 
 
 def resolve_trailing_mode(probe: DataFrame, keys: Sequence[str],
-                          mode: str | None = None,
-                          hot_rows: int | None = None,
-                          support: float | None = None) -> str:
+                          mode: str | None = None) -> str:
     """Dispatch decision for the trailing-RANGE class
     (:func:`trailing_time_sums`) — by the hottest key's ABSOLUTE row
     count, not share: Spark's sliding-frame WindowExec re-evaluates
@@ -729,9 +753,10 @@ def resolve_trailing_mode(probe: DataFrame, keys: Sequence[str],
     of a hot key is ~ hot_rows x in-frame rows — QUADRATIC at full
     occupancy (measured: 1.7 s at a 10k-row key, 5.5 s at 20k, 22.2 s
     at 40k at 20% occupancy, single task, local[32]; SCALING.md r10)
-    while the seq shape stays flat. Decision order:
+    while the seq shape stays flat. With ``hot_rows`` =
+    :data:`TRAILING_HOT_ROWS`, the decision order is:
 
-    1. forced mode (``spark.imp_etl.lagDispatch.mode`` or ``mode=``);
+    1. forced mode (``mode=`` or :data:`LAG_MODE`);
     2. metadata floor: a pure local-scan probe provably < hot_rows
        TOTAL rows cannot contain a key reaching the seq trigger ->
        ``"window"`` (the same footer bound as the lag class, with the
@@ -739,12 +764,6 @@ def resolve_trailing_mode(probe: DataFrame, keys: Sequence[str],
        can still hide a quadratically fatal trailing key; strictly
        below, because the probe rule fires AT hot_rows — r11, ADVICE);
     3. probe: ``"seq"`` iff the hottest key's exact count >= hot_rows.
-
-    ``spark.imp_etl.trailingAgg.hotRows`` (default 50000) is the
-    regret-minimizing point of the measured curve: at LOW frame
-    occupancy a 50k-key window costs about the seq machinery's fixed
-    tax (false seq ~= free), while at high occupancy it is already an
-    order of magnitude past it and growing quadratically.
 
     Probe support — AUTO-DERIVED from the footer bound (r11, VERDICT
     item 3): ``top_key_stats`` only guarantees detection of keys whose
@@ -756,31 +775,21 @@ def resolve_trailing_mode(probe: DataFrame, keys: Sequence[str],
     margin) is sufficient AND necessary-scaled: it LOWERS support on
     big tables (closing the blind spot) and RAISES it on small ones
     (fewer heavy-hitter counters; capped at 0.5). The derived value is
-    floored at ``spark.imp_etl.trailingAgg.minSupport`` (default
-    1/4096) — the probe-cost bound: below it the counter map and the
-    verification pass grow past the point where probing is cheap, and
-    a key that small a share of a table that large is the documented
-    residual blind spot. An explicit ``support=`` argument or a SET
-    ``spark.imp_etl.trailingAgg.support`` conf overrides derivation;
-    the 0.01 default applies only when no footer bound exists.
+    floored at :data:`TRAILING_MIN_SUPPORT`. A set
+    :data:`TRAILING_SUPPORT` overrides derivation; the 0.01 default
+    applies only when no footer bound exists.
     """
-    conf = probe.sparkSession.conf
-    mode = mode or conf.get("spark.imp_etl.lagDispatch.mode", "auto")
+    mode = mode or LAG_MODE
     assert mode in ("auto", "window", "seq"), mode
     if mode != "auto":
         return mode
-    hot_rows = int(float(
-        hot_rows if hot_rows is not None
-        else conf.get("spark.imp_etl.trailingAgg.hotRows", "50000")))
-    ub = _footer_row_bound(probe) if hot_rows > 0 else None
+    hot_rows = TRAILING_HOT_ROWS
+    ub = _footer_row_bound(probe)
     if ub is not None and ub < hot_rows:
         return "window"
-    if support is None:
-        support = conf.get("spark.imp_etl.trailingAgg.support", None)
+    support = TRAILING_SUPPORT
     if support is None and ub:
-        min_support = float(conf.get(
-            "spark.imp_etl.trailingAgg.minSupport", str(1.0 / 4096)))
-        support = min(max(0.5 * hot_rows / ub, min_support), 0.5)
+        support = min(max(0.5 * hot_rows / ub, TRAILING_MIN_SUPPORT), 0.5)
     support = float(support if support is not None else 0.01)
     _share, cnt, _key = top_key_stats(probe, keys, support, memo=True)
     return "seq" if cnt >= hot_rows else "window"
@@ -791,8 +800,6 @@ def lag_dispatch(df: DataFrame, keys: Sequence[str],
                  lags: LagSpec = None, leads: LagSpec = None, k: int = 1,
                  num_partitions: int | None = None,
                  mode: str | None = None,
-                 threshold: float | None = None,
-                 support: float | None = None,
                  probe: DataFrame | None = None) -> DataFrame:
     """Per-run skew dispatch for the lag class (SCALING.md watch
     table, decided round 9): compute ``lag/lead OVER (PARTITION BY
@@ -803,31 +810,14 @@ def lag_dispatch(df: DataFrame, keys: Sequence[str],
     shape pays ~2.9x at 96% one-key concentration and ~4.7x at 99%,
     trending to a multi-hour straggler at a 10^8-event bot key).
 
-    The decision probes the hottest key's exact share via
-    ``top_key_share`` (two map-side aggregation passes over the key
-    column only) and picks ``seq_lag`` iff ``share >= threshold``.
-    Both shapes are value-exact for lag/lead (picks, not sums), so the
+    The decision (:func:`resolve_lag_mode`; ``mode`` forces a shape)
+    probes the hottest key's exact share via ``top_key_share`` (two
+    map-side aggregation passes over the key column only) and picks
+    ``seq_lag`` iff ``share >= LAG_THRESHOLD``, unless the footer row
+    floor :data:`LAG_ROW_FLOOR` already proves the window shape. Both
+    shapes are value-exact for lag/lead (picks, not sums), so the
     dispatch never changes results — pinned by tests either way.
 
-    Config (session conf, overridable per call):
-    - ``spark.imp_etl.lagDispatch.mode``: auto | window | seq
-      (default auto; window/seq skip the probe entirely)
-    - ``spark.imp_etl.lagDispatch.threshold``: hot-share cutoff
-      (default 0.34 — the measured 25x crossover sits at a 32-40%
-      share: seq/window wall ratio 1.87 at ~0% share, 1.37 at 24%,
-      1.07 at 32%, 0.83 at 40%, 0.42 at 96% — SCALING.md r9 table.
-      Just below crossover is the right bias: a false seq pick costs
-      a bounded <=7% there, while a false window pick at a genuinely
-      hot key is an unbounded single-task straggler whose penalty
-      GROWS with the key's absolute size)
-    - ``spark.imp_etl.lagDispatch.support``: freqItems support
-      (default min(0.125, threshold) — must stay <= threshold so the
-      no-false-negatives guarantee covers the cutoff)
-    - ``spark.imp_etl.lagDispatch.rowFloor``: metadata row-count floor
-      (default 10M; 0 disables) — when the probe frame is a bare local
-      parquet scan whose footers prove <= rowFloor rows, skip the
-      probe and take the window shape: below that size the window
-      wins at every share and the probe is pure tax (r9 bench)
     ``probe`` substitutes the probed frame (e.g. the raw table
     projection) when ``df`` already carries upstream work that the
     probe shouldn't recompute. Build-time jobs: in auto mode the probe
@@ -837,8 +827,7 @@ def lag_dispatch(df: DataFrame, keys: Sequence[str],
     memo (``_PROBE_MEMO`` above) and run no jobs at all.
     """
     mode = resolve_lag_mode(probe if probe is not None else df, keys,
-                            mode=mode, threshold=threshold,
-                            support=support)
+                            mode=mode)
     if mode == "seq":
         return seq_lag(df, keys, order_cols, lags=lags, leads=leads, k=k,
                        num_partitions=num_partitions)
@@ -857,7 +846,6 @@ def trailing_time_sums(df: DataFrame, key: Sequence[str] | str,
                        sums: dict[str, str] | None = None,
                        count_col: str | None = None,
                        mode: str | None = None,
-                       hot_rows: int | None = None,
                        num_partitions: int | None = None,
                        probe: DataFrame | None = None) -> DataFrame:
     """Per-key trailing TIME-window count/sums with a skew dispatch —
@@ -893,10 +881,10 @@ def trailing_time_sums(df: DataFrame, key: Sequence[str] | str,
       both shapes are bit-equal (pinned in tests/test_skew.py).
 
     Dispatch: ``mode=None`` resolves via :func:`resolve_trailing_mode`
-    — forced-mode conf, then the metadata row bound at ``hot_rows``,
-    then the exact hottest-key COUNT probe against
-    ``spark.imp_etl.trailingAgg.hotRows`` (default 50000; rationale
-    and the measured quadratic curve on the resolver's docstring).
+    — :data:`LAG_MODE`, then the metadata row bound at
+    :data:`TRAILING_HOT_ROWS`, then the exact hottest-key COUNT probe
+    against it (rationale and the measured quadratic curve on the
+    constant and the resolver's docstring).
     Keys may be NULL (real groups — struct-folded so every internal
     join is null-safe).
     """
@@ -912,8 +900,7 @@ def trailing_time_sums(df: DataFrame, key: Sequence[str] | str,
             f"trailing_time_sums needs exact-additive types; {src} is "
             f"{dt.simpleString()} — quantize to decimal first")
     mode = resolve_trailing_mode(probe if probe is not None else
-                                 df.select(*key), key, mode=mode,
-                                 hot_rows=hot_rows)
+                                 df.select(*key), key, mode=mode)
     if mode == "window":
         aggs: dict[str, Column] = {}
         if count_col:

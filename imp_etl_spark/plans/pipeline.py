@@ -265,8 +265,9 @@ def build_pipeline(queue: DataFrame, voucher: DataFrame,
                    order_col: str = "reference_no",
                    compat: bool = True,
                    persist: bool = True,
-                   sink_buckets: int | None = None,
-                   sink_files_per_bucket: int = 1) -> PipelineResult:
+                   sink_buckets: int | tuple[int, int] | None = None,
+                   sink_files_per_bucket: int | tuple[int, int] = 1,
+                   ) -> PipelineResult:
     """Assemble the full dataflow. All lazy — nothing executes here
     (``persist`` only marks the branch points for caching).
 
@@ -278,15 +279,20 @@ def build_pipeline(queue: DataFrame, voucher: DataFrame,
     should pass ``batch_pre_clustered=True`` with the SAME
     ``n_buckets`` (and ``files_per_bucket``) to ``merge_upsert``.
     ``None`` keeps the plain hash(pk) dedup (callers that never hit
-    the bucketed sink)."""
+    the bucketed sink). Either value may be a ``(voucher,
+    transaction)`` pair when the two tables' layouts differ."""
+    def per_branch(x):
+        return x if isinstance(x, tuple) else (x, x)
+
+    (v_nb, t_nb), (v_fpb, t_fpb) = (per_branch(sink_buckets),
+                                    per_branch(sink_files_per_bucket))
     keys = reference_keys(queue)
     vb = _branch(voucher, keys, voucher_key or ["voucher_id", "reference_no"],
-                 cleanse_voucher, order_col, compat, persist, sink_buckets,
-                 sink_files_per_bucket)
+                 cleanse_voucher, order_col, compat, persist, v_nb, v_fpb)
     tb = _branch(transaction, keys,
                  transaction_key or ["voucher_details_id", "reference_no"],
                  cleanse_transaction, order_col, compat, persist,
-                 sink_buckets, sink_files_per_bucket)
+                 t_nb, t_fpb)
     # a key present in an entity always survives the semi prune and
     # cleanse never rewrites reference_no, so the persisted branch
     # points hold the same refs as the entities — the warnings then read

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from imp_etl_spark.plans.pipeline import build_pipeline
-from imp_etl_spark.plans.upsert import merge_upsert
+from imp_etl_spark.plans.upsert import merge_upsert, sink_layout
 
 #: ST8 parity (services/etlService.js:13-14): 3 attempts, 1000 ms apart
 RETRY_LIMIT = 3
@@ -91,26 +91,19 @@ def run_etl(spark: SparkSession, queue: DataFrame, voucher: DataFrame,
     if watermark is not None:
         queue = queue.filter(F.col("log_id") > F.lit(watermark))
 
-    # fused dedup↔bucket layout (r13): the branches exchange ONCE on
-    # the manifest sink's own bucket expression and the sink writes
-    # them pre-clustered — see plans.upsert._dedup_in_bucket_layout.
-    # The JDBC sink ignores clustering (any layout is a valid batch),
-    # so one fused shape serves both sinks. files_per_bucket keeps the
-    # fused dedup sort scale-adaptive: 'auto' sub-splits each bucket so
-    # the sort uses the session's full parallelism instead of funneling
-    # a big epoch through n_buckets tasks (the bucket dirs then hold
-    # files_per_bucket files each — the documented wide-bucket layout).
-    from imp_etl_spark.plans.upsert import DEFAULT_BUCKETS
-
-    fpb_raw = spark.conf.get("spark.imp_etl.etlSink.filesPerBucket", "auto")
-    fpb = (max(1, spark.sparkContext.defaultParallelism // DEFAULT_BUCKETS)
-           if fpb_raw == "auto" else max(1, int(fpb_raw)))
+    # fused dedup↔bucket layout (r13): each branch exchanges ONCE on
+    # its table's own bucket expression and the sink writes it
+    # pre-clustered — see plans.upsert._dedup_in_bucket_layout and
+    # sink_layout. The JDBC sink ignores clustering (any layout is a
+    # valid batch), so one fused shape serves both sinks.
+    v_nb, v_fpb = sink_layout(spark, voucher_path)
+    t_nb, t_fpb = sink_layout(spark, txn_path)
     result = build_pipeline(queue, voucher, transaction,
                             voucher_key=voucher_key,
                             transaction_key=transaction_key,
                             order_col=order_col, compat=compat,
-                            sink_buckets=DEFAULT_BUCKETS,
-                            sink_files_per_bucket=fpb)
+                            sink_buckets=(v_nb, t_nb),
+                            sink_files_per_bucket=(v_fpb, t_fpb))
 
     # MERGE first: the writes execute both branches, and the observe()
     # metrics attached in build_pipeline record the processed/skipped
@@ -149,14 +142,14 @@ def run_etl(spark: SparkSession, queue: DataFrame, voucher: DataFrame,
         def v_write():
             return merge_upsert(
                 spark, voucher_path, result.voucher.valid, v_keys,
-                order_col, batch_is_unique=True,
-                files_per_bucket=fpb, batch_pre_clustered=True)
+                order_col, n_buckets=v_nb, files_per_bucket=v_fpb,
+                batch_is_unique=True, batch_pre_clustered=True)
 
         def t_write():
             return merge_upsert(
                 spark, txn_path, result.transaction.valid, t_keys,
-                order_col, batch_is_unique=True,
-                files_per_bucket=fpb, batch_pre_clustered=True)
+                order_col, n_buckets=t_nb, files_per_bucket=t_fpb,
+                batch_is_unique=True, batch_pre_clustered=True)
     else:
         raise ValueError(f"unknown sink {sink!r}")
     with ThreadPoolExecutor(max_workers=4) as pool:

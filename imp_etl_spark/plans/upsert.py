@@ -171,6 +171,18 @@ def current_n_buckets(path: str) -> int | None:
     return int(nb) if nb else None
 
 
+def sink_layout(spark: SparkSession, path: str) -> tuple[int, int]:
+    """``(n_buckets, files_per_bucket)`` for an ETL fire into the table
+    at ``path``: the table's own bucket count (:data:`DEFAULT_BUCKETS`
+    for a new table, so a fire never undoes a ``rebucket``), and each
+    bucket sub-split so the fused dedup sort uses the session's full
+    parallelism instead of funneling a big epoch through ``n_buckets``
+    tasks (the bucket dirs then hold that many files each — the
+    documented wide-bucket layout)."""
+    n = current_n_buckets(path) or DEFAULT_BUCKETS
+    return n, max(1, spark.sparkContext.defaultParallelism // n)
+
+
 def _schema_ddl(schema: dict) -> str:
     return ", ".join(f"`{c.replace('`', '``')}` {t}"
                      for c, t in schema.items())
@@ -439,8 +451,9 @@ def _write_bucketed(df: DataFrame, key: Sequence[str], n_buckets: int,
     ``__bucket=k`` directory (individually addressable by manifests).
 
     ``files_per_bucket > 1`` widens each bucket to that many writer
-    tasks/files (sub-partitioned by a second key hash) — the knob that
-    keeps task size bounded when a bucket holds gigabytes at 100 TB.
+    tasks/files (sub-partitioned by a second key hash), which keeps
+    task size bounded when a bucket holds gigabytes at 100 TB; ETL
+    fires derive it from the session's parallelism (:func:`sink_layout`).
     Readers are unaffected (a bucket is a directory either way), and
     the merge cost model is unchanged: touched BUCKETS rewrite whole.
 

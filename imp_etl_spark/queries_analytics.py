@@ -1013,6 +1013,15 @@ def hll_distinct_users_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.where(ok).select("day", "n_users_exact")
 
 
+#: hll_user_overlap_halves' sketch-frame persist crossover (r13): the
+#: sketch rebuild the persist saves is a cheap map-side-combined agg,
+#: so the crossover sits far above the operator default — the row
+#: measured 0.71x at sf0.1's 100k events with the persist
+#: unconditional, and the fused 3-evaluation plan wins until the event
+#: scan itself dominates.
+SKETCH_PERSIST_MIN_SOURCE_ROWS = 1_048_576
+
+
 @register("hll_user_overlap_halves", """
 WITH e AS (
   SELECT event_type, user_id, CAST(ts AS DATE) AS d
@@ -1073,16 +1082,12 @@ def hll_user_overlap_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (plans/r12/hll_user_overlap_halves_before.txt: 6 parquet scans,
     # 0 ReusedExchange). The persisted frame is one row per
     # (event_type, half) at 16 KiB per sketch — exactly the persisted
-    # "sketch table" the operator's 100 TB story assumes. Gated (r13, VERDICT
-    # r12 item 2): the sketch rebuild the persist saves is a cheap
-    # map-side-combined agg, so the crossover sits far above the
-    # operator default — the driver measured this row 0.71x at sf0.1's
-    # 100k events with the persist unconditional, and the fused
-    # 3-evaluation plan wins until the event scan itself dominates.
+    # "sketch table" the operator's 100 TB story assumes, gated at
+    # SKETCH_PERSIST_MIN_SOURCE_ROWS.
     sk = persist_if_big(
         sharded_distinct_sketch(
             ev, ["event_type"], "user_id", shard=F.col("__dom") <= 15),
-        ev, "spark.imp_etl.persist.minSketchSourceRows", 1_048_576)
+        ev, SKETCH_PERSIST_MIN_SOURCE_ROWS)
     sk1 = sk.where(F.col("__shard")).drop("__shard")
     sk2 = sk.where(~F.col("__shard")).drop("__shard")
     est = overlap_estimate(sk1, sk2, ["event_type"])

@@ -42,6 +42,7 @@ from imp_etl_spark.functions.text import (
 )
 from imp_etl_spark.functions.vector import cosine
 from imp_etl_spark.operators import similarity
+from imp_etl_spark.operators.util import persist_if_big
 from imp_etl_spark.registry import register
 from imp_etl_spark.sources.parquet import read_table
 
@@ -246,7 +247,7 @@ def doc_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a lower crossover (tiny corpora recompute for free) and an UPPER
     # cap (a corpus-scale cache would spill ~its own input to local
     # disk; past the cap the two-pass streaming plan is the cheaper
-    # side of the trade, the r12 position, now conf-tunable).
+    # side of the trade, the r12 position).
     toks = _persist_if_token_scale(
         docs.select("doc_id",
                     F.explode(tokens(F.col("text"))).alias("tok")),
@@ -602,35 +603,30 @@ _MINHASH_IDX: dict[tuple, str] = {}
 # first callers would each mint their own lock and both run the build)
 _MINHASH_IDX_LOCK = threading.Lock()
 
+#: Token-stream persist crossovers (r13, VERDICT r12 item 5): the frame
+#: is ~corpus bytes, so the gate is two-sided. Below the MIN the
+#: recompute is free (fused plan); at/above the MAX the cache would
+#: spill roughly the corpus to local disk and the streaming two-pass
+#: plan wins (the r12 trade, kept, with a measured crossover window
+#: between the bounds).
+TOKEN_PERSIST_MIN_SOURCE_ROWS = 2048
+TOKEN_PERSIST_MAX_SOURCE_ROWS = 16_777_216
+#: The dedup tier's staged pair-table persist crossover (r13, VERDICT
+#: r12 item 2): the Jaccard verify these frames cache is expensive per
+#: doc, so the crossover sits at hundreds of docs, far below the
+#: operator-level default — only toy corpora keep the fused plan.
+VERIFY_PERSIST_MIN_SOURCE_ROWS = 256
+
+
 def _persist_if_token_scale(toks: DataFrame, docs: DataFrame) -> DataFrame:
-    """Gated persist for a per-doc exploded token stream (r13, VERDICT
-    r12 item 5): the two-aggregation corpus queries (tfidf_top_term,
-    doc_token_rarity, oov_rate_docs) consume their token frame twice,
-    so one persisted tokenize pass replaces two — but the frame is
-    ~corpus bytes, so the gate is two-sided: below
-    ``spark.imp_etl.persist.minTokenSourceRows`` docs the recompute is
-    free (fused plan), at/above ``...maxTokenSourceRows`` docs the
-    cache would spill roughly the corpus to local disk and the
-    streaming two-pass plan wins (the r12 trade, kept, now with a
-    measured crossover window between the bounds)."""
-    from imp_etl_spark.operators.util import persist_if_big
-
-    return persist_if_big(
-        toks, docs,
-        min_rows_conf="spark.imp_etl.persist.minTokenSourceRows",
-        default_min_rows=2048,
-        max_rows_conf="spark.imp_etl.persist.maxTokenSourceRows",
-        default_max_rows=16_777_216)
-
-
-def _persist_verify_tier(df: DataFrame, docs: DataFrame) -> DataFrame:
-    """The dedup tier's staged pair-table persist (candidate and
-    verified pairs): gated (r13, VERDICT r12 item 2) on the corpus
-    footer bound with the verify-tier crossover."""
-    from imp_etl_spark.operators.util import persist_if_big
-
-    return persist_if_big(
-        df, docs, "spark.imp_etl.persist.minVerifySourceRows", 256)
+    """Gated persist for a per-doc exploded token stream, shared by the
+    two-aggregation corpus queries (tfidf_top_term, doc_token_rarity,
+    oov_rate_docs): one persisted tokenize pass replaces two when
+    ``docs``' footer bound sits between the TOKEN_PERSIST_* crossovers.
+    A corpus whose size cannot be proven streams — the cache's size
+    is the corpus's."""
+    return persist_if_big(toks, docs, TOKEN_PERSIST_MIN_SOURCE_ROWS,
+                          TOKEN_PERSIST_MAX_SOURCE_ROWS)
 
 
 def _shared_minhash_stacked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -703,22 +699,20 @@ def dedup_pipeline_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build per corpus, _shared_minhash_stacked); the pair frame feeds
     # BOTH the posting-list prune and the pair semi-join inside
     # ngram_jaccard_pairs, so persist it (tiny — pairs only). Gated
-    # (r13) on the corpus footer bound like every other staged persist:
-    # the Jaccard verify these frames cache is expensive per doc, so the
-    # crossover sits at hundreds of docs, far below the operator-level
-    # 16384 default — only toy corpora keep the fused plan.
-    cands = _persist_verify_tier(
+    # (r13) on the corpus footer bound like every other staged persist.
+    cands = persist_if_big(
         minhash_candidates_from_stacked(_shared_minhash_stacked(
-            spark, sf_dir)), docs)
+            spark, sf_dir)), docs, VERIFY_PERSIST_MIN_SOURCE_ROWS)
     # the verified-pair table is the NEXT staged artifact after the
     # signatures: survivor selection here and cluster assignment
     # (dedup_cluster_assign) consume the SAME pairs, so persist them —
     # the cache manager dedupes by logical plan and the second consumer
     # skips the whole Jaccard verify (a production crawl materializes
     # exactly this table between its verify and cluster stages)
-    verified = _persist_verify_tier(
+    verified = persist_if_big(
         ngram_jaccard_pairs(docs, "text", "doc_id", n=5,
-                            threshold=0.5, candidates=cands), docs)
+                            threshold=0.5, candidates=cands),
+        docs, VERIFY_PERSIST_MIN_SOURCE_ROWS)
     removed = verified.select(F.col("id_b").alias("doc_id")).distinct()
     return docs.join(F.broadcast(removed), on="doc_id",
                      how="left_anti").select("doc_id", "n_chars")
@@ -789,10 +783,10 @@ def cross_corpus_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    stacked.filter(~is_new))
     # reuse the self-join verifier on the union frame: ids are globally
     # unique, and the candidate set already constrains pairs to new↔ref
-    pairs = _persist_verify_tier(cand.select(
+    pairs = persist_if_big(cand.select(
         F.least("id_new", "id_ref").alias("id_a"),
         F.greatest("id_new", "id_ref").alias("id_b"),
-    ), docs)
+    ), docs, VERIFY_PERSIST_MIN_SOURCE_ROWS)
     # persist the verified pairs too (r12): the removed-set union below
     # consumes them through BOTH legs (id_a and id_b), and without the
     # persist each leg re-ran the whole Jaccard verify — including its
@@ -801,9 +795,10 @@ def cross_corpus_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair-table treatment as dedup_pipeline_survivors' verified frame;
     # pairs-only, tiny; gated (r13) on the corpus footer bound with the
     # verify-tier crossover.
-    verified = _persist_verify_tier(
+    verified = persist_if_big(
         ngram_jaccard_pairs(docs, "text", "doc_id", n=5,
-                            threshold=0.5, candidates=pairs), docs)
+                            threshold=0.5, candidates=pairs),
+        docs, VERIFY_PERSIST_MIN_SOURCE_ROWS)
     removed = (
         verified.select(F.col("id_a").alias("doc_id"))
         .unionByName(verified.select(F.col("id_b").alias("doc_id")))
@@ -890,16 +885,17 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from imp_etl_spark.operators.graph import cluster_assignments
 
     docs = read_table(spark, sf_dir, "documents")
-    cands = _persist_verify_tier(
+    cands = persist_if_big(
         minhash_candidates_from_stacked(_shared_minhash_stacked(
-            spark, sf_dir)), docs)
+            spark, sf_dir)), docs, VERIFY_PERSIST_MIN_SOURCE_ROWS)
     # same logical plan as dedup_pipeline_survivors' verified frame —
     # the persist makes the shared Jaccard verify a cache hit when both
     # run in one session (the staged pair-table artifact); gated (r13)
     # on the corpus footer bound with the verify-tier crossover
-    verified = _persist_verify_tier(
+    verified = persist_if_big(
         ngram_jaccard_pairs(docs, "text", "doc_id", n=5,
-                            threshold=0.5, candidates=cands), docs)
+                            threshold=0.5, candidates=cands),
+        docs, VERIFY_PERSIST_MIN_SOURCE_ROWS)
     return cluster_assignments(docs.select("doc_id"), verified,
                                id_col="doc_id")
 

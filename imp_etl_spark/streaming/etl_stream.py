@@ -36,7 +36,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from imp_etl_spark.operators.util import release_query_caches
 from imp_etl_spark.plans.pipeline import build_pipeline
-from imp_etl_spark.plans.upsert import merge_upsert
+from imp_etl_spark.plans.upsert import merge_upsert, sink_layout
 
 
 def run_etl_stream(spark: SparkSession, queue_stream: DataFrame,
@@ -71,30 +71,23 @@ def run_etl_stream(spark: SparkSession, queue_stream: DataFrame,
     tkey = transaction_key or ["voucher_details_id", "reference_no"]
 
     def _epoch(batch_queue: DataFrame, epoch_id: int) -> None:
-        # fused dedup↔bucket layout, same as the batch runner (r13):
-        # each branch exchanges once on the sink's bucket expression;
-        # files_per_bucket 'auto' keeps the fused sort scale-adaptive
-        # (see plans/runner.py)
-        from imp_etl_spark.plans.upsert import DEFAULT_BUCKETS
-
-        fpb_raw = spark.conf.get(
-            "spark.imp_etl.etlSink.filesPerBucket", "auto")
-        fpb = (max(1, spark.sparkContext.defaultParallelism
-                   // DEFAULT_BUCKETS)
-               if fpb_raw == "auto" else max(1, int(fpb_raw)))
+        # fused dedup↔bucket layout in each table's own bucket count,
+        # same as the batch runner (plans/runner.py)
+        v_nb, v_fpb = sink_layout(spark, voucher_path)
+        t_nb, t_fpb = sink_layout(spark, txn_path)
         result = build_pipeline(batch_queue, voucher, transaction,
                                 voucher_key=vkey, transaction_key=tkey,
                                 order_col=order_col, compat=compat,
-                                sink_buckets=DEFAULT_BUCKETS,
-                                sink_files_per_bucket=fpb)
+                                sink_buckets=(v_nb, t_nb),
+                                sink_files_per_bucket=(v_fpb, t_fpb))
         # the branches end in their own per-key dedup on the same keys,
         # so the merge's defensive re-dedup Window pass is skipped
         merge_upsert(spark, voucher_path, result.voucher.valid, vkey,
-                     order_col, batch_is_unique=True,
-                     files_per_bucket=fpb, batch_pre_clustered=True)
+                     order_col, n_buckets=v_nb, files_per_bucket=v_fpb,
+                     batch_is_unique=True, batch_pre_clustered=True)
         merge_upsert(spark, txn_path, result.transaction.valid, tkey,
-                     order_col, batch_is_unique=True,
-                     files_per_bucket=fpb, batch_pre_clustered=True)
+                     order_col, n_buckets=t_nb, files_per_bucket=t_fpb,
+                     batch_is_unique=True, batch_pre_clustered=True)
         # the merges executed both observed plans: mark the branches so
         # the counter reads below come free from observe() instead of
         # re-running two count() jobs per epoch (same contract as the

@@ -395,25 +395,22 @@ class TestPrefixSum:
             want[k] = acc
         assert out == want
 
-    def test_no_single_partition_window_when_big(self, spark):
+    def test_no_single_partition_window_when_big(self, spark,
+                                                 monkeypatch):
         """The skew-safety contract after the r13 small-frame dispatch:
         a frame NOT proven small (threshold forced to 0 here — stand-in
         for a corpus-scale input) must keep the distributed range/offset
         machinery, never a single-partition window. Provably small
         frames take the single-sort path by design (pinned value-equal
         in test_r13_optimizations)."""
-        from imp_etl_spark.operators.window import prefix_sum
-        conf = "spark.imp_etl.prefixSum.maxSingleSortRows"
-        spark.conf.set(conf, "0")
-        try:
-            df = spark.range(100).select(
-                F.col("id").alias("k"), F.lit(1).alias("v"))
-            out = prefix_sum(df, ["k"], "v", num_partitions=8)
-            out.collect()
-            plan = out._jdf.queryExecution().executedPlan().toString()
-            assert "SinglePartition" not in plan
-        finally:
-            spark.conf.unset(conf)
+        from imp_etl_spark.operators import window
+        monkeypatch.setattr(window, "PREFIX_SUM_MAX_SINGLE_SORT_ROWS", 0)
+        df = spark.range(100).select(
+            F.col("id").alias("k"), F.lit(1).alias("v"))
+        out = window.prefix_sum(df, ["k"], "v", num_partitions=8)
+        out.collect()
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "SinglePartition" not in plan
 
 
 class TestGroupRank:

@@ -67,7 +67,8 @@ def test_randomized_differential_seed_is_clean(spark, seed):
     assert not bad, f"seed {seed}: {bad[:5]}"
 
 
-def test_randomized_differential_seed919_forced_seq_is_clean(spark):
+def test_randomized_differential_seed919_forced_seq_is_clean(spark,
+                                                            monkeypatch):
     """Round-10 finding-bearer, forced-seq class: seeds 919-924 all
     caught rolling_24h_user_value's seq shape mishandling NULL values
     (a prefix DIFFERENCE cannot distinguish "no values in frame" from
@@ -77,9 +78,8 @@ def test_randomized_differential_seed919_forced_seq_is_clean(spark):
     test_skew.py. Pinned under the same forced mode that surfaced it."""
     from fuzz_differential import run_seed
 
-    spark.conf.set("spark.imp_etl.lagDispatch.mode", "seq")
-    try:
-        bad = run_seed(spark, 919, workers=16)
-    finally:
-        spark.conf.set("spark.imp_etl.lagDispatch.mode", "auto")
+    from imp_etl_spark.operators import window
+
+    monkeypatch.setattr(window, "LAG_MODE", "seq")
+    bad = run_seed(spark, 919, workers=16)
     assert not bad, f"seed 919 (forced seq): {bad[:5]}"

@@ -570,6 +570,32 @@ def test_rebucket_grows_layout_and_partial_merges_resume(spark, tmp_path):
     assert state[5] == "updated" and len(state) == 400
 
 
+def test_run_etl_keeps_the_tables_bucket_count(spark, tmp_path):
+    """A cron fire after ``rebucket`` merges in the table's new bucket
+    count: the voucher manifest keeps ``n_buckets == 8`` and the
+    buckets the second fire does not touch carry by reference."""
+    from imp_etl_spark.plans.upsert import (
+        _latest_version,
+        _read_manifest,
+        rebucket,
+    )
+
+    queue, voucher, txn = make_frames(spark)
+    v_path, t_path = str(tmp_path / "v"), str(tmp_path / "t")
+    summary = run_etl(spark, queue, voucher, txn, v_path, t_path)
+    man1 = _read_manifest(v_path, rebucket(spark, v_path, 8))
+    # the second fire sees only the last queue row (REF-2's V3)
+    run_etl(spark, queue, voucher, txn, v_path, t_path,
+            watermark=summary["watermark"] - 1)
+    man2 = _read_manifest(v_path, _latest_version(v_path))
+    assert man2["n_buckets"] == 8
+    carried = [b for b, rel in man1["buckets"].items()
+               if man2["buckets"].get(b) == rel]
+    assert carried and len(carried) == len(man1["buckets"]) - 1, (
+        man1["buckets"], man2["buckets"])
+    assert read_target(spark, v_path).count() == 3
+
+
 def test_point_lookup_reads_single_bucket_dir(spark, tmp_path):
     """lookup() prunes at the path level: the scan's input files all
     come from the one bucket directory the key hashes to, and the

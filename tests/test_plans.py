@@ -6,31 +6,24 @@ wrong plan is how 100 TB jobs die; these tests pin the plan."""
 
 from __future__ import annotations
 
+from unittest import mock
+
 from pyspark.sql import functions as F
 
+from imp_etl_spark.operators import window as W
 from imp_etl_spark.operators.util import release_query_caches
 from imp_etl_spark.queries import REGISTRY
 from tests.conftest import SF_DIR
 
 
-
-from contextlib import contextmanager
-
-
-@contextmanager
 def _force_distributed(spark):
     """Pin the skew-safe DISTRIBUTED machinery shape (r13): provably
     small frames now dispatch to a single-partition sort (value-equal,
     pinned at the end of this file), so plan pins that exist to
     guarantee the at-scale shape force the big path — a corpus-scale
     frame can never take the small path (it is count-proven), so the
-    shape under this conf IS the shape at 100 TB."""
-    conf = "spark.imp_etl.prefixSum.maxSingleSortRows"
-    spark.conf.set(conf, "0")
-    try:
-        yield
-    finally:
-        spark.conf.unset(conf)
+    shape with the crossover at 0 IS the shape at 100 TB."""
+    return mock.patch.object(W, "PREFIX_SUM_MAX_SINGLE_SORT_ROWS", 0)
 
 
 def _executed(df) -> str:
@@ -679,18 +672,10 @@ def test_prefix_sum_small_path_matches_distributed(spark):
 
     rows = [("g%d" % (i % 3), i, (i * 7) % 11) for i in range(500)]
     df = spark.createDataFrame(rows, "g string, k int, v int")
-    conf = "spark.imp_etl.prefixSum.maxSingleSortRows"
-    old = spark.conf.get(conf, None)
-    try:
-        spark.conf.set(conf, "1000000")  # small path
+    with mock.patch.object(W, "PREFIX_SUM_MAX_SINGLE_SORT_ROWS", 1000000):
         small = _rows(prefix_sum(df, ["g", "k"], "v", out_col="cum"))
-        spark.conf.set(conf, "0")        # force the distributed machinery
+    with _force_distributed(spark):
         big = _rows(prefix_sum(df, ["g", "k"], "v", out_col="cum"))
-    finally:
-        if old is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, old)
     assert small == big
 
 
@@ -699,17 +684,9 @@ def test_global_index_unique_order_small_path_matches(spark):
 
     df = spark.range(0, 700).select(
         (F.col("id") * 13 % 701).alias("ord"), F.col("id").alias("payload"))
-    conf = "spark.imp_etl.prefixSum.maxSingleSortRows"
-    old = spark.conf.get(conf, None)
-    try:
-        spark.conf.set(conf, "1000000")
+    with mock.patch.object(W, "PREFIX_SUM_MAX_SINGLE_SORT_ROWS", 1000000):
         small = _rows(global_index(df, "ord", "rn", unique_order=True))
-        spark.conf.set(conf, "0")
+    with _force_distributed(spark):
         big = _rows(global_index(df, "ord", "rn", unique_order=True))
         legacy = _rows(global_index(df, "ord", "rn"))
-    finally:
-        if old is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, old)
     assert small == big == legacy

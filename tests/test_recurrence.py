@@ -9,10 +9,12 @@ from __future__ import annotations
 
 import math
 import random
+from unittest import mock
 
 import pytest
 from pyspark.sql import functions as F  # noqa: F401
 
+from imp_etl_spark.operators import recurrence
 from imp_etl_spark.operators.recurrence import _chunk_size, ewma_scan
 
 
@@ -171,13 +173,12 @@ def test_ewma_final_matches_scan_and_fold(spark):
     got_drv = {r["user"]: (r["n_events"], r["ewma_final"])
                for r in ewma_final(df, ["user"], ["ts", "eid"], "v",
                                    alpha).collect()}
-    spark.conf.set("spark.imp_etl.ewmaScan.driverChainRows", "0")
-    try:
+    # a driver-chain cap of 0 rows: every non-empty summary frame
+    # overflows the probe and takes the distributed chain
+    with mock.patch.object(recurrence, "EWMA_DRIVER_CHAIN_ROWS", 0):
         got_dist = {r["user"]: (r["n_events"], r["ewma_final"])
                     for r in ewma_final(df, ["user"], ["ts", "eid"],
                                         "v", alpha).collect()}
-    finally:
-        spark.conf.unset("spark.imp_etl.ewmaScan.driverChainRows")
     assert got_drv == got_dist  # raw-double equality
     s = ewma_scan(df, ["user"], ["ts", "eid"], "v", alpha)
     via_scan = {r["user"]: (r["n"], r["f"]) for r in
@@ -215,9 +216,6 @@ def test_ewma_scan_driver_chain_bitequal_pandas_chain(spark, tmp_path):
 
     for chunk in (64, None):
         a = run(chunk)
-        spark.conf.set("spark.imp_etl.ewmaScan.driverChainRows", "0")
-        try:
+        with mock.patch.object(recurrence, "EWMA_DRIVER_CHAIN_ROWS", 0):
             b = run(chunk)
-        finally:
-            spark.conf.unset("spark.imp_etl.ewmaScan.driverChainRows")
         assert a == b, chunk  # raw-double equality, every row

@@ -3,6 +3,8 @@ invisible: same answer as the unsalted plan, skew or not."""
 
 from __future__ import annotations
 
+from unittest import mock
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -123,12 +125,13 @@ def test_top_key_share_memo(spark, tmp_path):
     release_probe_memo()
 
 
-def test_lag_dispatch_modes_and_auto(spark):
+def test_lag_dispatch_modes_and_auto(spark, monkeypatch):
     """lag_dispatch: the window and seq shapes are value-identical;
     auto picks seq on a hot-key frame and window on a uniform one
-    (resolve_lag_mode), and the conf override forces either."""
+    (resolve_lag_mode), and LAG_MODE forces either."""
     import random
 
+    from imp_etl_spark.operators import window
     from imp_etl_spark.operators.window import (
         lag_dispatch,
         resolve_lag_mode,
@@ -160,12 +163,9 @@ def test_lag_dispatch_modes_and_auto(spark):
                 key=lambda t: t[2])
         assert outs["window"] == outs["seq"]
 
-    # conf override path
-    spark.conf.set("spark.imp_etl.lagDispatch.mode", "seq")
-    try:
-        assert resolve_lag_mode(uni.select("user"), ["user"]) == "seq"
-    finally:
-        spark.conf.set("spark.imp_etl.lagDispatch.mode", "auto")
+    # forced-mode constant path
+    monkeypatch.setattr(window, "LAG_MODE", "seq")
+    assert resolve_lag_mode(uni.select("user"), ["user"]) == "seq"
 
 
 def test_state_intervals_dispatch_shapes_equal(spark):
@@ -192,8 +192,9 @@ def test_lag_dispatch_row_floor(spark, tmp_path, monkeypatch):
     """r10 metadata row floor: a bare local parquet scan whose footers
     prove the frame small resolves to "window" WITHOUT running the
     probe (proven by poisoning top_key_share to raise); a floor below
-    the row count, floor=0, or a non-scan plan all fall through to the
-    probe; and lag_dispatch stays value-identical floor-on vs -off."""
+    the row count (also one row below it) or a non-scan plan falls
+    through to the probe; and lag_dispatch stays value-identical
+    floor-on vs -off."""
     from imp_etl_spark.operators import window as W
 
     p = str(tmp_path / "hot.parquet")
@@ -215,21 +216,16 @@ def test_lag_dispatch_row_floor(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
 
     # floor below the actual row count -> probe runs -> hot share wins
-    spark.conf.set("spark.imp_etl.lagDispatch.rowFloor", "100")
-    try:
-        assert W.resolve_lag_mode(
-            scan.select("user"), ["user"]) == "seq"
-    finally:
-        spark.conf.unset("spark.imp_etl.lagDispatch.rowFloor")
+    monkeypatch.setattr(W, "LAG_ROW_FLOOR", 100)
+    assert W.resolve_lag_mode(
+        scan.select("user"), ["user"]) == "seq"
     W.release_probe_memo()
 
-    # floor=0 disables entirely
-    spark.conf.set("spark.imp_etl.lagDispatch.rowFloor", "0")
-    try:
-        assert W.resolve_lag_mode(
-            scan.select("user"), ["user"]) == "seq"
-    finally:
-        spark.conf.unset("spark.imp_etl.lagDispatch.rowFloor")
+    # one row below the count: the footer bound no longer proves it
+    monkeypatch.setattr(W, "LAG_ROW_FLOOR", 399)
+    assert W.resolve_lag_mode(
+        scan.select("user"), ["user"]) == "seq"
+    monkeypatch.undo()
     W.release_probe_memo()
 
     # a cardinality-changing plan (union doubles rows) must not use
@@ -240,18 +236,15 @@ def test_lag_dispatch_row_floor(spark, tmp_path, monkeypatch):
 
     # floor-on vs floor-off value equality in auto mode (fuzz axis)
     outs = {}
-    for floor in ("10000000", "0"):
-        spark.conf.set("spark.imp_etl.lagDispatch.rowFloor", floor)
-        try:
-            outs[floor] = sorted(
-                (tuple(r) for r in W.lag_dispatch(
-                    scan, ["user"], ["ts"], lags={"v": "pv"},
-                    leads={"ts": "nts"}).collect()),
-                key=lambda t: t[1])
-        finally:
-            spark.conf.unset("spark.imp_etl.lagDispatch.rowFloor")
+    for floor in (10_000_000, 100):
+        monkeypatch.setattr(W, "LAG_ROW_FLOOR", floor)
+        outs[floor] = sorted(
+            (tuple(r) for r in W.lag_dispatch(
+                scan, ["user"], ["ts"], lags={"v": "pv"},
+                leads={"ts": "nts"}).collect()),
+            key=lambda t: t[1])
         W.release_probe_memo()
-    assert outs["10000000"] == outs["0"]
+    assert outs[10_000_000] == outs[100]
 
 
 def test_rows_at_most_bounds(spark, tmp_path):
@@ -292,7 +285,8 @@ def test_footer_row_bound(spark, tmp_path):
     assert _footer_row_bound(scan.join(scan, "id")) is None
 
 
-def test_trailing_dispatch_boundary_and_derived_support(spark, tmp_path):
+def test_trailing_dispatch_boundary_and_derived_support(spark, tmp_path,
+                                                       monkeypatch):
     """r11: (a) ADVICE off-by-one — at total == hot_rows with one
     dominant key the metadata path and the probe must agree (seq);
     (b) VERDICT item 3 — the probe support auto-derives from the
@@ -307,8 +301,8 @@ def test_trailing_dispatch_boundary_and_derived_support(spark, tmp_path):
                           "user STRING, x LONG").write.parquet(pa)
     W.release_probe_memo()
     probe = spark.read.parquet(pa).select("user")
-    assert W.resolve_trailing_mode(probe, ["user"],
-                                   hot_rows=1000) == "seq"
+    monkeypatch.setattr(W, "TRAILING_HOT_ROWS", 1000)
+    assert W.resolve_trailing_mode(probe, ["user"]) == "seq"
 
     # (b) 100k rows, hot key 600 rows = 0.6% share, hot_rows=400:
     # fixed support 0.01 cannot see it (freqItems only guarantees
@@ -320,7 +314,8 @@ def test_trailing_dispatch_boundary_and_derived_support(spark, tmp_path):
         .otherwise(F.concat(F.lit("u"), F.col("id"))).alias("user")) \
         .write.parquet(pb)
     probe_b = spark.read.parquet(pb).select("user")
-    # the support that actually reaches the probe: explicit conf wins;
+    # the support that actually reaches the probe: a set
+    # TRAILING_SUPPORT wins;
     # otherwise footer-derived (asserting 'window' under the 0.01
     # default would be flaky — freqItems returns a SUPERSET, so a
     # below-support key CAN get lucky; the guarantee is one-sided)
@@ -332,16 +327,14 @@ def test_trailing_dispatch_boundary_and_derived_support(spark, tmp_path):
         return real_stats(df, keys, support, memo=memo)
 
     W.release_probe_memo()
+    monkeypatch.setattr(W, "TRAILING_HOT_ROWS", 400)
     try:
         W.top_key_stats = spying_stats
-        spark.conf.set("spark.imp_etl.trailingAgg.support", "0.01")
-        try:
-            W.resolve_trailing_mode(probe_b, ["user"], hot_rows=400)
-        finally:
-            spark.conf.unset("spark.imp_etl.trailingAgg.support")
+        with monkeypatch.context() as m:
+            m.setattr(W, "TRAILING_SUPPORT", 0.01)
+            W.resolve_trailing_mode(probe_b, ["user"])
         W.release_probe_memo()
-        assert W.resolve_trailing_mode(probe_b, ["user"],
-                                       hot_rows=400) == "seq"
+        assert W.resolve_trailing_mode(probe_b, ["user"]) == "seq"
     finally:
         W.top_key_stats = real_stats
     assert seen == [0.01, 0.5 * 400 / 100_000]
@@ -431,7 +424,7 @@ def test_trailing_time_sums_modes_bitequal(spark):
 
 def test_trailing_time_sums_auto_dispatch(spark):
     """auto mode picks seq when the hottest key's absolute count
-    crosses trailingAgg.hotRows and window otherwise (count-based —
+    crosses TRAILING_HOT_ROWS and window otherwise (count-based —
     the quadratic sliding-frame cost depends on size, not share)."""
     from imp_etl_spark.operators import window as W
 
@@ -452,8 +445,7 @@ def test_trailing_time_sums_auto_dispatch(spark):
     # lowered to 100, the 720-row hot key -> seq plan (no per-key
     # RANGE Window node) while the uniform frame (16 rows/key) ->
     # window plan (has one)
-    spark.conf.set("spark.imp_etl.trailingAgg.hotRows", "100")
-    try:
+    with mock.patch.object(W, "TRAILING_HOT_ROWS", 100):
         plan_hot = W.trailing_time_sums(
             hot, "user", "ts", "'1' hour", sums={"s": "one"})._jdf \
             .queryExecution().optimizedPlan().toString()
@@ -462,8 +454,6 @@ def test_trailing_time_sums_auto_dispatch(spark):
             uni, "user", "ts", "'1' hour", sums={"s": "one"})._jdf \
             .queryExecution().optimizedPlan().toString()
         assert "specifiedwindowframe(RangeFrame" in plan_uni
-    finally:
-        spark.conf.unset("spark.imp_etl.trailingAgg.hotRows")
     # default cap (50k): both tiny frames stay on the window shape
     plan_hot2 = W.trailing_time_sums(
         hot, "user", "ts", "'1' hour", sums={"s": "one"})._jdf \

@@ -53,10 +53,13 @@ def test_minhash_index_write_is_coalesced(spark, tmp_path, docs_parquet):
 
 
 def test_minhash_index_files_scale_with_row_bound(spark, tmp_path,
-                                                  docs_parquet):
-    """rowsPerFile drives files-per-band: forcing it tiny must split
-    each band into ceil(docs / rowsPerFile) files (the 100 TB growth
-    path), still bit-identical to the inline signatures."""
+                                                  docs_parquet,
+                                                  monkeypatch):
+    """MINHASH_INDEX_ROWS_PER_FILE drives files-per-band: forcing it
+    tiny must split each band into ceil(docs / rows per file) files (the
+    100 TB growth path), still bit-identical to the inline
+    signatures."""
+    from imp_etl_spark.operators import dedup
     from imp_etl_spark.operators.dedup import (
         build_minhash_index,
         minhash_stacked,
@@ -64,13 +67,10 @@ def test_minhash_index_files_scale_with_row_bound(spark, tmp_path,
     )
 
     path = str(tmp_path / "mh_index_split")
-    spark.conf.set("spark.imp_etl.minhashIndex.rowsPerFile", "20")
-    try:
-        build_minhash_index(docs_parquet, path, "text", "doc_id",
-                            shingle_k=3, num_hashes=12, bands=4)
-    finally:
-        spark.conf.unset("spark.imp_etl.minhashIndex.rowsPerFile")
-    # 60 docs / 20 rowsPerFile = 3 sub-files per band (hash split — a
+    monkeypatch.setattr(dedup, "MINHASH_INDEX_ROWS_PER_FILE", 20)
+    build_minhash_index(docs_parquet, path, "text", "doc_id",
+                        shingle_k=3, num_hashes=12, bands=4)
+    # 60 docs / 20 rows per file = 3 sub-files per band (hash split — a
     # hash-empty sub would drop a file, so allow <=, require > 1)
     for band in range(4):
         n = len(_parquet_files(os.path.join(path, f"band={band}")))
@@ -153,9 +153,10 @@ def test_ivf_index_write_is_coalesced(spark, tmp_path):
 def test_persist_if_big_gates_on_footer_bound(spark, tmp_path):
     """persist_if_big: a provably tiny parquet source keeps the
     unpersisted plan; a big (or unprovable) source persists — and the
-    threshold is conf-driven."""
+    threshold is the caller's."""
     from imp_etl_spark.operators import util
     from imp_etl_spark.operators.util import (
+        PERSIST_MIN_SOURCE_ROWS,
         persist_if_big,
         release_query_caches,
     )
@@ -167,22 +168,52 @@ def test_persist_if_big_gates_on_footer_bound(spark, tmp_path):
     derived = src.select((F.col("id") * 2).alias("x"))
 
     # 100 rows < default 16384: no persist
-    out = persist_if_big(derived, src)
+    out = persist_if_big(derived, src, PERSIST_MIN_SOURCE_ROWS)
     assert out.storageLevel.useMemory is False
 
     # force the threshold below the bound: persists + owner-tracked
     release_query_caches()
-    spark.conf.set("spark.imp_etl.persist.minSourceRows", "10")
     try:
-        out2 = persist_if_big(derived, src)
+        out2 = persist_if_big(derived, src, 10)
         assert out2.storageLevel.useMemory is True
         assert util._QUERY_PERSISTS == [out2]
     finally:
-        spark.conf.unset("spark.imp_etl.persist.minSourceRows")
         release_query_caches()
 
     # unprovable source (in-memory frame): safe assumption is big
     mem = spark.createDataFrame([(1,)], ["id"])
-    out3 = persist_if_big(mem.select("id"), mem)
+    out3 = persist_if_big(mem.select("id"), mem, PERSIST_MIN_SOURCE_ROWS)
     assert out3.storageLevel.useMemory is True
     out3.unpersist()
+
+
+def test_token_gate_streams_unprovable_corpus(spark, tmp_path):
+    """The token-stream gate never caches a corpus whose size cannot be
+    proven (an in-memory or joined ``docs``): that frame is ~corpus
+    bytes, so the two-pass streaming plan is the side of the trade that
+    survives any size. A footer-provable corpus inside the crossover
+    window still persists."""
+    from imp_etl_spark.operators import util
+    from imp_etl_spark.queries_llm import _persist_if_token_scale
+
+    def toks(docs):
+        return docs.select("doc_id", F.explode(
+            F.split("text", " ")).alias("tok"))
+
+    mem = spark.createDataFrame(
+        [(i, f"w{i} w{i % 7}") for i in range(5000)],
+        "doc_id LONG, text STRING")
+    util.release_query_caches()
+    for docs in (mem, mem.join(mem.select("doc_id"), "doc_id")):
+        out = _persist_if_token_scale(toks(docs), docs)
+        assert out.storageLevel.useMemory is False
+    assert util._QUERY_PERSISTS == []
+
+    p = str(tmp_path / "docs.parquet")
+    mem.write.parquet(p)
+    on_disk = spark.read.parquet(p)
+    try:
+        out = _persist_if_token_scale(toks(on_disk), on_disk)
+        assert util._QUERY_PERSISTS == [out]
+    finally:
+        util.release_query_caches()

@@ -460,22 +460,22 @@ def main() -> int:
                          "for the similarity tier")
     ap.add_argument("--lag-mode", choices=("auto", "window", "seq"),
                     default="auto",
-                    help="force the lag-class dispatch: 'seq' on "
+                    help="set window.LAG_MODE: 'seq' on "
                          "STANDARD (near-uniform) fixtures drives "
                          "seq_lag's multi-key carry chain — many short "
                          "keys straddling each range-partition edge, "
                          "the opposite degenerate shape from --edge's "
                          "one hot key (seed namespace 901+)")
-    ap.add_argument("--row-floor", default=None,
-                    help="override spark.imp_etl.lagDispatch.rowFloor: "
-                         "'0' disables the r10 metadata row-count floor "
-                         "so auto-mode dispatch PROBES even tiny fuzz "
+    ap.add_argument("--row-floor", type=int, default=None,
+                    help="set window.LAG_ROW_FLOOR: '0' makes the r10 "
+                         "metadata row-count floor prove nothing, so "
+                         "auto-mode dispatch PROBES even tiny fuzz "
                          "fixtures (floor-off) instead of taking the "
                          "window fast path (floor-on, the default) — "
                          "the two runs must be value-identical vs the "
                          "oracle (seed namespace 1101+)")
-    ap.add_argument("--trailing-hotrows", default=None,
-                    help="override spark.imp_etl.trailingAgg.hotRows: "
+    ap.add_argument("--trailing-hotrows", type=int, default=None,
+                    help="set window.TRAILING_HOT_ROWS: "
                          "a SMALL value (e.g. '200') makes random fuzz "
                          "fixtures cross the trailing-RANGE seq "
                          "trigger, driving the r11 footer-DERIVED "
@@ -486,14 +486,13 @@ def main() -> int:
     args = ap.parse_args()
     spark = get_spark("fuzz-differential")
     spark.sparkContext.setLogLevel("FATAL")
-    if args.lag_mode != "auto":
-        spark.conf.set("spark.imp_etl.lagDispatch.mode", args.lag_mode)
+    from imp_etl_spark.operators import window
+
+    window.LAG_MODE = args.lag_mode
     if args.row_floor is not None:
-        spark.conf.set("spark.imp_etl.lagDispatch.rowFloor",
-                       args.row_floor)
+        window.LAG_ROW_FLOOR = args.row_floor
     if args.trailing_hotrows is not None:
-        spark.conf.set("spark.imp_etl.trailingAgg.hotRows",
-                       args.trailing_hotrows)
+        window.TRAILING_HOT_ROWS = args.trailing_hotrows
     failed = False
     for seed in args.seeds:
         bad = run_seed(spark, seed, workers=args.workers,

@@ -107,11 +107,11 @@ def main() -> None:
     print("Note (r13): `Exchange SinglePartition` counts include the"
           " prefix_sum/global_index PROVEN-SMALL dispatch — frames the"
           " operator counted at or under"
-          " `spark.imp_etl.prefixSum.maxSingleSortRows` before choosing a"
+          " `window.PREFIX_SUM_MAX_SINGLE_SORT_ROWS` before choosing a"
           " single-partition sort. These are documented, gated, and"
           " value-equal to the distributed machinery (pinned in"
-          " tests/test_r13_optimizations.py); the at-scale shape is"
-          " separately pinned under the forced-big conf in"
+          " tests/test_plans.py); the at-scale shape is"
+          " separately pinned with that crossover forced to 0 in"
           " tests/test_plans.py, so a corpus-scale frame can never plan"
           " one.")
     print()

@@ -1,16 +1,19 @@
-"""Round-13 optimization measurement harness.
+"""Plan dump and timing harness for the headline queries.
 
-For each headline query: capture ``explain("formatted")`` to
-``plans/r13/<name>_<tag>.txt`` and time the noop-sink write best-of-N
+For each query: write ``explain("formatted")`` to
+``<out_dir>/<name>_<tag>.txt`` and time the noop-sink write best-of-N
 (same timed region as bench.py, including EAGER_BUILD semantics), also
 recording how many Spark jobs each build+write triggers (eager probes /
 collects show up here).
 
 Usage:
-    PYTHONPATH=. python tools/r13_measure.py <tag> [query ...]
+    PYTHONPATH=. python tools/plan_dump.py <out_dir> <tag> [query ...]
 
-``tag`` is the plans/r13 suffix (``before`` / ``after``); with no query
-names, runs the full bench HEADLINE list.
+With no query names, runs the full bench HEADLINE list. ``REPEATS``
+(environment, default 4) sets N. Two checkouts' dumps of the same
+queries diff to prove a change leaves every plan alone: normalise
+expression ids (``#\\d+``), ``plan_id=\\d+`` and temp directory names
+first.
 """
 
 from __future__ import annotations
@@ -23,21 +26,23 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from imp_etl_spark.session import get_spark  # noqa: E402
+from imp_etl_spark.sources.parquet import DEFAULT_SF_DIR as SF_DIR  # noqa: E402
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-REPEATS = int(os.environ.get("R13_REPEATS", "4"))
+REPEATS = int(os.environ.get("REPEATS", "4"))
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    spark = get_spark("r13-measure")
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    plan_dir, tag = sys.argv[1], sys.argv[2]
+    spark = get_spark("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
 
     import bench
     from imp_etl_spark.queries import REGISTRY
     from imp_etl_spark.sources.parquet import read_table
 
-    names = sys.argv[2:] or list(bench.HEADLINE)
+    names = sys.argv[3:] or list(bench.HEADLINE)
 
     # same warmups as bench.py
     read_table(spark, SF_DIR, "lineitem").limit(1000).write.format(
@@ -55,19 +60,16 @@ def main() -> None:
         stacked = _shared_minhash_stacked(spark, SF_DIR)
         stacked.write.format("noop").mode("overwrite").save()
 
-    plan_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r13")
     os.makedirs(plan_dir, exist_ok=True)
 
     tracker = spark.sparkContext.statusTracker()
     out: dict[str, dict] = {}
     for name in names:
         fn, _ = REGISTRY[name]
-        spark.sparkContext.setJobDescription(f"r13:{name}")
+        spark.sparkContext.setJobDescription(f"plan-dump:{name}")
         best, times, jobs = None, [], None
         for attempt in range(REPEATS):
             j0 = len(tracker.getJobIdsForGroup(None) or [])
-            _j0 = j0
             t0 = time.perf_counter() if name in bench.EAGER_BUILD else None
             df = fn(spark, SF_DIR)
             if attempt == 0:
@@ -80,7 +82,7 @@ def main() -> None:
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
             times.append(round(dt, 3))
-            jobs = len(tracker.getJobIdsForGroup(None) or []) - _j0
+            jobs = len(tracker.getJobIdsForGroup(None) or []) - j0
             best = dt if best is None else min(best, dt)
         out[name] = {"best": round(best, 3), "times": times,
                      "jobs_last_attempt": jobs}

@@ -19,6 +19,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from imp_etl_spark.operators import window as W
 from imp_etl_spark.session import get_spark
 from imp_etl_spark.sources.parquet import read_table
 
@@ -559,7 +560,7 @@ def main_lagdispatch25x() -> None:
     # sits under the 10M default and would skip the probe entirely)
     # and the probe memo (released before every timed auto run below —
     # a memo hit would report probe overhead as ~0; ADVICE r9).
-    spark.conf.set("spark.imp_etl.lagDispatch.rowFloor", "0")
+    W.LAG_ROW_FLOOR = 0
     copies = int(os.environ.get("SCALE_COPIES", "25"))
     big = tempfile.mkdtemp(prefix="scale_lagdisp_")
     base = read_table(spark, SF_DIR, "events")
@@ -598,16 +599,15 @@ def main_lagdispatch25x() -> None:
                                   memo=False)
         times = {}
         for mode in ("window", "seq", "auto"):
-            spark.conf.set("spark.imp_etl.lagDispatch.mode", mode)
+            W.LAG_MODE = mode
             release_probe_memo()
             try:
                 # eager: both the probe (auto) and seq_lag run jobs at
                 # build time — lazy timing would exclude them
                 times[mode] = time_query(fn, spark, d, eager=True)
             finally:
-                spark.conf.set("spark.imp_etl.lagDispatch.mode", "auto")
-        picked = ("seq" if share >= float(spark.conf.get(
-            "spark.imp_etl.lagDispatch.threshold", "0.34")) else "window")
+                W.LAG_MODE = "auto"
+        picked = "seq" if share >= W.LAG_THRESHOLD else "window"
         print(f"| {name} | {share:.1%} | {times['window']:.2f} "
               f"| {times['seq']:.2f} | {times['auto']:.2f} | {picked} |")
     shutil.rmtree(big, ignore_errors=True)
@@ -729,10 +729,10 @@ def main_rollingtime25x() -> None:
             sums={"roll_sum": "__v6"}, count_col="roll_cnt",
             probe=read_table(spark, sf_dir, "events").select("user_id"))
 
-    spark.conf.set("spark.imp_etl.lagDispatch.mode", "window")
+    W.LAG_MODE = "window"
     fn(spark, SF_DIR).limit(1).write.format("noop").mode(
         "overwrite").save()  # warm codegen
-    spark.conf.set("spark.imp_etl.lagDispatch.mode", "auto")
+    W.LAG_MODE = "auto"
     print(f"| fixture ({copies}x) | top share | top rows | window (s) "
           "| seq (s) | auto (s) | auto picked |")
     print("|---|---|---|---|---|---|---|")
@@ -743,17 +743,15 @@ def main_rollingtime25x() -> None:
                                        memo=False)
         times = {}
         for mode in ("window", "seq", "auto"):
-            spark.conf.set("spark.imp_etl.lagDispatch.mode", mode)
+            W.LAG_MODE = mode
             release_probe_memo()
             try:
                 # eager: the seq shape's prefix/asof machinery runs
                 # jobs at build time
                 times[mode] = time_query(fn, spark, d, eager=True)
             finally:
-                spark.conf.set("spark.imp_etl.lagDispatch.mode", "auto")
-        picked = ("seq" if cnt >= int(spark.conf.get(
-            "spark.imp_etl.trailingAgg.hotRows", "50000"))
-            else "window")
+                W.LAG_MODE = "auto"
+        picked = "seq" if cnt >= W.TRAILING_HOT_ROWS else "window"
         print(f"| {name} | {share:.1%} | {cnt} | {times['window']:.2f} "
               f"| {times['seq']:.2f} | {times['auto']:.2f} | {picked} |")
     shutil.rmtree(big, ignore_errors=True)
@@ -875,16 +873,21 @@ def main_trailsupport() -> None:
     hot = read_table(spark, big, "events").filter(
         F.col("user_id") == 424242).count()
     print(f"fixture: {n} rows, hot key {hot} rows = {hot / n:.2%} share; "
-          f"hotRows threshold {spark.conf.get('spark.imp_etl.trailingAgg.hotRows', '50000')}")
+          f"hot-rows threshold {W.TRAILING_HOT_ROWS}")
 
     release_probe_memo()
     t0 = time.perf_counter()
-    fixed = resolve_trailing_mode(probe, ["user_id"], support=0.01)
+    W.TRAILING_SUPPORT = 0.01
+    try:
+        fixed = resolve_trailing_mode(probe, ["user_id"])
+    finally:
+        W.TRAILING_SUPPORT = None
     t_fixed = time.perf_counter() - t0
     release_probe_memo()
     t0 = time.perf_counter()
     share, cnt, key = top_key_stats(probe, ["user_id"],
-                                    support=0.5 * 50000 / n, memo=False)
+                                    support=0.5 * W.TRAILING_HOT_ROWS / n,
+                                    memo=False)
     t0 = time.perf_counter()
     release_probe_memo()
     auto = resolve_trailing_mode(probe, ["user_id"])
