@@ -12,6 +12,10 @@ out of big-data plans).
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 import threading
 
 from pyspark.sql import DataFrame
@@ -45,9 +49,8 @@ def spread_small_scan(df: DataFrame, min_partitions: int | None = None,
 # long-lived driver — the HTTP/cron controller, a streaming query —
 # would otherwise hold every query's intermediates until it exits.
 # ``release_query_caches`` is the single release path: the controller
-# calls it after every run and every scheduled epoch, and
-# ``run_etl_stream``'s ``on_epoch_end`` defaults to it. Nothing on a
-# query's own path releases, so one-shot drivers see plain
+# calls it after every run, and ``run_etl_stream`` after every epoch.
+# Nothing on a query's own path releases, so one-shot drivers see plain
 # session-lifetime caches. (The ETL's branch-point persist is NOT
 # here: the runner unpersists it after its own merge.)
 _QUERY_PERSISTS: list[DataFrame] = []
@@ -85,6 +88,31 @@ def release_query_caches(blocking: bool = False) -> int:
         except Exception:
             pass  # session already stopped — nothing to release
     return len(frames) + release_probe_memo()
+
+
+# One scratch root per process holds every directory a query writes for
+# itself (stream sources and checkpoints, on-disk indexes); it is made on
+# first use and removed at interpreter exit, so a long-lived driver or a
+# test run leaves nothing in the system temp directory.
+_SCRATCH_ROOT: str | None = None
+_SCRATCH_LOCK = threading.Lock()
+
+
+def _remove_scratch_root(root: str, pid: int) -> None:
+    if os.getpid() == pid:  # a forked child inherits the hook, not the root
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new empty directory named ``<prefix>...`` under this process's
+    scratch root, which is removed with everything in it at interpreter
+    exit."""
+    global _SCRATCH_ROOT
+    with _SCRATCH_LOCK:
+        if _SCRATCH_ROOT is None:
+            _SCRATCH_ROOT = tempfile.mkdtemp(prefix="imp_etl_scratch_")
+            atexit.register(_remove_scratch_root, _SCRATCH_ROOT, os.getpid())
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
 
 
 #: The operator-level persist crossover (r12): a multi-consumer frame

@@ -10,8 +10,9 @@ The reference wraps its pipeline in an HTTP control plane (SURVEY.md §3):
 same verbs drive Structured Streaming, whose scheduler serializes epochs
 — the overlap bug is structurally impossible:
 
-- ``run_once``     = start-etl-force (Trigger.AvailableNow, blocks)
-- ``schedule``     = start-etl (processing-time trigger = the cron clock)
+- ``run_once``     = start-etl-force (one ``run_etl`` fire, blocks)
+- ``schedule``     = start-etl (each epoch runs the same fire body on its
+  queue slice, as the reference's cron calls ``runEtlProcess`` too)
 - ``stop``         = stop-etl (in-flight epoch finishes, like task.stop())
 - ``status``       = etl-status (flag + schedule + durations, same keys)
 
@@ -58,8 +59,9 @@ class EtlController:
                  transaction: DataFrame, voucher_path: str, txn_path: str,
                  **kwargs) -> dict[str, Any]:
         """Synchronous single run; returns the reference-shaped summary
-        (etlService.js:576-583). Refuses while a schedule is active —
-        the isEtlRunning guard, minus its overlap hole."""
+        (etlService.js:576-583). ``kwargs`` go to ``run_etl``. Refuses
+        while a schedule is active — the isEtlRunning guard, minus its
+        overlap hole."""
         with self._guard:
             if self.is_running:
                 raise RuntimeError("ETL is already running; stop it first")
@@ -91,6 +93,10 @@ class EtlController:
         idempotence/watermark semantics match the interval path and
         fires serialize (a long epoch absorbs missed matches — the
         overlap the reference's isEtlRunning hole allowed, ST6).
+        ``kwargs`` are ``run_once``'s, minus ``watermark``. A failed
+        epoch (``run_etl_stream``) stops the interval query with its
+        error; on the cron path the scheduler records it and the next
+        fire replays the slice.
         ``clock``/``tick`` inject a test clock into the cron thread."""
         from imp_etl_spark.plans.cron import CronScheduler, classify_schedule
 
@@ -109,17 +115,14 @@ class EtlController:
                 self._query = run_etl_stream(
                     self.spark, queue_stream, voucher, transaction,
                     voucher_path, txn_path, checkpoint_dir,
-                    available_now=False, processing_time=kind[1],
-                    epoch_summaries=self.epoch_summaries,
-                    on_epoch_end=release_query_caches, **kwargs)
+                    processing_time=kind[1],
+                    epoch_summaries=self.epoch_summaries, **kwargs)
             else:
                 def _fire() -> None:
                     q = run_etl_stream(
                         self.spark, queue_stream, voucher, transaction,
                         voucher_path, txn_path, checkpoint_dir,
-                        available_now=True,
-                        epoch_summaries=self.epoch_summaries,
-                        on_epoch_end=release_query_caches, **kwargs)
+                        epoch_summaries=self.epoch_summaries, **kwargs)
                     # register the fire's query on the controller while
                     # the epoch runs (r11, ADVICE): stop() can then
                     # q.stop() an epoch that outlasts the scheduler

@@ -59,20 +59,6 @@ def format_uptime(seconds: float) -> str:
     return f"{s // 3600}h {(s // 60) % 60}m {s % 60}s"
 
 
-def parse_schedule(pattern: str) -> str | None:
-    """Map a schedule request onto a processing-time trigger interval.
-
-    Returns the interval string (Spark intervals pass through;
-    every-minute / ``*/N`` / hourly / daily cron shapes map onto the
-    equivalent cadence), or None when the pattern is NOT a
-    fixed-interval shape — which since round 10 no longer implies
-    invalid: calendar cron patterns are valid and run on the
-    wall-clock scheduler instead (``plans/cron.py`` —
-    ``classify_schedule`` is the full three-way classifier)."""
-    kind = classify_schedule(pattern)
-    return kind[1] if kind is not None and kind[0] == "interval" else None
-
-
 def parse_log_line(line: str) -> dict[str, str]:
     """``[ts] message`` -> {timestamp, message} (index.js:218-228)."""
     m = _TS_RE.match(line)
@@ -347,8 +333,7 @@ class EtlHttpServer:
         # guard under the lock, run outside it: a second force during a
         # long run must get the reference's 400, not queue behind it
         with self._lock:
-            if self.controller.is_running or getattr(
-                    self, "_forcing", False):
+            if self.controller.is_running or self._forcing:
                 h._json(400, {
                     "message": "ETL process is already running. Stop the "
                                "scheduler first or wait for it to complete.",

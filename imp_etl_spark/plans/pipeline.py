@@ -33,10 +33,9 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from imp_etl_spark.functions import cleanse
-from imp_etl_spark.operators.dedup import latest_per_key
 from imp_etl_spark.operators.join import semi_prune
 from imp_etl_spark.operators.util import spread_small_scan
-from imp_etl_spark.plans.upsert import _dedup_in_bucket_layout
+from imp_etl_spark.plans.upsert import DEFAULT_BUCKETS, _dedup_in_bucket_layout
 
 
 def clean_queue(queue: DataFrame) -> DataFrame:
@@ -55,7 +54,7 @@ def reference_keys(queue: DataFrame) -> DataFrame:
     return clean_queue(queue).select("reference_no").dropDuplicates(["reference_no"])
 
 
-def cleanse_voucher(df: DataFrame, compat: bool = True) -> DataFrame:
+def cleanse_voucher(df: DataFrame) -> DataFrame:
     """processVoucherData (etlService.js:118-156) as one projection of
     the SQL-text rules (``functions/cleanse.py``).
 
@@ -73,7 +72,7 @@ def cleanse_voucher(df: DataFrame, compat: bool = True) -> DataFrame:
             rules[f_] = cleanse.upper_trim(f_)
     for f_ in cleanse.VOUCHER_NUMERIC_FIELDS:
         if f_ in cols:
-            rules[f_] = cleanse.parse_float(f_, compat=compat)
+            rules[f_] = cleanse.parse_float(f_)
     for f_ in cleanse.VOUCHER_DATE_FIELDS:
         if f_ in cols:
             rules[f_] = cleanse.date_norm_utc(f_)
@@ -90,7 +89,7 @@ def _is_numeric_dtype(dtype: str) -> bool:
     return dtype.split("(")[0] in _NUMERIC_DTYPES
 
 
-def cleanse_transaction(df: DataFrame, compat: bool = True) -> DataFrame:
+def cleanse_transaction(df: DataFrame) -> DataFrame:
     """processTransactionData (etlService.js:259-297).
 
     The bool fields (ishold/isremove/isretransact) branch on the column's
@@ -103,13 +102,13 @@ def cleanse_transaction(df: DataFrame, compat: bool = True) -> DataFrame:
     rules = {}
     for f_ in cleanse.TXN_NUMERIC_FIELDS:
         if f_ in dtypes:
-            rules[f_] = cleanse.parse_float(f_, compat=compat)
+            rules[f_] = cleanse.parse_float(f_)
     if "payout" in dtypes:
         rules["payout"] = cleanse.char_flag("payout")
     for f_ in cleanse.TXN_BOOL_FIELDS:
         if f_ in dtypes:
             rules[f_] = cleanse.truthy_int(
-                f_, compat=compat, numeric=_is_numeric_dtype(dtypes[f_]))
+                f_, numeric=_is_numeric_dtype(dtypes[f_]))
     for f_ in cleanse.TXN_DATE_FIELDS:
         if f_ in dtypes:
             rules[f_] = cleanse.date_norm_utc(f_)
@@ -126,7 +125,7 @@ class BranchResult:
     from observe() in the runner."""
     valid: DataFrame          # cleansed, key-valid, deduped (ready to MERGE)
     skipped: DataFrame        # falsy-key rejects (P4/P5 side-output)
-    cleansed: DataFrame | None = None  # persisted branch point (unpersist me)
+    cleansed: DataFrame       # persisted branch point (unpersist me)
     # observe() metrics (A2/A3): recorded for free during the first action
     # that executes the branch (normally the MERGE write) — zero extra
     # passes. obs_cleansed -> {"skipped": n}; obs_valid -> {"processed": n}.
@@ -178,23 +177,20 @@ class PipelineResult:
 
 
 def _branch(entity: DataFrame, keys: DataFrame, pk: list[str],
-            cleanse_fn, order_col: str, compat: bool,
-            persist: bool, sink_buckets: int | None,
-            sink_files_per_bucket: int = 1) -> BranchResult:
+            cleanse_fn, order_col: str, sink_buckets: int,
+            sink_files_per_bucket: int) -> BranchResult:
     # cleanse is CPU-bound (regex/timestamp parsing); widen few-partition
     # local scans to all cores first (no-op on real multi-split tables).
     # probe=entity: the partition decision reads the raw scan, so the
     # semi join's broadcast isn't eagerly built just to count partitions
     pruned = spread_small_scan(semi_prune(entity, keys, "reference_no"),
                                probe=entity)
-    cleansed = cleanse_fn(pruned, compat=compat)
     invalid = cleanse.any_falsy_key(pk)
-    if persist:
-        # skipped side-output, missing-ref warnings and the MERGE all
-        # consume this node; persist turns the recomputation of
-        # scan->semi-join->cleanse into one pass (MEMORY_AND_DISK:
-        # spills rather than OOMs)
-        cleansed = cleansed.persist(StorageLevel.MEMORY_AND_DISK)
+    # skipped side-output, missing-ref warnings and the MERGE all
+    # consume this node; persist turns the recomputation of
+    # scan->semi-join->cleanse into one pass (MEMORY_AND_DISK: spills
+    # rather than OOMs)
+    cleansed = cleanse_fn(pruned).persist(StorageLevel.MEMORY_AND_DISK)
     # counters ride the data (A2): recorded when the MERGE executes the
     # branch — no dedicated count jobs. The observation sits ON TOP of
     # the persisted node, on the merge-bound lineage ONLY: the
@@ -210,21 +206,16 @@ def _branch(entity: DataFrame, keys: DataFrame, pk: list[str],
         obs_cleansed, F.sum(invalid.cast("long")).alias("skipped"))
     skipped = cleansed.filter(invalid)
     obs_valid = Observation(f"valid_{tag}")
-    # dedup fused into the sink's bucket layout when the sink's bucket
-    # count is known (r13): one exchange instead of hash(pk) +
-    # hash(bucket). The observe sits ON the post-dedup node either way,
-    # so "processed" counts exactly the deduped rows the MERGE writes
-    # (A2/A3 semantics unchanged).
-    deduped = (
-        _dedup_in_bucket_layout(observed.filter(~invalid), pk, order_col,
-                                sink_buckets, sink_files_per_bucket)
-        if sink_buckets else
-        latest_per_key(observed.filter(~invalid), pk, [order_col],
-                       desc=True))
+    # dedup fused into the sink's bucket layout (r13): one exchange
+    # instead of hash(pk) + hash(bucket). The observe sits ON the
+    # post-dedup node, so "processed" counts exactly the deduped rows
+    # the MERGE writes (A2/A3 semantics).
+    deduped = _dedup_in_bucket_layout(observed.filter(~invalid), pk,
+                                      order_col, sink_buckets,
+                                      sink_files_per_bucket)
     valid = deduped.observe(obs_valid,
                             F.count(F.lit(1)).alias("processed"))
-    return BranchResult(valid=valid, skipped=skipped,
-                        cleansed=cleansed if persist else None,
+    return BranchResult(valid=valid, skipped=skipped, cleansed=cleansed,
                         obs_cleansed=obs_cleansed, obs_valid=obs_valid)
 
 
@@ -263,24 +254,23 @@ def build_pipeline(queue: DataFrame, voucher: DataFrame,
                    voucher_key: list[str] | None = None,
                    transaction_key: list[str] | None = None,
                    order_col: str = "reference_no",
-                   compat: bool = True,
-                   persist: bool = True,
-                   sink_buckets: int | tuple[int, int] | None = None,
+                   sink_buckets: int | tuple[int, int] = DEFAULT_BUCKETS,
                    sink_files_per_bucket: int | tuple[int, int] = 1,
                    ) -> PipelineResult:
     """Assemble the full dataflow. All lazy — nothing executes here
-    (``persist`` only marks the branch points for caching).
+    (the branch points are only marked for caching; the caller
+    unpersists ``BranchResult.cleansed`` after its writes).
 
     ``sink_buckets``: the bucket count of the MERGE sink the branches
-    feed. When given, each branch's last-writer-wins dedup is fused
-    into the sink's bucket layout (one exchange on the bucket
-    expression instead of hash(pk) followed by the sink's
-    hash(bucket); see ``_dedup_in_bucket_layout``) and the caller
-    should pass ``batch_pre_clustered=True`` with the SAME
-    ``n_buckets`` (and ``files_per_bucket``) to ``merge_upsert``.
-    ``None`` keeps the plain hash(pk) dedup (callers that never hit
-    the bucketed sink). Either value may be a ``(voucher,
-    transaction)`` pair when the two tables' layouts differ."""
+    feed. Each branch's last-writer-wins dedup is fused into the sink's
+    bucket layout (one exchange on the bucket expression instead of
+    hash(pk) followed by the sink's hash(bucket); see
+    ``_dedup_in_bucket_layout``), so the caller should pass
+    ``batch_pre_clustered=True`` with the SAME ``n_buckets`` (and
+    ``files_per_bucket``) to ``merge_upsert``. A sink that ignores
+    clustering (JDBC) takes the same shape. Either value may be a
+    ``(voucher, transaction)`` pair when the two tables' layouts
+    differ."""
     def per_branch(x):
         return x if isinstance(x, tuple) else (x, x)
 
@@ -288,19 +278,15 @@ def build_pipeline(queue: DataFrame, voucher: DataFrame,
                                     per_branch(sink_files_per_bucket))
     keys = reference_keys(queue)
     vb = _branch(voucher, keys, voucher_key or ["voucher_id", "reference_no"],
-                 cleanse_voucher, order_col, compat, persist, v_nb, v_fpb)
+                 cleanse_voucher, order_col, v_nb, v_fpb)
     tb = _branch(transaction, keys,
                  transaction_key or ["voucher_details_id", "reference_no"],
-                 cleanse_transaction, order_col, compat, persist,
-                 t_nb, t_fpb)
+                 cleanse_transaction, order_col, t_nb, t_fpb)
     # a key present in an entity always survives the semi prune and
     # cleanse never rewrites reference_no, so the persisted branch
     # points hold the same refs as the entities — the warnings then read
-    # cached blocks instead of re-running the entity scans. Without the
-    # branch points the cleansed lineage would recompute the cleanse just
-    # to list refs: read the raw entities there instead.
-    warnings = missing_ref_warnings(
-        clean_queue(queue), vb.cleansed if persist else voucher,
-        tb.cleansed if persist else transaction)
+    # cached blocks instead of re-running the entity scans.
+    warnings = missing_ref_warnings(clean_queue(queue), vb.cleansed,
+                                    tb.cleansed)
     return PipelineResult(voucher=vb, transaction=tb, keys=keys,
                           warnings=warnings)

@@ -1,17 +1,22 @@
-"""Batch run driver — parity with ``runEtlProcess``
+"""ETL fire driver — parity with ``runEtlProcess``
 (``services/etlService.js:526-583``) and the control-plane semantics the
 Express API wraps around it (SURVEY.md §2.8).
 
-One call = one ``Trigger.AvailableNow``-style run over the current work
-queue: build the pipeline plan, upsert both branches, return the run
-summary dict the reference returns (processed/skipped counts, durations,
-warnings sample). Improvements kept from SURVEY §7.6:
+One call = one fire over the current work queue: build the pipeline
+plan, upsert both branches concurrently with the ST8 retry, return the
+run summary dict the reference returns (processed/skipped counts,
+durations, warnings sample). Every entry point runs this one body, as
+the reference's force endpoint and cron both call ``runEtlProcess``
+(``index.js:75-86,131``): ``run_etl`` is the forced run, and each
+scheduled streaming epoch (``streaming/etl_stream.py``) runs
+``_run_etl`` on its micro-batch. Improvements kept from SURVEY §7.6:
 
 - **High-watermark** on ``log_id`` (ST4): the reference re-processes the
   entire queue every run because nothing marks records consumed; we
   filter ``log_id > watermark`` and return the new watermark. Pass
   ``watermark=None`` for full-reprocess parity (idempotent sink makes
-  both correct).
+  both correct); a streaming epoch passes None because its checkpoint
+  is the consumed-marker.
 - Counters come from DataFrame aggregation (exact, distributed), not
   driver-side increments; the skipped side-outputs are returned as
   frames so callers can persist warnings instead of log-scraping.
@@ -36,45 +41,54 @@ RETRY_DELAY_S = 1.0
 
 def retry_with_delay(fn: Callable[[], Any], label: str,
                      warnings_out: list[str],
-                     limit: int = RETRY_LIMIT,
-                     delay_s: float = RETRY_DELAY_S,
                      sleep: Callable[[float], None] = time.sleep,
                      ) -> tuple[int, Any | None, bool]:
     """ST8 — the reference's sink retry loop (etlService.js:78-99): up to
-    ``limit`` attempts with a fixed ``delay_s`` between them; on final
-    failure push the reference-shaped warning and return failure instead
-    of raising (the run continues — rows get accounted as skipped by the
-    caller). Returns (attempts_made, result, succeeded)."""
+    ``RETRY_LIMIT`` attempts with a fixed ``RETRY_DELAY_S`` between
+    them; on final failure push the reference-shaped warning and return
+    failure instead of raising (the run continues — rows get accounted
+    as skipped by the caller). Returns (attempts_made, result,
+    succeeded)."""
     attempts = 0
-    while attempts < limit:
+    while attempts < RETRY_LIMIT:
         try:
             result = fn()
             return attempts + 1, result, True
         except Exception as err:  # noqa: BLE001 — sink errors are data
             attempts += 1
-            if attempts == limit:
-                warnings_out.append(
-                    f"Failed to process {label} after {limit} retries: {err}")
+            if attempts == RETRY_LIMIT:
+                warnings_out.append(f"Failed to process {label} after "
+                                    f"{RETRY_LIMIT} retries: {err}")
                 return attempts, None, False
-            sleep(delay_s)
+            sleep(RETRY_DELAY_S)
     return attempts, None, False
 
 
 def run_etl(spark: SparkSession, queue: DataFrame, voucher: DataFrame,
             transaction: DataFrame, voucher_path: str, txn_path: str,
-            voucher_key: list[str] | None = None,
-            transaction_key: list[str] | None = None,
-            order_col: str = "reference_no",
-            watermark: int | None = None,
-            compat: bool = True,
-            retry_limit: int = RETRY_LIMIT,
-            retry_delay_s: float = RETRY_DELAY_S,
-            sink: str = "manifest",
-            jdbc_url: str | None = None,
-            jdbc_options: dict[str, Any] | None = None,
-            _sleep: Callable[[float], None] = time.sleep) -> dict[str, Any]:
-    """Run one ETL epoch; returns the reference-shaped run summary
-    (etlService.js:576-583) plus the new high-watermark.
+            **options: Any) -> dict[str, Any]:
+    """Run one ETL fire; returns the reference-shaped run summary
+    (etlService.js:576-583) plus the new high-watermark. ``options``
+    are :func:`_run_etl`'s keyword arguments."""
+    summary, _committed = _run_etl(spark, queue, voucher, transaction,
+                                   voucher_path, txn_path, **options)
+    return summary
+
+
+def _run_etl(spark: SparkSession, queue: DataFrame, voucher: DataFrame,
+             transaction: DataFrame, voucher_path: str, txn_path: str,
+             voucher_key: list[str] | None = None,
+             transaction_key: list[str] | None = None,
+             order_col: str = "reference_no",
+             watermark: int | None = None,
+             sink: str = "manifest",
+             jdbc_url: str | None = None,
+             jdbc_options: dict[str, Any] | None = None,
+             _sleep: Callable[[float], None] = time.sleep,
+             ) -> tuple[dict[str, Any], bool]:
+    """The fire body behind :func:`run_etl` and every scheduled epoch.
+    Returns ``(summary, committed)``; ``committed`` is False when a
+    branch's merge exhausted its ST8 retries.
 
     ``sink`` picks the write target (r11): ``"manifest"`` (default) is
     the engine's transactional bucketed-MERGE table at
@@ -85,7 +99,7 @@ def run_etl(spark: SparkSession, queue: DataFrame, voucher: DataFrame,
     database's own set-based keyed statement) against ``jdbc_url``
     with ``jdbc_options`` (driver, createTableColumnTypes, ...). Retry,
     counters, warnings and watermark semantics are identical in both
-    modes.
+    modes. ``_sleep`` is the retry delay's test seam.
     """
     started = time.time()
     if watermark is not None:
@@ -101,7 +115,7 @@ def run_etl(spark: SparkSession, queue: DataFrame, voucher: DataFrame,
     result = build_pipeline(queue, voucher, transaction,
                             voucher_key=voucher_key,
                             transaction_key=transaction_key,
-                            order_col=order_col, compat=compat,
+                            order_col=order_col,
                             sink_buckets=(v_nb, t_nb),
                             sink_files_per_bucket=(v_fpb, t_fpb))
 
@@ -155,12 +169,10 @@ def run_etl(spark: SparkSession, queue: DataFrame, voucher: DataFrame,
     with ThreadPoolExecutor(max_workers=4) as pool:
         fv = pool.submit(
             retry_with_delay, v_write,
-            "voucher records", retry_warnings,
-            limit=retry_limit, delay_s=retry_delay_s, sleep=_sleep)
+            "voucher records", retry_warnings, sleep=_sleep)
         ft = pool.submit(
             retry_with_delay, t_write,
-            "transaction records", retry_warnings,
-            limit=retry_limit, delay_s=retry_delay_s, sleep=_sleep)
+            "transaction records", retry_warnings, sleep=_sleep)
         # sample 5, as the reference logs slice(0,5) (etlService.js:499-510);
         # neither picks a defined 5
         fw = pool.submit(lambda: [
@@ -193,8 +205,7 @@ def run_etl(spark: SparkSession, queue: DataFrame, voucher: DataFrame,
     warning_sample = (retry_warnings + missing_warnings)[:5]
 
     for branch in (result.voucher, result.transaction):
-        if branch.cleansed is not None:
-            branch.cleansed.unpersist()
+        branch.cleansed.unpersist()
 
     # The watermark only advances when BOTH branches committed: a run
     # whose merge exhausted its retries must leave the failed rows
@@ -202,6 +213,7 @@ def run_etl(spark: SparkSession, queue: DataFrame, voucher: DataFrame,
     # reference's full-queue rescan retries them on the next cron fire;
     # advancing here would silently drop them forever in watermark
     # mode — the idempotent sink makes the reprocess harmless).
+    committed = v_ok and t_ok
     new_wm = new_wm_row["wm"] if new_wm_row["wm"] is not None else watermark
     summary = {
         "processedVoucherCount": processed_voucher,
@@ -210,6 +222,6 @@ def run_etl(spark: SparkSession, queue: DataFrame, voucher: DataFrame,
         "skippedTransactionCount": skipped_txn,
         "warningSample": warning_sample,
         "durationSec": round(time.time() - started, 3),
-        "watermark": new_wm if (v_ok and t_ok) else watermark,
+        "watermark": new_wm if committed else watermark,
     }
-    return summary
+    return summary, committed

@@ -37,12 +37,16 @@ approximation of a conditional PUT; on S3/GCS the flip itself would be
 an If-Match/generation-precondition PUT, making check+flip one atomic
 request).
 
-Exactly-once for streaming writers: a merge may carry a transaction
-stamp (``txn_app_id``, ``txn_version`` — the shape of Delta's
-txnAppId/txnVersion). The stamp rides IN the manifest, so it is
+Exactly-once for read-modify-write streaming writers: a merge may carry
+a transaction stamp (``txn_app_id``, ``txn_version`` — the shape of
+Delta's txnAppId/txnVersion). The stamp rides IN the manifest, so it is
 published by the same single-object ``_latest.json`` flip as the data
-it describes: a foreachBatch replay of an epoch that already committed
-sees its own stamp and becomes a no-op instead of double-applying.
+it describes. The incremental view (``streaming/incremental_view.py``)
+stamps its merges: a foreachBatch replay of an epoch that already
+committed sees its own stamp and becomes a no-op instead of adding its
+partials twice. The ETL epoch (``streaming/etl_stream.py``) carries no
+stamp: it relies on the sink's idempotent last-writer-wins upsert, so a
+replayed slice rewrites the same rows with the same values.
 
 Scale notes: a batch touching b of N buckets rewrites b/N of the table
 (plus the batch), not 100% of it, the way Delta/Iceberg rewrite only the

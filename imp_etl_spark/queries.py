@@ -36,6 +36,7 @@ from imp_etl_spark.functions.text import (
 )
 from imp_etl_spark.functions.vector import cosine
 from imp_etl_spark.operators import dedup, join, similarity
+from imp_etl_spark.operators.util import scratch_dir
 from imp_etl_spark.sources.parquet import read_table
 
 # registry core lives in the LEAF module imp_etl_spark.registry so the
@@ -948,12 +949,10 @@ def stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers (order-independent, bit-equal to DuckDB's decimal SUM — see
     streaming/stateful.py); batch-equivalence also pinned in
     tests/test_streaming.py."""
-    import tempfile
-
     from imp_etl_spark.streaming.stateful import running_user_stats
     from imp_etl_spark.streaming.windows import stream_events
 
-    tmp = tempfile.mkdtemp(prefix="stateful_events_")
+    tmp = scratch_dir("stateful_events_")
     src, ckpt = f"{tmp}/src", f"{tmp}/ckpt"
     ev = read_table(spark, sf_dir, "events")
     ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
@@ -1114,12 +1113,10 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is watermark-evicted before its duplicate arrives — the
     row-for-row match does not hinge on both files landing in one batch.
     State is one entry per event_id either way."""
-    import tempfile
-
     from imp_etl_spark.streaming.etl_stream import dedup_stream
     from imp_etl_spark.streaming.windows import stream_events
 
-    tmp = tempfile.mkdtemp(prefix="dedup_stream_")
+    tmp = scratch_dir("dedup_stream_")
     src, name = f"{tmp}/src", "stream_dedup_events_sink"
     ev = read_table(spark, sf_dir, "events")
     ev.coalesce(1).write.parquet(src, mode="overwrite")
@@ -1148,12 +1145,10 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     completion; the batch-equivalent SQL is the oracle — streaming and
     batch answers agree because availableNow drains all data and the
     join condition is time-bounded."""
-    import tempfile
-
     from imp_etl_spark.streaming.etl_stream import interval_join_stream
     from imp_etl_spark.streaming.windows import stream_events
 
-    tmp = tempfile.mkdtemp(prefix="ij_stream_")
+    tmp = scratch_dir("ij_stream_")
     src, name = f"{tmp}/src", "stream_interval_join_sink"
     read_table(spark, sf_dir, "events").coalesce(2).write.parquet(
         src, mode="overwrite")

@@ -42,7 +42,7 @@ from imp_etl_spark.functions.text import (
 )
 from imp_etl_spark.functions.vector import cosine
 from imp_etl_spark.operators import similarity
-from imp_etl_spark.operators.util import persist_if_big
+from imp_etl_spark.operators.util import persist_if_big, scratch_dir
 from imp_etl_spark.registry import register
 from imp_etl_spark.sources.parquet import read_table
 
@@ -644,7 +644,6 @@ def _shared_minhash_stacked(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature pass.
     """
     import os
-    import tempfile
 
     from imp_etl_spark.operators.dedup import (
         build_minhash_index,
@@ -666,8 +665,7 @@ def _shared_minhash_stacked(spark: SparkSession, sf_dir: str) -> DataFrame:
             for old in [k for k in _MINHASH_IDX if k[0] == key[0]]:
                 shutil.rmtree(os.path.dirname(_MINHASH_IDX.pop(old)),
                               ignore_errors=True)
-            path = os.path.join(tempfile.mkdtemp(prefix="minhash_idx_"),
-                                "index")
+            path = os.path.join(scratch_dir("minhash_idx_"), "index")
             docs = read_table(spark, sf_dir, "documents")
             build_minhash_index(docs, path, "text", "doc_id", shingle_k=5,
                                 num_hashes=12, bands=4)
@@ -1103,8 +1101,6 @@ def ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruned scans. Same oracle as the inline IVF at these
     params (the index roundtrip must not change a single bit of the
     answer — also pinned in tests/test_similarity.py)."""
-    import tempfile
-
     from imp_etl_spark.operators.similarity import (
         build_ivf_index,
         ivf_topk_indexed,
@@ -1113,7 +1109,7 @@ def ivf_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding")
-    path = tempfile.mkdtemp(prefix="ivf_idx_") + "/index"
+    path = scratch_dir("ivf_idx_") + "/index"
     build_ivf_index(emb, path, nlist=16, kmeans_iters=2)
     return ivf_topk_indexed(spark, path, queries, k=10, nprobe=4)
 

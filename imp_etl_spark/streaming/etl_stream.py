@@ -10,110 +10,75 @@ exact-fit execution model:
 
 - new work-queue files -> micro-batch epochs (``foreachBatch``), replacing
   the moving-table LIMIT/OFFSET pagination with per-epoch snapshots;
+- each epoch runs the forced run's own body (``plans/runner.py``
+  ``_run_etl``) on its slice, as every reference cron fire re-enters
+  ``runEtlProcess``: the same plan, concurrent branch merges, ST8 retry,
+  J3 warning sample and sinks;
 - the checkpoint directory replaces the missing consumed-marker — each
   queue record is processed exactly once across restarts (an improvement
-  the reference documents the need for, SURVEY §2.8 ST4);
-- the idempotent MERGE sink makes replayed epochs harmless, matching
-  ``ON DUPLICATE KEY UPDATE`` semantics;
+  the reference documents the need for, SURVEY §2.8 ST4), so an epoch
+  runs with no watermark;
+- an epoch whose merge exhausts its retries raises, so the micro-batch's
+  offsets are not committed and its slice is replayed (the run's
+  watermark likewise holds back). The branch that did commit is replayed
+  too, which the idempotent last-writer-wins sink makes harmless,
+  matching ``ON DUPLICATE KEY UPDATE`` semantics;
 - ``trigger(availableNow=True)`` = the force-run endpoint (ST2);
   ``trigger(processingTime=...)`` = the cron schedule (ST1);
   ``query.stop()`` = ST5.
 
-Scale notes: each epoch runs the same broadcast-semi-join + cleanse +
-dedup + MERGE plan as the batch pipeline — per-epoch work is bounded by
-the new queue slice, not the full queue, so steady-state cost tracks the
-change rate (the reference's full-queue rescan cost tracked total
-history).
+Scale notes: per-epoch work is bounded by the new queue slice, not the
+full queue, so steady-state cost tracks the change rate (the
+reference's full-queue rescan cost tracked total history).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from imp_etl_spark.operators.util import release_query_caches
-from imp_etl_spark.plans.pipeline import build_pipeline
-from imp_etl_spark.plans.upsert import merge_upsert, sink_layout
+from imp_etl_spark.plans.runner import _run_etl
 
 
 def run_etl_stream(spark: SparkSession, queue_stream: DataFrame,
                    voucher: DataFrame, transaction: DataFrame,
                    voucher_path: str, txn_path: str,
                    checkpoint_dir: str,
-                   voucher_key: list[str] | None = None,
-                   transaction_key: list[str] | None = None,
-                   order_col: str = "reference_no",
-                   compat: bool = True,
-                   available_now: bool = True,
                    processing_time: str | None = None,
                    epoch_summaries: list[dict[str, Any]] | None = None,
-                   on_epoch_end: Callable[[], Any] | None =
-                   release_query_caches,
-                   ) -> StreamingQuery:
+                   **options: Any) -> StreamingQuery:
     """Start the incremental ETL query over a streaming work queue.
 
     ``queue_stream`` is a streaming frame of (log_id, reference_no,
-    table); each micro-batch drives one epoch of the batch pipeline
-    against the (batch) entity frames and MERGEs both branches.
-    ``epoch_summaries``, if given, collects one reference-shaped summary
-    dict per epoch (driver-side list — test/observability hook).
-    ``on_epoch_end`` runs driver-side after each epoch commits; its
-    failure must not fail the epoch. It DEFAULTS to
-    ``operators.util.release_query_caches`` (the same between-epoch
-    hygiene the controller wires in), so direct callers get the bounded
-    query-cache lifecycle without opting in; pass ``None`` to disable,
-    or your own callable to replace it.
+    table); each micro-batch runs one ETL fire against the (batch)
+    entity frames. ``options`` are the fire's keyword arguments
+    (``plans.runner._run_etl``, the same set ``run_etl`` takes, minus
+    ``watermark``). The query triggers every ``processing_time`` when
+    given, else once over the available data (``availableNow``).
+    ``epoch_summaries``, if given, collects each committed epoch's
+    run summary plus its ``epochId`` (driver-side list — test and
+    observability hook). After every epoch, committed or not, the
+    query tier's tracked persists are released
+    (``operators.util.release_query_caches``). An epoch whose merge
+    fails after its retries raises: the query stops with that error and
+    its slice is replayed on the next start from the checkpoint.
     """
-    vkey = voucher_key or ["voucher_id", "reference_no"]
-    tkey = transaction_key or ["voucher_details_id", "reference_no"]
-
     def _epoch(batch_queue: DataFrame, epoch_id: int) -> None:
-        # fused dedup↔bucket layout in each table's own bucket count,
-        # same as the batch runner (plans/runner.py)
-        v_nb, v_fpb = sink_layout(spark, voucher_path)
-        t_nb, t_fpb = sink_layout(spark, txn_path)
-        result = build_pipeline(batch_queue, voucher, transaction,
-                                voucher_key=vkey, transaction_key=tkey,
-                                order_col=order_col, compat=compat,
-                                sink_buckets=(v_nb, t_nb),
-                                sink_files_per_bucket=(v_fpb, t_fpb))
-        # the branches end in their own per-key dedup on the same keys,
-        # so the merge's defensive re-dedup Window pass is skipped
-        merge_upsert(spark, voucher_path, result.voucher.valid, vkey,
-                     order_col, n_buckets=v_nb, files_per_bucket=v_fpb,
-                     batch_is_unique=True, batch_pre_clustered=True)
-        merge_upsert(spark, txn_path, result.transaction.valid, tkey,
-                     order_col, n_buckets=t_nb, files_per_bucket=t_fpb,
-                     batch_is_unique=True, batch_pre_clustered=True)
-        # the merges executed both observed plans: mark the branches so
-        # the counter reads below come free from observe() instead of
-        # re-running two count() jobs per epoch (same contract as the
-        # batch runner, plans/runner.py)
-        result.voucher.executed = True
-        result.transaction.executed = True
-        pv = result.voucher.processed_count()
-        pt = result.transaction.processed_count()
-        sv = result.voucher.skipped_count()
-        st = result.transaction.skipped_count()
-        for branch in (result.voucher, result.transaction):
-            if branch.cleansed is not None:
-                branch.cleansed.unpersist()
-        if epoch_summaries is not None:
-            epoch_summaries.append({
-                "epochId": epoch_id,
-                "processedVoucherCount": pv,
-                "processedTransactionCount": pt,
-                "skippedVoucherCount": sv,
-                "skippedTransactionCount": st,
-            })
-        if on_epoch_end is not None:
-            try:
-                on_epoch_end()
-            except Exception:
-                pass  # hygiene hook must never fail a committed epoch
+        try:
+            summary, committed = _run_etl(
+                spark, batch_queue, voucher, transaction, voucher_path,
+                txn_path, watermark=None, **options)
+            if not committed:
+                raise RuntimeError(
+                    f"ETL epoch {epoch_id} not committed: "
+                    + "; ".join(summary["warningSample"]))
+            if epoch_summaries is not None:
+                epoch_summaries.append({**summary, "epochId": epoch_id})
+        finally:
+            release_query_caches()
 
     writer = (queue_stream.writeStream
               .foreachBatch(_epoch)
@@ -121,7 +86,7 @@ def run_etl_stream(spark: SparkSession, queue_stream: DataFrame,
               .outputMode("update"))
     if processing_time is not None:
         writer = writer.trigger(processingTime=processing_time)
-    elif available_now:
+    else:
         writer = writer.trigger(availableNow=True)
     return writer.start()
 

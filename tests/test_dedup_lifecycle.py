@@ -6,6 +6,9 @@ runs, streaming epochs) calls between runs. Also pins the per-family
 persist gates (which frames are cached at all). The dedup tier's shared
 MinHash signature artifact is a DISK parquet memo (no block-manager
 footprint) and is governed by its mtime-keyed invalidation instead.
+The directories queries write for themselves (stream sources and
+checkpoints, on-disk indexes) live under one per-process scratch root
+that is removed at interpreter exit.
 """
 
 from __future__ import annotations
@@ -180,3 +183,39 @@ def test_verify_tier_persists_stay_on_at_fixture_scale(spark):
     assert util._QUERY_PERSISTS, \
         "verified/cands persists should engage at 500 docs"
     release_query_caches()
+
+
+def test_scratch_root_is_removed_at_exit(tmp_path):
+    """A process that makes a scratch directory and exits leaves nothing
+    in its temp directory."""
+    import os
+    import subprocess
+    import sys
+
+    code = ("import os\n"
+            "from imp_etl_spark.operators.util import scratch_dir\n"
+            "d = scratch_dir('probe_')\n"
+            "open(os.path.join(d, 'f'), 'w').write('x')\n"
+            "print(d)\n")
+    env = {**os.environ, "TMPDIR": str(tmp_path)}
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], env=env, cwd=repo,
+                         capture_output=True, text=True, timeout=120,
+                         check=True).stdout.strip()
+    assert out.startswith(str(tmp_path)) and "probe_" in out
+    assert not os.path.exists(out)
+    assert os.listdir(tmp_path) == []
+
+
+def test_ivf_index_not_left_in_temp_dir(spark):
+    """``ivf_indexed_topk`` builds its index under the scratch root, not
+    as a new entry directly in the system temp directory."""
+    import glob
+    import os
+    import tempfile
+
+    pattern = os.path.join(tempfile.gettempdir(), "ivf_idx_*")
+    before = set(glob.glob(pattern))
+    fn, _sql = REGISTRY["ivf_indexed_topk"]
+    assert fn(spark, ORACLE_SF_DIR).count() > 0
+    assert set(glob.glob(pattern)) == before

@@ -13,11 +13,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from imp_etl_spark.plans.control import EtlController
+from imp_etl_spark.plans.cron import CronPattern, classify_schedule
 from imp_etl_spark.plans.http_api import (
     EtlHttpServer,
     format_uptime,
     parse_log_line,
-    parse_schedule,
 )
 from imp_etl_spark.sources.parquet import read_table
 from tests.conftest import SF_DIR
@@ -76,16 +76,19 @@ def server(spark, tmp_path):
 
 
 def test_parse_schedule_shapes():
-    assert parse_schedule("* * * * *") == "1 minute"
+    """The shapes the /start-etl handler accepts, as it classifies them."""
+    assert classify_schedule("* * * * *") == ("interval", "1 minute")
     # r11 (ADVICE): phase-carrying cron shapes are calendar schedules
     # now (wall-clock scheduler), not interval triggers
-    for cal in ("*/5 * * * *", "15 * * * *", "30 2 * * *"):
-        assert parse_schedule(cal) is None, cal
-    assert parse_schedule("45 seconds") == "45 seconds"
-    assert parse_schedule("2 seconds") == "2 seconds"
-    for bad in ("nope", "61 * * * *", "* * * * 1", "*/0 * * * *",
+    for cal in ("*/5 * * * *", "15 * * * *", "30 2 * * *", "* * * * 1",
                 "1 2 3 4 5 6"):
-        assert parse_schedule(bad) is None, bad
+        kind = classify_schedule(cal)
+        assert kind is not None and kind[0] == "cron", cal
+        assert isinstance(kind[1], CronPattern)
+    assert classify_schedule("45 seconds") == ("interval", "45 seconds")
+    assert classify_schedule("2 seconds") == ("interval", "2 seconds")
+    for bad in ("nope", "61 * * * *", "*/0 * * * *"):
+        assert classify_schedule(bad) is None, bad
 
 
 def test_format_uptime_matches_reference_shape():
@@ -282,8 +285,8 @@ def test_log_timestamps_are_manila_iso(server):
 
 
 def test_zero_interval_rejected():
-    assert parse_schedule("0 seconds") is None
-    assert parse_schedule("0 minutes") is None
+    assert classify_schedule("0 seconds") is None
+    assert classify_schedule("0 minutes") is None
 
 
 def test_status_timestamps_iso_or_null(server):

@@ -152,9 +152,10 @@ def test_st8_retry_transient_failure_then_success(spark, tmp_path, monkeypatch):
     queue, voucher, txn = make_frames(spark)
     summary = run_etl(spark, queue, voucher, txn,
                       str(tmp_path / "v"), str(tmp_path / "t"),
-                      retry_delay_s=0.01, _sleep=sleeps.append)
+                      _sleep=sleeps.append)
     assert calls["n"] == 3                      # 2 failures + 1 success
-    assert sleeps == [0.01, 0.01]               # fixed delay between tries
+    # fixed delay between tries
+    assert sleeps == [runner.RETRY_DELAY_S] * 2
     assert summary["processedVoucherCount"] == 3
     assert summary["skippedVoucherCount"] == 2
     assert read_target(spark, str(tmp_path / "v")).count() == 3
@@ -178,10 +179,12 @@ def test_st8_retry_final_failure_counts_skipped_with_warning(
 
     monkeypatch.setattr(runner, "merge_upsert", dead)
     queue, voucher, txn = make_frames(spark)
+    sleeps: list[float] = []
     summary = run_etl(spark, queue, voucher, txn,
                       str(tmp_path / "v"), str(tmp_path / "t"),
-                      retry_delay_s=0.0, _sleep=lambda _s: None)
-    assert attempts["n"] == 3
+                      _sleep=sleeps.append)
+    assert attempts["n"] == runner.RETRY_LIMIT == 3
+    assert sleeps == [runner.RETRY_DELAY_S] * 2
     assert summary["processedVoucherCount"] == 0
     # 2 falsy-key skips + the 3 valid rows the dead sink never took
     assert summary["skippedVoucherCount"] == 5
@@ -199,7 +202,7 @@ def test_st8_retry_final_failure_counts_skipped_with_warning(
     monkeypatch.setattr(runner, "merge_upsert", real)
     summary2 = run_etl(spark, queue, voucher, txn,
                        str(tmp_path / "v2"), str(tmp_path / "t2"),
-                       retry_delay_s=0.0, _sleep=lambda _s: None)
+                       _sleep=lambda _s: None)
     assert summary2["watermark"] == 8
 
 
@@ -470,8 +473,7 @@ def test_branch_counts_before_any_action_do_not_block(spark):
     # after the fallback action ran, the observation path agrees
     assert res.voucher.processed_count() == 3
     for b in (res.voucher, res.transaction):
-        if b.cleansed is not None:
-            b.cleansed.unpersist()
+        b.cleansed.unpersist()
 
 
 def test_upsert_schema_evolution(spark, tmp_path):
@@ -945,9 +947,10 @@ def test_run_etl_plan_has_single_branch_exchange(spark, tmp_path):
     txn = spark.createDataFrame(
         [("T1", "R1", "1")],
         "voucher_details_id string, reference_no string, quantity string")
-    res = build_pipeline(queue, voucher, txn,
-                         sink_buckets=DEFAULT_BUCKETS, persist=False)
+    res = build_pipeline(queue, voucher, txn, sink_buckets=DEFAULT_BUCKETS)
     plan = res.voucher.valid._jdf.queryExecution().executedPlan().toString()
+    for b in (res.voucher, res.transaction):
+        b.cleansed.unpersist()
     # exactly one branch-payload shuffle: the bucket-expression
     # repartition. No hash(pk) dedup exchange remains (the keys-side
     # distinct aggregate and the semi-prune broadcast are not payload
