@@ -6,15 +6,20 @@ The reference wraps its pipeline in an HTTP control plane (SURVEY.md §3):
 ``POST /api/stop-etl`` (``index.js:166-206``), ``GET /api/etl-status``
 (``index.js:329-342``), guarded by a single ``isEtlRunning`` flag
 (``index.js:25``) that does NOT prevent cron-fire overlap with a long run
-(ST6 — interleaved runs visible at ``logs/RSBSAetl.log:10-13``). Here the
-same verbs drive Structured Streaming, whose scheduler serializes epochs
-— the overlap bug is structurally impossible:
+(ST6 — interleaved runs visible at ``logs/RSBSAetl.log:10-13``). Here
+every schedule fires from one wall-clock scheduler thread whose fires
+serialize, and the run/schedule guard is atomic — the overlap bug is
+structurally impossible:
 
 - ``run_once``     = start-etl-force (one ``run_etl`` fire, blocks)
-- ``schedule``     = start-etl (each epoch runs the same fire body on its
-  queue slice, as the reference's cron calls ``runEtlProcess`` too)
+- ``schedule``     = start-etl (each scheduler fire runs one AvailableNow
+  epoch of the same fire body on its queue slice, as the reference's
+  cron calls ``runEtlProcess`` too)
 - ``stop``         = stop-etl (in-flight epoch finishes, like task.stop())
-- ``status``       = etl-status (flag + schedule + durations, same keys)
+- ``status``       = the state etl-status is built from: ``isRunning``,
+  ``schedule``, ``startedAt``, ``uptimeSec``, ``epochsCompleted``,
+  ``lastError``, ``lastSummary`` (plans/http_api.py renders the
+  reference's keys from it)
 
 HTTP itself stays out of engine scope (SURVEY §7.7) — any server can
 wrap these four calls.
@@ -29,6 +34,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from imp_etl_spark.operators.util import release_query_caches
+from imp_etl_spark.plans.cron import CronScheduler, parse_schedule
 from imp_etl_spark.plans.runner import run_etl
 from imp_etl_spark.streaming.etl_stream import run_etl_stream
 
@@ -82,66 +88,56 @@ class EtlController:
                  clock=None, tick: float = 1.0,
                  **kwargs) -> None:
         """Start the recurring schedule (start-etl, ST1). ``every`` is
-        either a Spark interval string / ``* * * * *`` (mapped to a
-        processing-time trigger — pure cadence, no phase) or ANY other
-        valid node-cron pattern — incl. calendar shapes like
+        ANY valid node-cron pattern — incl. calendar shapes like
         ``0 9 * * 1-5`` the reference accepts via cron.validate /
-        cron.schedule (index.js:30-37, 75-86). Cron shapes run on
-        a driver-side wall-clock scheduler (plans/cron.py, Asia/Manila
-        like the reference): each fire executes ONE AvailableNow epoch
-        of the same streaming pipeline against the SAME checkpoint, so
-        idempotence/watermark semantics match the interval path and
-        fires serialize (a long epoch absorbs missed matches — the
-        overlap the reference's isEtlRunning hole allowed, ST6).
-        ``kwargs`` are ``run_once``'s, minus ``watermark``. A failed
-        epoch (``run_etl_stream``) stops the interval query with its
-        error; on the cron path the scheduler records it and the next
-        fire replays the slice.
-        ``clock``/``tick`` inject a test clock into the cron thread."""
-        from imp_etl_spark.plans.cron import CronScheduler, classify_schedule
-
-        kind = classify_schedule(every)
-        if kind is None:
+        cron.schedule (index.js:30-37, 75-86) — or a Spark interval
+        string (plans/cron.py ``parse_schedule``). It runs on a
+        driver-side wall-clock scheduler (Asia/Manila like the
+        reference, no fire at start): each fire executes ONE
+        AvailableNow epoch of the streaming pipeline against the SAME
+        checkpoint, and fires serialize (a long epoch absorbs missed
+        matches — the overlap the reference's isEtlRunning hole
+        allowed, ST6). ``kwargs`` are ``run_once``'s, minus
+        ``watermark``. A failed epoch (``run_etl_stream``) is recorded
+        as ``lastError`` and the next fire replays its slice.
+        ``clock``/``tick`` inject a test clock into the scheduler."""
+        pattern = parse_schedule(every)
+        if pattern is None:
             raise ValueError(f"invalid schedule pattern: {every!r}")
         with self._guard:
             if self.is_running:
                 raise RuntimeError("ETL is already scheduled")
-            # claim the slot BEFORE the (slow) stream start so a racing
+            # claim the slot BEFORE the scheduler starts so a racing
             # run_once/schedule sees is_running immediately
             self._started_at = time.time()
-        try:
-            self.epoch_summaries.clear()
-            if kind[0] == "interval":
-                self._query = run_etl_stream(
-                    self.spark, queue_stream, voucher, transaction,
-                    voucher_path, txn_path, checkpoint_dir,
-                    processing_time=kind[1],
-                    epoch_summaries=self.epoch_summaries, **kwargs)
-            else:
-                def _fire() -> None:
-                    q = run_etl_stream(
-                        self.spark, queue_stream, voucher, transaction,
-                        voucher_path, txn_path, checkpoint_dir,
-                        epoch_summaries=self.epoch_summaries, **kwargs)
-                    # register the fire's query on the controller while
-                    # the epoch runs (r11, ADVICE): stop() can then
-                    # q.stop() an epoch that outlasts the scheduler
-                    # thread's join instead of abandoning it handleless
-                    with self._guard:
-                        self._query = q
-                    try:
-                        q.awaitTermination()
-                    finally:
-                        with self._guard:
-                            if self._query is q:
-                                self._query = None
+            self._schedule = every
+        self.epoch_summaries.clear()
 
-                self._cron = CronScheduler(
-                    kind[1], _fire, now_fn=clock, tick=tick).start()
+        def _fire() -> None:
+            q = run_etl_stream(
+                self.spark, queue_stream, voucher, transaction,
+                voucher_path, txn_path, checkpoint_dir,
+                epoch_summaries=self.epoch_summaries, **kwargs)
+            # register the fire's query on the controller while the
+            # epoch runs: stop() can then q.stop() an epoch that
+            # outlasts the scheduler thread's join instead of
+            # abandoning it handleless
+            with self._guard:
+                self._query = q
+            try:
+                q.awaitTermination()
+            finally:
+                with self._guard:
+                    if self._query is q:
+                        self._query = None
+
+        try:
+            self._cron = CronScheduler(
+                pattern, _fire, now_fn=clock, tick=tick).start()
         except BaseException:
-            self._started_at = None
+            with self._guard:
+                self._started_at = self._schedule = None
             raise
-        self._schedule = every
 
     # -- stop-etl ----------------------------------------------------------
     def stop(self) -> dict[str, Any]:
@@ -159,12 +155,11 @@ class EtlController:
             q = self._query
             cr = self._cron
         if cr is not None:
-            # wall-clock cron: halt FUTURE fires first (non-blocking),
-            # then pick up an in-flight fire's registered query so the
-            # q.stop() below ends its epoch instead of this thread
-            # blocking the full join timeout behind it (r11, ADVICE —
-            # an epoch outlasting the join used to keep running with
-            # no handle left to stop it)
+            # halt FUTURE fires first (non-blocking), then pick up an
+            # in-flight fire's registered query so the q.stop() below
+            # ends its epoch instead of this thread blocking the full
+            # join timeout behind it (an epoch outlasting the join
+            # would keep running with no handle left to stop it)
             cr.signal_stop()
             if q is None:
                 with self._guard:
@@ -201,19 +196,22 @@ class EtlController:
     # -- etl-status / health ----------------------------------------------
     @property
     def is_running(self) -> bool:
-        if self._query is not None:
-            return self._query.isActive
         if self._cron is not None:
             return self._cron.is_alive
         return self._started_at is not None
 
     def status(self) -> dict[str, Any]:
-        """The GET /api/etl-status shape (index.js:329-342)."""
+        """The controller state GET /api/etl-status is rendered from
+        (index.js:329-342): ``startedAt`` is epoch seconds; ``lastError``
+        is the schedule's most recent failed fire, if any."""
+        started, cron = self._started_at, self._cron
         return {
             "isRunning": self.is_running,
             "schedule": self._schedule,
-            "uptimeSec": round(time.time() - self._started_at, 3)
-            if self._started_at else None,
+            "startedAt": started,
+            "uptimeSec": round(time.time() - started, 3)
+            if started else None,
             "epochsCompleted": len(self.epoch_summaries),
+            "lastError": cron.last_error if cron is not None else None,
             "lastSummary": self._last_summary,
         }

@@ -11,8 +11,9 @@ index.js:254-276) and ``GET /api/logs/stream`` (SSE tail,
 index.js:278-318). This module reproduces that surface with
 ``http.server.ThreadingHTTPServer`` — no third-party web framework —
 wrapping :class:`~imp_etl_spark.plans.control.EtlController`, whose
-Structured-Streaming scheduler serializes epochs and therefore cannot
-reproduce the reference's cron-overlap bug (ST6).
+scheduler serializes fires and therefore cannot reproduce the
+reference's cron-overlap bug (ST6). Schedule state (pattern, start
+time, last error) lives in the controller; every verb reads it there.
 
 Design notes:
 - The server is control-plane only: one driver-side thread pool taking
@@ -20,15 +21,12 @@ Design notes:
   is on the 100 TB data path.
 - Schedules: the reference validates ANY node-cron pattern
   (index.js:30-37) and schedules it in Asia/Manila (index.js:75-86).
-  Spark processing-time intervals ("30 seconds") and "* * * * *" (the
-  one phase-less cron shape) map onto the processing-time trigger.
-  Every OTHER valid cron pattern ("*/5 * * * *", hourly "M * * * *",
-  daily "M H * * *", weekday/day-of-month fields, lists, ranges,
-  seconds — e.g. "0 9 * * 1-5") runs on the driver-side wall-clock
-  scheduler (plans/cron.py; r10, phase-exact for every shape since
-  r11): real Manila-clock fires at node-cron's exact matches, one
-  AvailableNow epoch per match against the same checkpoint. Only
-  genuinely invalid patterns get the reference's 400 shape.
+  Every valid pattern ("* * * * *", "*/5 * * * *", "0 9 * * 1-5",
+  6-field seconds shapes) and every Spark interval string
+  ("30 seconds") runs on the driver-side wall-clock scheduler
+  (plans/cron.py): fires at the schedule's matches, none at start, one
+  AvailableNow epoch per fire against the same checkpoint. Only
+  invalid patterns get the reference's 400 shape.
 - SSE tail: each connection polls the log file by offset (the ``tail``
   package's fs.watch, minus the dependency). DELETE bumps a clear
   generation that every tail compares on each poll, so a clear surfaces
@@ -48,9 +46,12 @@ from pathlib import Path
 from typing import Any, Callable
 
 from imp_etl_spark.plans.control import EtlController
-from imp_etl_spark.plans.cron import classify_schedule
+from imp_etl_spark.plans.cron import parse_schedule
 
 _TS_RE = re.compile(r"^\[(.*?)\]")
+_TRIGGER = "wall-clock cron (Asia/Manila)"
+_NOTE = ("cron schedule: fires at wall-clock matches (Asia/Manila); "
+         "each fire runs one incremental epoch")
 
 
 def format_uptime(seconds: float) -> str:
@@ -179,8 +180,6 @@ class EtlHttpServer:
         # epoch completions log themselves into the served log file,
         # like the reference's per-run logger lines
         controller.epoch_summaries = EtlHttpServer._EpochLog(self)
-        self._schedule_pattern: str | None = None
-        self._started_at: float | None = None
         self._last_run: float | None = None
         self.routes: dict[tuple[str, str], Callable[[_Handler], None]] = {
             ("POST", "/api/start-etl"): self._start_etl,
@@ -213,8 +212,7 @@ class EtlHttpServer:
         """Graceful shutdown (index.js:378-390): stop the schedule, let
         the in-flight epoch finish, then close the server."""
         self._stopping.set()
-        if self.controller.is_running and self._schedule_pattern:
-            self.controller.stop()
+        self.controller.stop()  # a no-op unless a schedule is active
         self._httpd.shutdown()
         self._httpd.server_close()
         self._thread.join(timeout=10)
@@ -288,46 +286,30 @@ class EtlHttpServer:
             if self.controller.is_running or self._forcing:
                 h._json(400, {
                     "message": "ETL scheduler is already running",
-                    "currentSchedule": self._schedule_pattern,
+                    "currentSchedule": self.controller.status()["schedule"],
                 })
                 return
-            pattern = h._body().get("schedule") or "* * * * *"
-            kind = classify_schedule(str(pattern))
-            if kind is None:
+            pattern = str(h._body().get("schedule") or "* * * * *")
+            if parse_schedule(pattern) is None:
                 h._json(400, {
                     "message": "Invalid cron schedule pattern",
                     "validExample": "* * * * * (every minute)",
                 })
                 return
-            mode, every = kind
             w = self.workload()
             self.controller.schedule(
                 w["queue_stream"], w["voucher"], w["transaction"],
                 w["voucher_path"], w["txn_path"], w["checkpoint_dir"],
-                every=(every if mode == "interval" else str(pattern)))
-            trigger = (every if mode == "interval"
-                       else "wall-clock cron (Asia/Manila)")
-            self._schedule_pattern = str(pattern)
-            self._started_at = time.time()
+                every=pattern)
             self.log(f"ETL scheduler started (schedule: {pattern}, "
-                     f"trigger: {trigger})")
-            resp = {
+                     f"trigger: {_TRIGGER})")
+            h._json(200, {
                 "message": "ETL scheduler started successfully",
-                "schedule": str(pattern),
-                "trigger": trigger,
+                "schedule": pattern,
+                "trigger": _TRIGGER,
                 "startTime": self._now_iso(),
-            }
-            if mode == "cron":
-                # cron shapes (r10, phase-exact for ALL shapes since
-                # r11): real wall-clock fires in the reference's
-                # timezone via a driver-side scheduler; each fire runs
-                # one AvailableNow epoch of the same checkpointed
-                # pipeline (plans/cron.py)
-                resp["note"] = (
-                    "cron schedule: fires at wall-clock matches "
-                    "(Asia/Manila); each fire runs one incremental "
-                    "epoch")
-            h._json(200, resp)
+                "note": _NOTE,
+            })
 
     def _start_etl_force(self, h: _Handler) -> None:
         # guard under the lock, run outside it: a second force during a
@@ -337,7 +319,7 @@ class EtlHttpServer:
                 h._json(400, {
                     "message": "ETL process is already running. Stop the "
                                "scheduler first or wait for it to complete.",
-                    "currentSchedule": self._schedule_pattern,
+                    "currentSchedule": self.controller.status()["schedule"],
                 })
                 return
             self._forcing = True
@@ -371,47 +353,52 @@ class EtlHttpServer:
             if not self.controller.is_running:
                 h._json(400, {"message": "ETL scheduler is not running"})
                 return
-            self.controller.stop()
-            stopped = self._schedule_pattern
-            uptime = time.time() - (self._started_at or time.time())
-            if stopped is not None:
-                # only a real schedule clears the display fields; a
-                # stop during a forced run (controller.stop() is a
-                # claim-aware no-op there) must not erase state the
-                # force path still owns — the reference likewise 200s
-                # with stoppedSchedule null in that window
-                # (index.js:166-206 with etlTask null)
-                self._schedule_pattern = None
-                self._started_at = None
+            # a stop during a forced run is a claim-aware no-op that
+            # reports schedule null, like the reference's 200 with
+            # stoppedSchedule null when etlTask is null (index.js:166-206)
+            st = self.controller.stop()
+        stopped = st["schedule"]
+        uptime = format_uptime(self._schedule_uptime(st))
         self.log(f"ETL scheduler stopped (was: {stopped}, uptime: "
-                 f"{format_uptime(uptime)})")
+                 f"{uptime})")
         h._json(200, {
             "message": "ETL scheduler stopped successfully",
             "stoppedSchedule": stopped,
             "stoppedAt": self._now_iso(),
             "lastRun": self._iso_at(self._last_run),
-            "totalUptime": format_uptime(uptime),
+            "totalUptime": uptime,
         })
 
+    @staticmethod
+    def _schedule_uptime(st: dict[str, Any]) -> float:
+        """Seconds since the schedule in controller status ``st``
+        started; 0 when no schedule is set (a forced run has none)."""
+        if st["schedule"] is None:
+            return 0
+        return st["uptimeSec"] or 0
+
     def _etl_status(self, h: _Handler) -> None:
-        running = self.controller.is_running
+        st = self.controller.status()
+        scheduled = st["schedule"] is not None
         h._json(200, {
-            "isRunning": running,
-            "currentSchedule": self._schedule_pattern,
+            "isRunning": st["isRunning"],
+            "currentSchedule": st["schedule"],
             "lastRun": self._iso_at(self._last_run),
-            "startTime": self._iso_at(self._started_at),
-            "uptime": format_uptime(time.time() - self._started_at)
-            if running and self._started_at else "0h 0m 0s",
-            "epochsCompleted": len(self.controller.epoch_summaries),
+            "startTime": self._iso_at(st["startedAt"]) if scheduled
+            else None,
+            "uptime": format_uptime(self._schedule_uptime(st)
+                                    if st["isRunning"] else 0),
+            "epochsCompleted": st["epochsCompleted"],
+            "lastError": st["lastError"],
         })
 
     def _health(self, h: _Handler) -> None:
-        running = self.controller.is_running
+        st = self.controller.status()
         h._json(200, {
             "status": "healthy",
-            "etlScheduler": "running" if running else "stopped",
-            "uptime": format_uptime(time.time() - self._started_at)
-            if running and self._started_at else "0h 0m 0s",
+            "etlScheduler": "running" if st["isRunning"] else "stopped",
+            "uptime": format_uptime(self._schedule_uptime(st)
+                                    if st["isRunning"] else 0),
         })
 
     # -- log surface -------------------------------------------------------

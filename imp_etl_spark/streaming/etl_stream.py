@@ -23,9 +23,9 @@ exact-fit execution model:
   watermark likewise holds back). The branch that did commit is replayed
   too, which the idempotent last-writer-wins sink makes harmless,
   matching ``ON DUPLICATE KEY UPDATE`` semantics;
-- ``trigger(availableNow=True)`` = the force-run endpoint (ST2);
-  ``trigger(processingTime=...)`` = the cron schedule (ST1);
-  ``query.stop()`` = ST5.
+- each query drains what has arrived (``trigger(availableNow=True)``)
+  and stops: the wall-clock scheduler (plans/cron.py) starts one per
+  schedule fire (ST1), and ``query.stop()`` = ST5.
 
 Scale notes: per-epoch work is bounded by the new queue slice, not the
 full queue, so steady-state cost tracks the change rate (the
@@ -47,7 +47,6 @@ def run_etl_stream(spark: SparkSession, queue_stream: DataFrame,
                    voucher: DataFrame, transaction: DataFrame,
                    voucher_path: str, txn_path: str,
                    checkpoint_dir: str,
-                   processing_time: str | None = None,
                    epoch_summaries: list[dict[str, Any]] | None = None,
                    **options: Any) -> StreamingQuery:
     """Start the incremental ETL query over a streaming work queue.
@@ -56,8 +55,8 @@ def run_etl_stream(spark: SparkSession, queue_stream: DataFrame,
     table); each micro-batch runs one ETL fire against the (batch)
     entity frames. ``options`` are the fire's keyword arguments
     (``plans.runner._run_etl``, the same set ``run_etl`` takes, minus
-    ``watermark``). The query triggers every ``processing_time`` when
-    given, else once over the available data (``availableNow``).
+    ``watermark``). The query runs over the data available at start
+    (``availableNow``) and then terminates.
     ``epoch_summaries``, if given, collects each committed epoch's
     run summary plus its ``epochId`` (driver-side list — test and
     observability hook). After every epoch, committed or not, the
@@ -80,15 +79,12 @@ def run_etl_stream(spark: SparkSession, queue_stream: DataFrame,
         finally:
             release_query_caches()
 
-    writer = (queue_stream.writeStream
-              .foreachBatch(_epoch)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("update"))
-    if processing_time is not None:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (queue_stream.writeStream
+            .foreachBatch(_epoch)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start())
 
 
 def dedup_stream(events: DataFrame, keys: list[str], ts_col: str = "ts",

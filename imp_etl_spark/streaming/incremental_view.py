@@ -102,12 +102,11 @@ def run_incremental_view(spark: SparkSession, stream: DataFrame,
                          path: str, key: Sequence[str], value_col: str,
                          order_col: str, checkpoint_dir: str,
                          n_buckets: int = U.DEFAULT_BUCKETS,
-                         available_now: bool = True,
-                         processing_time: str | None = None,
                          view_id: str | None = None,
                          ) -> StreamingQuery:
     """Maintain the per-key (n_rows, value_sum, first_seen, last_seen)
-    view of ``stream`` at ``path``. Invariant (tested): after any
+    view of ``stream`` at ``path``; the query drains what has arrived
+    (``availableNow``) and then terminates. Invariant (tested): after any
     sequence of epochs — including at-least-once REPLAYS of an epoch —
     the view equals the one-shot batch aggregation of everything the
     stream has delivered. The view's identity for the replay fence is
@@ -152,14 +151,8 @@ def run_incremental_view(spark: SparkSession, stream: DataFrame,
                        expected_version=base_v if base_v is not None
                        else -1)
 
-    writer = (stream.writeStream.outputMode("append")
-              .option("checkpointLocation", checkpoint_dir)
-              .foreachBatch(_epoch))
-    # processing_time wins over the available_now default — a caller
-    # asking for a cadence wants a live schedule, not a one-shot drain
-    # (same precedence as run_etl_stream, streaming/etl_stream.py)
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    elif available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (stream.writeStream.outputMode("append")
+            .option("checkpointLocation", checkpoint_dir)
+            .foreachBatch(_epoch)
+            .trigger(availableNow=True)
+            .start())

@@ -1,9 +1,9 @@
-"""Calendar cron (plans/cron.py, r10): the reference accepts ANY
-node-cron pattern (index.js:30-37 cron.validate; index.js:75-86
-cron.schedule in Asia/Manila) — these tests pin the engine's pattern
-grammar, next-fire search, node-cron AND field semantics, the
-wall-clock scheduler (injectable clock), and the controller/HTTP
-integration for weekday shapes like '0 9 * * 1-5'."""
+"""Schedules (plans/cron.py): the reference accepts ANY node-cron
+pattern (index.js:30-37 cron.validate; index.js:75-86 cron.schedule in
+Asia/Manila, runOnInit:false) — these tests pin the engine's pattern
+grammar, next-fire search, node-cron AND field semantics, the Spark
+interval period, the wall-clock scheduler (injectable clock), and the
+controller integration every schedule shares."""
 
 from __future__ import annotations
 
@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 from imp_etl_spark.plans.cron import (
     CronPattern,
     CronScheduler,
-    classify_schedule,
+    FixedPeriod,
+    parse_schedule,
 )
 
 MNL = ZoneInfo("Asia/Manila")
@@ -38,6 +39,35 @@ class FakeClock:
         t = self.now
         self.now = t + timedelta(seconds=self.step)
         return t
+
+
+class FakeQuery:
+    """A fire's streaming query whose epoch runs until ``stop()`` (or
+    ends at once with ``done=True``), optionally failing the way a
+    failed epoch's ``awaitTermination`` does."""
+
+    def __init__(self, done: bool = False, error: BaseException | None = None):
+        import threading
+
+        self._done = threading.Event()
+        if done:
+            self._done.set()
+        self.error = error
+        self.stop_calls = 0
+
+    @property
+    def isActive(self):
+        return not self._done.is_set()
+
+    def stop(self):
+        self.stop_calls += 1
+        self._done.set()
+
+    def awaitTermination(self, timeout=None):
+        self._done.wait(timeout)
+        if self.error is not None:
+            raise self.error
+        return self._done.is_set()
 
 
 def test_weekday_pattern_next_fire():
@@ -106,20 +136,34 @@ def test_invalid_and_never_firing_patterns():
 
 
 def test_classify_schedule_three_way():
-    assert classify_schedule("30 seconds") == ("interval", "30 seconds")
-    assert classify_schedule("* * * * *") == ("interval", "1 minute")
-    # r11 (ADVICE): every cron shape WITH a wall-clock phase routes
-    # through the scheduler — node-cron fires '30 2 * * *' at 02:30
-    # Manila and '*/5' at minutes 0,5,10...; the processing-time
-    # trigger mapping discarded that phase
-    for cal in ("*/5 * * * *", "15 * * * *", "30 2 * * *",
+    """One parser, three outcomes: a Spark interval string is a fixed
+    period, every valid cron pattern (``* * * * *`` included) is a
+    CronPattern, anything else is invalid."""
+    assert parse_schedule("30 seconds") == FixedPeriod("30 seconds", 30_000)
+    assert parse_schedule("2 hours") == FixedPeriod("2 hours", 7_200_000)
+    for cal in ("* * * * *", "*/5 * * * *", "15 * * * *", "30 2 * * *",
                 "0 9 * * 1-5", "0 0 1 * *", "0,30 9-17 * * *",
                 "*/20 * * * * *", "0 0 13 * fri"):
-        kind = classify_schedule(cal)
-        assert kind is not None and kind[0] == "cron", cal
-        assert isinstance(kind[1], CronPattern)
+        assert parse_schedule(cal) == CronPattern.parse(cal), cal
     for bad in ("nope", "61 * * * *", "0 seconds", "*/0 * * * *"):
-        assert classify_schedule(bad) is None, bad
+        assert parse_schedule(bad) is None, bad
+
+
+def test_fixed_period_fires_on_epoch_aligned_multiples():
+    """A Spark interval fires at multiples of the period counted from
+    the Unix epoch (Spark's processing-time phase), strictly after."""
+    from datetime import timezone
+
+    p = parse_schedule("1 minute")
+    assert p.next_fire(_dt(2026, 8, 12, 8, 59, 30)) == _dt(2026, 8, 12, 9)
+    assert p.next_fire(_dt(2026, 8, 12, 9)) == _dt(2026, 8, 12, 9, 1)
+    # a day is aligned to UTC midnight: 08:00 in Manila
+    d = parse_schedule("1 day").next_fire(_dt(2026, 8, 12, 9))
+    assert d == _dt(2026, 8, 13, 8) and d.tzinfo is MNL
+    assert d.astimezone(timezone.utc).hour == 0
+    ms = parse_schedule("250 milliseconds")
+    assert ms.next_fire(_dt(2026, 8, 12, 9, 0, 0, 100_000)) == \
+        _dt(2026, 8, 12, 9, 0, 0, 250_000)
 
 
 def test_scheduler_fires_with_fake_clock():
@@ -146,15 +190,15 @@ def test_scheduler_keeps_firing_after_error():
         if len(calls) == 1:
             raise RuntimeError("first fire fails")
 
-    errs: list[BaseException] = []
-    sch = CronScheduler("* * * * *", boom, now_fn=clock, tick=0.001,
-                        on_error=errs.append).start()
+    sch = CronScheduler("* * * * *", boom, now_fn=clock,
+                        tick=0.001).start()
     deadline = time.time() + 30
     while len(calls) < 3 and time.time() < deadline:
         time.sleep(0.01)
     sch.stop()
     assert len(calls) >= 3 and sch.fired >= 3
-    assert len(errs) == 1 and sch.errors == errs
+    assert sch.error_count == 1
+    assert sch.last_error == "RuntimeError: first fire fails"
 
 
 def test_controller_calendar_schedule_runs_epochs(spark, tmp_path):
@@ -222,23 +266,6 @@ def test_stop_reaches_inflight_fire_epoch(spark, monkeypatch):
 
     from imp_etl_spark.plans import control as control_mod
     from imp_etl_spark.plans.control import EtlController
-
-    class FakeQuery:
-        def __init__(self):
-            self._done = threading.Event()
-            self.stop_calls = 0
-
-        @property
-        def isActive(self):
-            return not self._done.is_set()
-
-        def stop(self):
-            self.stop_calls += 1
-            self._done.set()
-
-        def awaitTermination(self, timeout=None):
-            self._done.wait(timeout)
-            return self._done.is_set()
 
     fired = threading.Event()
     queries: list[FakeQuery] = []
@@ -408,7 +435,8 @@ def test_scheduler_stop_during_sleep_fires_nothing():
     t0 = time.time()
     sch.stop()
     assert time.time() - t0 < 30
-    assert fires == [] and sch.fired == 0 and sch.errors == []
+    assert fires == [] and sch.fired == 0 and sch.error_count == 0
+    assert sch.last_error is None
     assert not sch.is_alive
 
 
@@ -443,3 +471,92 @@ def test_cron_dst_gap_and_fold_pins():
         (1, 1, 30, 0)  # the FIRST 01:30 (EDT)
     after = pat2.next_fire(first)
     assert (after.day, after.hour, after.minute) == (2, 1, 30)  # next day
+
+
+def _schedule_fake(monkeypatch, fake_stream, every, clock):
+    """A controller scheduled on ``every`` whose fires start
+    ``fake_stream`` in place of the ETL query."""
+    from imp_etl_spark.plans import control as control_mod
+    from imp_etl_spark.plans.control import EtlController
+
+    monkeypatch.setattr(control_mod, "run_etl_stream", fake_stream)
+    ctl = EtlController(None)
+    ctl.schedule(None, None, None, "v", "t", "ckpt", every=every,
+                 clock=clock, tick=0.001)
+    return ctl
+
+
+def _wait_for(cond, seconds=20.0):
+    deadline = time.time() + seconds
+    while not cond() and time.time() < deadline:
+        time.sleep(0.01)
+    return cond()
+
+
+def test_interval_schedule_keeps_firing_after_failed_epoch(monkeypatch):
+    """An interval schedule is a wall-clock schedule like any other: a
+    failed epoch is recorded, the next fire starts a new epoch on the
+    same checkpoint, and a later one commits."""
+    calls: list[dict] = []
+
+    def fake_stream(*args, epoch_summaries=None, **kwargs):
+        calls.append(kwargs)
+        if len(calls) == 1:
+            return FakeQuery(done=True, error=RuntimeError("epoch 0 lost"))
+        epoch_summaries.append({"epochId": len(calls) - 1})
+        return FakeQuery(done=True)
+
+    clock = FakeClock(_dt(2026, 8, 12, 8, 59, 59), step=0.5)
+    ctl = _schedule_fake(monkeypatch, fake_stream, "2 seconds", clock)
+    assert _wait_for(lambda: len(ctl.epoch_summaries) >= 2)
+    st = ctl.status()
+    assert st["isRunning"] is True
+    assert st["lastError"] == "RuntimeError: epoch 0 lost"
+    ctl.stop()
+    assert len(calls) >= 3 and ctl.epoch_summaries[0]["epochId"] >= 1
+    assert all(k == {} for k in calls)  # no trigger option on any fire
+
+
+def test_every_minute_schedule_waits_for_first_match(monkeypatch):
+    """``* * * * *`` starts nothing before the first minute match (the
+    reference's runOnInit:false)."""
+    starts: list[datetime] = []
+    clock = FakeClock(_dt(2026, 8, 12, 8, 59, 30), step=0.5)
+
+    def fake_stream(*args, **kwargs):
+        starts.append(clock.now)
+        return FakeQuery(done=True)
+
+    ctl = _schedule_fake(monkeypatch, fake_stream, "* * * * *", clock)
+    assert _wait_for(lambda: starts)
+    ctl.stop()
+    assert starts[0] >= _dt(2026, 8, 12, 9, 0, 0), starts[0]
+
+
+def test_failed_fires_keep_bounded_error_record(monkeypatch):
+    """A schedule whose every fire fails keeps one error count and the
+    last error, not one exception per fire, and status shows it while
+    the schedule runs."""
+    import sys
+
+    def failing_stream(*args, **kwargs):
+        return FakeQuery(done=True, error=RuntimeError("merge failed"))
+
+    # each clock read is one second on: every read is a new match
+    clock = FakeClock(_dt(2026, 8, 12, 8, 59, 59), step=1.0)
+    ctl = _schedule_fake(monkeypatch, failing_stream, "* * * * * *", clock)
+    cron = ctl._cron
+
+    def size() -> int:
+        return sum(sys.getsizeof(v) for v in vars(cron).values())
+
+    assert _wait_for(lambda: cron.fired >= 1000)
+    before = size()
+    assert _wait_for(lambda: cron.fired >= 5000)
+    after = size()
+    st = ctl.status()
+    ctl.stop()
+    assert after == before
+    assert st["isRunning"] is True
+    assert st["lastError"] == "RuntimeError: merge failed"
+    assert cron.error_count == cron.fired

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from imp_etl_spark.plans.control import EtlController
-from imp_etl_spark.plans.cron import CronPattern, classify_schedule
+from imp_etl_spark.plans.cron import CronPattern, FixedPeriod, parse_schedule
 from imp_etl_spark.plans.http_api import (
     EtlHttpServer,
     format_uptime,
@@ -76,19 +76,14 @@ def server(spark, tmp_path):
 
 
 def test_parse_schedule_shapes():
-    """The shapes the /start-etl handler accepts, as it classifies them."""
-    assert classify_schedule("* * * * *") == ("interval", "1 minute")
-    # r11 (ADVICE): phase-carrying cron shapes are calendar schedules
-    # now (wall-clock scheduler), not interval triggers
-    for cal in ("*/5 * * * *", "15 * * * *", "30 2 * * *", "* * * * 1",
-                "1 2 3 4 5 6"):
-        kind = classify_schedule(cal)
-        assert kind is not None and kind[0] == "cron", cal
-        assert isinstance(kind[1], CronPattern)
-    assert classify_schedule("45 seconds") == ("interval", "45 seconds")
-    assert classify_schedule("2 seconds") == ("interval", "2 seconds")
+    """The shapes the /start-etl handler accepts, as it parses them."""
+    for cal in ("* * * * *", "*/5 * * * *", "15 * * * *", "30 2 * * *",
+                "* * * * 1", "1 2 3 4 5 6"):
+        assert isinstance(parse_schedule(cal), CronPattern), cal
+    assert parse_schedule("45 seconds") == FixedPeriod("45 seconds", 45_000)
+    assert parse_schedule("2 seconds") == FixedPeriod("2 seconds", 2_000)
     for bad in ("nope", "61 * * * *", "*/0 * * * *"):
-        assert classify_schedule(bad) is None, bad
+        assert parse_schedule(bad) is None, bad
 
 
 def test_format_uptime_matches_reference_shape():
@@ -285,8 +280,8 @@ def test_log_timestamps_are_manila_iso(server):
 
 
 def test_zero_interval_rejected():
-    assert classify_schedule("0 seconds") is None
-    assert classify_schedule("0 minutes") is None
+    assert parse_schedule("0 seconds") is None
+    assert parse_schedule("0 minutes") is None
 
 
 def test_status_timestamps_iso_or_null(server):
@@ -311,21 +306,16 @@ def test_status_timestamps_iso_or_null(server):
 
 
 def test_cron_shape_start_routes_wall_clock(server):
-    """r11 (ADVICE): phase-carrying cron shapes no longer map onto
-    phase-less triggers — they schedule on the wall-clock path and
-    the response says so."""
-    code, out = _call(server.address, "POST", "/api/start-etl",
-                      {"schedule": "*/5 * * * *"})
-    assert code == 200
-    assert out["trigger"] == "wall-clock cron (Asia/Manila)"
-    assert "wall-clock" in out.get("note", "")
-    code, out2 = _call(server.address, "POST", "/api/stop-etl", {})
-    assert code == 200
-    # a literal interval needs no note
-    code, out = _call(server.address, "POST", "/api/start-etl",
-                      {"schedule": "2 seconds"})
-    assert code == 200 and "note" not in out
-    _call(server.address, "POST", "/api/stop-etl", {})
+    """Every schedule — cron shape or Spark interval — runs on the
+    wall-clock scheduler, and the response says so the same way."""
+    for pattern in ("*/5 * * * *", "2 seconds"):
+        code, out = _call(server.address, "POST", "/api/start-etl",
+                          {"schedule": pattern})
+        assert code == 200
+        assert out["trigger"] == "wall-clock cron (Asia/Manila)"
+        assert "wall-clock" in out.get("note", "")
+        code, out2 = _call(server.address, "POST", "/api/stop-etl", {})
+        assert code == 200 and out2["stoppedSchedule"] == pattern
 
 
 def test_start_etl_blocked_while_force_in_flight(server):
@@ -429,3 +419,41 @@ def test_calendar_cron_start_accepted(server):
     assert code == 200
     code, st = _call(server.address, "GET", "/api/etl-status")
     assert st["isRunning"] is False
+
+
+class _FailedEpoch:
+    """A fire's query whose epoch failed."""
+
+    isActive = False
+
+    def stop(self):
+        pass
+
+    def awaitTermination(self, timeout=None):
+        raise RuntimeError("merge failed")
+
+
+def test_status_reports_last_failed_fire(tmp_path, monkeypatch):
+    """A schedule whose fires fail keeps running, and etl-status shows
+    the last error next to ``isRunning: true``."""
+    from imp_etl_spark.plans import control as control_mod
+
+    monkeypatch.setattr(control_mod, "run_etl_stream",
+                        lambda *a, **k: _FailedEpoch())
+    keys = ("queue_stream", "voucher", "transaction", "voucher_path",
+            "txn_path", "checkpoint_dir")
+    with EtlHttpServer(EtlController(None), lambda: dict.fromkeys(keys),
+                       log_path=str(tmp_path / "etl.log")) as srv:
+        _, st = _call(srv.address, "GET", "/api/etl-status")
+        assert st["lastError"] is None
+        code, _ = _call(srv.address, "POST", "/api/start-etl",
+                        {"schedule": "1 second"})
+        assert code == 200
+        deadline = time.time() + 30
+        while st["lastError"] is None and time.time() < deadline:
+            time.sleep(0.1)
+            _, st = _call(srv.address, "GET", "/api/etl-status")
+        assert st["isRunning"] is True and st["currentSchedule"] == "1 second"
+        assert st["lastError"] == "RuntimeError: merge failed"
+        code, out = _call(srv.address, "POST", "/api/stop-etl", {})
+        assert code == 200 and out["stoppedSchedule"] == "1 second"
