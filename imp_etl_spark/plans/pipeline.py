@@ -8,19 +8,22 @@ upsert, with {processed, skipped, warnings} accounting.
 Spark shape: instead of N point lookups at 4-way concurrency, each branch
 is *one* broadcast-semi-joined scan; cleanse is one projection of SQL-text
 rules inside whole-stage codegen; validity filtering splits into a kept
-frame and a skipped side-output (the reference's warning lines);
-last-writer-wins dedup prepares unique keys for the MERGE-style sink.
-The J3 warnings (queue refs with no voucher or no transaction rows) are
-one aggregate over the queue refs and both branch points.
+frame and a skipped side-output (the reference's warning lines). The
+kept rows go to the MERGE-style sink as they are: ``merge_upsert`` owns
+the last-writer-wins dedup. The J3 warnings (queue refs with no voucher
+or no transaction rows) are one aggregate over the queue refs and both
+branch points.
 
-Scale notes: the deduped reference-key set is orders of magnitude smaller
-than the entity tables -> broadcast (no shuffle of either fact table).
-Each branch's dedup exchanges its rows once, on the sink's own bucket
-expression, so a table-creating write needs no second exchange. A partial
-merge into an existing table adds one more exchange on that same
-expression: the batch and the touched buckets' rows fold together there
-(``upsert.merge_upsert``). The warnings aggregate shuffles only reference
-numbers. Counters ride ``observe()`` — zero extra passes over the data.
+Scale notes: the queue's reference numbers are orders of magnitude fewer
+than the entity rows -> broadcast as they are (no shuffle of either fact
+table, and no dedup shuffle of the refs: duplicate build keys cannot
+change a left semi join). A branch adds no exchange of its own: its only
+payload shuffle is the merge's, one exchange on the sink's bucket
+expression that dedups the batch, folds it over the touched buckets'
+rows and clusters the write (``upsert.merge_upsert``). The warnings
+aggregate shuffles only reference numbers. The skipped counter rides
+``observe()``, and the merge's write counts the processed rows — zero
+extra passes over the data.
 """
 
 from __future__ import annotations
@@ -33,9 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from imp_etl_spark.functions import cleanse
-from imp_etl_spark.operators.join import semi_prune
-from imp_etl_spark.operators.util import spread_small_scan
-from imp_etl_spark.plans.upsert import DEFAULT_BUCKETS, _dedup_in_bucket_layout
+from imp_etl_spark.operators.dedup import latest_per_key
 
 
 def clean_queue(queue: DataFrame) -> DataFrame:
@@ -47,11 +48,6 @@ def clean_queue(queue: DataFrame) -> DataFrame:
         & F.col("`table`").isNotNull()
         & ~cleanse.falsy_key("reference_no")
     )
-
-
-def reference_keys(queue: DataFrame) -> DataFrame:
-    """The deduplicated key set driving both lookup branches (J1)."""
-    return clean_queue(queue).select("reference_no").dropDuplicates(["reference_no"])
 
 
 def cleanse_voucher(df: DataFrame) -> DataFrame:
@@ -121,32 +117,37 @@ def cleanse_transaction(df: DataFrame) -> DataFrame:
 @dataclass
 class BranchResult:
     """One entity branch (voucher or transaction): frames, not numbers —
-    callers trigger actions; counts come from one .count() per frame or
-    from observe() in the runner."""
-    valid: DataFrame          # cleansed, key-valid, deduped (ready to MERGE)
-    skipped: DataFrame        # falsy-key rejects (P4/P5 side-output)
+    callers trigger actions; the sink's write counts the processed rows
+    (runner), the skipped ones ride observe()."""
+    rows: DataFrame           # cleansed, key-valid, NOT deduped (the MERGE batch)
     cleansed: DataFrame       # persisted branch point (unpersist me)
-    # observe() metrics (A2/A3): recorded for free during the first action
-    # that executes the branch (normally the MERGE write) — zero extra
-    # passes. obs_cleansed -> {"skipped": n}; obs_valid -> {"processed": n}.
+    key: list[str]
+    order_col: str
+    # observe() metric (A2/A3) -> {"skipped": n}: recorded for free during
+    # the first action that executes the branch (normally the MERGE).
     obs_cleansed: Observation | None = None
-    obs_valid: Observation | None = None
-    # Observation.get blocks until SOME action executes the observed plan,
-    # so the free-counter path is only taken once the runner marks the
-    # branch executed (after the MERGE). Before that, fall back to one
-    # count() — which is itself an action on the observed plan, so it both
-    # returns the number and fulfills the observation for later reads.
+    # Observation.get blocks until SOME action executes the observed plan:
+    # until the runner marks the branch executed (after the MERGE),
+    # skipped_count falls back to one count().
     executed: bool = False
 
+    @property
+    def skipped(self) -> DataFrame:
+        """Falsy-key rejects (the P4/P5 side-output)."""
+        return self.cleansed.filter(cleanse.any_falsy_key(self.key))
+
+    @property
+    def valid(self) -> DataFrame:
+        """The last row per key of ``rows`` (by ``order_col``): the batch
+        of a sink that needs unique keys (JDBC's keyed MERGE)."""
+        return latest_per_key(self.rows, self.key, [self.order_col],
+                              desc=True)
+
     def processed_count(self) -> int:
-        """Post-dedup valid rows: free from observe() once the merge has
-        run, else one count() (which also fulfills the observation)."""
-        if self.executed and self.obs_valid is not None:
-            try:
-                return int(self.obs_valid.get["processed"])
-            except Exception:
-                pass  # metrics node compiled away — see skipped_count
-        n = self.valid.count()
+        """Distinct valid keys by one count() — which also fulfills the
+        skipped observation. For a branch a sink wrote, the sink's own
+        count of the same number is free (runner)."""
+        n = self.rows.select(*self.key).distinct().count()
         self.executed = True
         return n
 
@@ -171,29 +172,33 @@ class BranchResult:
 class PipelineResult:
     voucher: BranchResult
     transaction: BranchResult
-    keys: DataFrame
-    warnings: DataFrame       # J3 lines, one ``warning`` column, no order
+    queued: DataFrame         # the work queue's rows that name a ref
     extras: dict = field(default_factory=dict)
 
+    @property
+    def warnings(self) -> DataFrame:
+        """J3 lines, one ``warning`` column, no order; planned on access
+        (the runner plans it in its pool, beside the merges). An entity's
+        refs all survive the semi prune and cleanse, so the warnings read
+        the cached branch points instead of re-running the entity scans."""
+        return missing_ref_warnings(self.queued, self.voucher.cleansed,
+                                    self.transaction.cleansed)
 
-def _branch(entity: DataFrame, keys: DataFrame, pk: list[str],
-            cleanse_fn, order_col: str, sink_buckets: int,
-            sink_files_per_bucket: int) -> BranchResult:
-    # cleanse is CPU-bound (regex/timestamp parsing); widen few-partition
-    # local scans to all cores first (no-op on real multi-split tables).
-    # probe=entity: the partition decision reads the raw scan, so the
-    # semi join's broadcast isn't eagerly built just to count partitions
-    pruned = spread_small_scan(semi_prune(entity, keys, "reference_no"),
-                               probe=entity)
+
+def _branch(entity: DataFrame, refs: DataFrame, pk: list[str],
+            cleanse_fn, order_col: str) -> BranchResult:
+    # a left semi join emits each entity row once however often its
+    # ref repeats, so the refs broadcast as they are: no dedup shuffle
+    pruned = entity.join(F.broadcast(refs), "reference_no", "left_semi")
     invalid = cleanse.any_falsy_key(pk)
     # skipped side-output, missing-ref warnings and the MERGE all
     # consume this node; persist turns the recomputation of
     # scan->semi-join->cleanse into one pass (MEMORY_AND_DISK: spills
     # rather than OOMs)
     cleansed = cleanse_fn(pruned).persist(StorageLevel.MEMORY_AND_DISK)
-    # counters ride the data (A2): recorded when the MERGE executes the
-    # branch — no dedicated count jobs. The observation sits ON TOP of
-    # the persisted node, on the merge-bound lineage ONLY: the
+    # the skipped counter rides the data (A2): recorded when the MERGE
+    # executes the branch — no dedicated count job. The observation sits
+    # ON TOP of the persisted node, on the merge-bound lineage ONLY: the
     # side-consumers (skipped sample, missing-ref warnings — possibly
     # partial actions like limit()) share the cache underneath without
     # ever executing the observed node, so they can run concurrently
@@ -204,19 +209,9 @@ def _branch(entity: DataFrame, keys: DataFrame, pk: list[str],
     obs_cleansed = Observation(f"cleansed_{tag}")
     observed = cleansed.observe(
         obs_cleansed, F.sum(invalid.cast("long")).alias("skipped"))
-    skipped = cleansed.filter(invalid)
-    obs_valid = Observation(f"valid_{tag}")
-    # dedup fused into the sink's bucket layout (r13): one exchange
-    # instead of hash(pk) + hash(bucket). The observe sits ON the
-    # post-dedup node, so "processed" counts exactly the deduped rows
-    # the MERGE writes (A2/A3 semantics).
-    deduped = _dedup_in_bucket_layout(observed.filter(~invalid), pk,
-                                      order_col, sink_buckets,
-                                      sink_files_per_bucket)
-    valid = deduped.observe(obs_valid,
-                            F.count(F.lit(1)).alias("processed"))
-    return BranchResult(valid=valid, skipped=skipped, cleansed=cleansed,
-                        obs_cleansed=obs_cleansed, obs_valid=obs_valid)
+    return BranchResult(rows=observed.filter(~invalid), cleansed=cleansed,
+                        key=pk, order_col=order_col,
+                        obs_cleansed=obs_cleansed)
 
 
 def missing_ref_warnings(queue: DataFrame, voucher: DataFrame,
@@ -254,39 +249,18 @@ def build_pipeline(queue: DataFrame, voucher: DataFrame,
                    voucher_key: list[str] | None = None,
                    transaction_key: list[str] | None = None,
                    order_col: str = "reference_no",
-                   sink_buckets: int | tuple[int, int] = DEFAULT_BUCKETS,
-                   sink_files_per_bucket: int | tuple[int, int] = 1,
                    ) -> PipelineResult:
     """Assemble the full dataflow. All lazy — nothing executes here
     (the branch points are only marked for caching; the caller
-    unpersists ``BranchResult.cleansed`` after its writes).
-
-    ``sink_buckets``: the bucket count of the MERGE sink the branches
-    feed. Each branch's last-writer-wins dedup is fused into the sink's
-    bucket layout (one exchange on the bucket expression instead of
-    hash(pk) followed by the sink's hash(bucket); see
-    ``_dedup_in_bucket_layout``), so the caller should pass
-    ``batch_pre_clustered=True`` with the SAME ``n_buckets`` (and
-    ``files_per_bucket``) to ``merge_upsert``. A sink that ignores
-    clustering (JDBC) takes the same shape. Either value may be a
-    ``(voucher, transaction)`` pair when the two tables' layouts
-    differ."""
-    def per_branch(x):
-        return x if isinstance(x, tuple) else (x, x)
-
-    (v_nb, t_nb), (v_fpb, t_fpb) = (per_branch(sink_buckets),
-                                    per_branch(sink_files_per_bucket))
-    keys = reference_keys(queue)
-    vb = _branch(voucher, keys, voucher_key or ["voucher_id", "reference_no"],
-                 cleanse_voucher, order_col, v_nb, v_fpb)
-    tb = _branch(transaction, keys,
+    unpersists ``BranchResult.cleansed`` after its writes). Each
+    branch's ``rows`` may repeat a key: ``merge_upsert`` keeps the last
+    row per key by ``order_col`` in the exchange that lays out its
+    write, and ``BranchResult.valid`` dedups for a sink that cannot."""
+    queued = clean_queue(queue)
+    refs = queued.select("reference_no")
+    vb = _branch(voucher, refs, voucher_key or ["voucher_id", "reference_no"],
+                 cleanse_voucher, order_col)
+    tb = _branch(transaction, refs,
                  transaction_key or ["voucher_details_id", "reference_no"],
-                 cleanse_transaction, order_col, t_nb, t_fpb)
-    # a key present in an entity always survives the semi prune and
-    # cleanse never rewrites reference_no, so the persisted branch
-    # points hold the same refs as the entities — the warnings then read
-    # cached blocks instead of re-running the entity scans.
-    warnings = missing_ref_warnings(clean_queue(queue), vb.cleansed,
-                                    tb.cleansed)
-    return PipelineResult(voucher=vb, transaction=tb, keys=keys,
-                          warnings=warnings)
+                 cleanse_transaction, order_col)
+    return PipelineResult(voucher=vb, transaction=tb, queued=queued)

@@ -28,11 +28,13 @@ import time
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from imp_etl_spark.plans.pipeline import build_pipeline
-from imp_etl_spark.plans.upsert import merge_upsert, sink_layout
+from imp_etl_spark.plans.pipeline import BranchResult, build_pipeline
+from imp_etl_spark.plans.upsert import (_observed_count, merge_upsert,
+                                        sink_layout, upserted_rows)
 
 #: ST8 parity (services/etlService.js:13-14): 3 attempts, 1000 ms apart
 RETRY_LIMIT = 3
@@ -105,23 +107,14 @@ def _run_etl(spark: SparkSession, queue: DataFrame, voucher: DataFrame,
     if watermark is not None:
         queue = queue.filter(F.col("log_id") > F.lit(watermark))
 
-    # fused dedup↔bucket layout (r13): each branch exchanges ONCE on
-    # its table's own bucket expression and the sink writes it
-    # pre-clustered — see plans.upsert._dedup_in_bucket_layout and
-    # sink_layout. The JDBC sink ignores clustering (any layout is a
-    # valid batch), so one fused shape serves both sinks.
-    v_nb, v_fpb = sink_layout(spark, voucher_path)
-    t_nb, t_fpb = sink_layout(spark, txn_path)
     result = build_pipeline(queue, voucher, transaction,
                             voucher_key=voucher_key,
                             transaction_key=transaction_key,
-                            order_col=order_col,
-                            sink_buckets=(v_nb, t_nb),
-                            sink_files_per_bucket=(v_fpb, t_fpb))
+                            order_col=order_col)
 
-    # MERGE first: the writes execute both branches, and the observe()
-    # metrics attached in build_pipeline record the processed/skipped
-    # counters during that same pass — zero dedicated count jobs (A2/A3).
+    # MERGE first: the writes execute both branches and count the keys
+    # they took (processed); the observe() attached in build_pipeline
+    # records skipped in that same pass — zero count jobs (A2/A3).
     # The two branches are independent DAGs writing disjoint paths, so
     # submit them as concurrent Spark jobs: their scan/shuffle/write
     # phases interleave across the cluster instead of serializing (the
@@ -137,60 +130,64 @@ def _run_etl(spark: SparkSession, queue: DataFrame, voucher: DataFrame,
     # are computed once whichever consumer gets there first;
     # BlockManager serializes per-block computation).
     retry_warnings: list[str] = []
-    v_keys = voucher_key or ["voucher_id", "reference_no"]
-    t_keys = transaction_key or ["voucher_details_id", "reference_no"]
     if sink == "jdbc":
         assert jdbc_url, "sink='jdbc' needs jdbc_url"
         from imp_etl_spark.sources.io import upsert_jdbc
 
         jopts = dict(jdbc_options or {})
 
-        def v_write():
-            return upsert_jdbc(result.voucher.valid, jdbc_url,
-                               voucher_path, keys=v_keys, **jopts)
-
-        def t_write():
-            return upsert_jdbc(result.transaction.valid, jdbc_url,
-                               txn_path, keys=t_keys, **jopts)
+        def write(branch: BranchResult, table: str):
+            obs = Observation()  # one per attempt: it attaches once
+            upsert_jdbc(branch.valid.observe(
+                obs, F.count(F.lit(1)).alias("n")), jdbc_url, table,
+                keys=branch.key, **jopts)
+            return _observed_count(obs)
     elif sink == "manifest":
-        def v_write():
-            return merge_upsert(
-                spark, voucher_path, result.voucher.valid, v_keys,
-                order_col, n_buckets=v_nb, files_per_bucket=v_fpb,
-                batch_is_unique=True, batch_pre_clustered=True)
-
-        def t_write():
-            return merge_upsert(
-                spark, txn_path, result.transaction.valid, t_keys,
-                order_col, n_buckets=t_nb, files_per_bucket=t_fpb,
-                batch_is_unique=True, batch_pre_clustered=True)
+        def write(branch: BranchResult, path: str):
+            # the merge dedups the rows in the exchange of its write
+            n_buckets, files_per_bucket = sink_layout(spark, path)
+            version = merge_upsert(spark, path, branch.rows, branch.key,
+                                   order_col, n_buckets=n_buckets,
+                                   files_per_bucket=files_per_bucket)
+            return upserted_rows(path, version)
     else:
         raise ValueError(f"unknown sink {sink!r}")
+
+    def submit(fn, *args, **kwargs):
+        # the pool's jobs carry the caller's job group and other local
+        # properties; each wrap copies them, so no two threads share one
+        return pool.submit(inheritable_thread_target(spark)(fn),
+                           *args, **kwargs)
+
     with ThreadPoolExecutor(max_workers=4) as pool:
-        fv = pool.submit(
-            retry_with_delay, v_write,
-            "voucher records", retry_warnings, sleep=_sleep)
-        ft = pool.submit(
-            retry_with_delay, t_write,
-            "transaction records", retry_warnings, sleep=_sleep)
+        fv = submit(retry_with_delay, lambda: write(result.voucher,
+                                                    voucher_path),
+                    "voucher records", retry_warnings, sleep=_sleep)
+        ft = submit(retry_with_delay, lambda: write(result.transaction,
+                                                    txn_path),
+                    "transaction records", retry_warnings, sleep=_sleep)
         # sample 5, as the reference logs slice(0,5) (etlService.js:499-510);
         # neither picks a defined 5
-        fw = pool.submit(lambda: [
+        fw = submit(lambda: [
             r["warning"] for r in result.warnings.limit(5).collect()])
-        fwm = pool.submit(
+        fwm = submit(
             lambda: queue.agg(F.max("log_id").alias("wm")).collect()[0])
-        _, _, v_ok = fv.result()
-        _, _, t_ok = ft.result()
+        _, v_processed, v_ok = fv.result()
+        _, t_processed, t_ok = ft.result()
         missing_warnings = fw.result()
         new_wm_row = fwm.result()
-    # a successful merge executed the branch's observed plan — counter
-    # reads are free; a failed branch falls back to one count() (needed
-    # to account its rows as skipped, matching etlService.js:86-92)
+    # a successful write executed the branch's observed plan and counted
+    # its keys — counter reads are free; a failed branch (or a count
+    # that empty-relation propagation compiled away) falls back to one
+    # count() (needed to account its rows as skipped, matching
+    # etlService.js:86-92)
     result.voucher.executed = v_ok
     result.transaction.executed = t_ok
-    processed_voucher = result.voucher.processed_count()
+    processed_voucher = (v_processed if v_processed is not None
+                         else result.voucher.processed_count())
     skipped_voucher = result.voucher.skipped_count()
-    processed_txn = result.transaction.processed_count()
+    processed_txn = (t_processed if t_processed is not None
+                     else result.transaction.processed_count())
     skipped_txn = result.transaction.skipped_count()
     if not v_ok:
         # ST8 final-failure accounting: would-be-processed rows count as

@@ -60,10 +60,11 @@ directories (path-level pruning — stronger than a partition filter:
 untouched dirs are never even listed) with the manifest's recorded
 schema (no footer read to infer it), and folds batch and target rows in
 ONE exchange on the bucket expression (``_dedup_in_bucket_layout``,
-batch over target); the write takes that clustering as it is. A batch
-from the ETL pipeline arrives already exchanged on the same expression,
-so a cron fire shuffles each branch twice: the batch's dedup and this
-fold. Schema-evolving batches (added/removed/retyped columns — the dtype
+batch over target); the write takes that clustering as it is. The
+merge owns the batch's last-writer-wins dedup too: one window keeps
+each key's newest batch row over its target row, so a cron fire
+shuffles each branch's rows once, and a batch may carry duplicate
+keys. Schema-evolving batches (added/removed/retyped columns — the dtype
 check against the recorded schema catches silent type drift, not just
 new names) fall back to one full bucketed rewrite through the same fold,
 so every directory a manifest references carries the identical schema.
@@ -78,7 +79,7 @@ import time
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from imp_etl_spark.operators.dedup import latest_per_key
@@ -159,6 +160,13 @@ def last_txn_version(path: str, app_id: str) -> int | None:
     except (OSError, ValueError):
         return None
     return int(v) if v is not None else None
+
+
+def upserted_rows(path: str, version: int) -> int | None:
+    """Rows (distinct batch keys) the merge that committed ``version``
+    wrote, as its write counted them, like Delta's operation metrics;
+    None for maintenance commits and an uncounted write."""
+    return _read_manifest(path, version).get("upserted")
 
 
 def current_n_buckets(path: str) -> int | None:
@@ -393,8 +401,8 @@ def _sub_expr(key: Sequence[str], files_per_bucket: int):
                   F.lit(files_per_bucket))
 
 
-def _dedup_in_bucket_layout(df: DataFrame, pk: list[str], order_col: str,
-                            n_buckets: int,
+def _dedup_in_bucket_layout(df: DataFrame, pk: list[str],
+                            order: Sequence[str], n_buckets: int,
                             files_per_bucket: int = 1) -> DataFrame:
     """Last-writer-wins dedup fused INTO the sink's bucket layout (r13,
     VERDICT r12 item 3 — the dedup↔bucket-write double exchange).
@@ -406,14 +414,15 @@ def _dedup_in_bucket_layout(df: DataFrame, pk: list[str], order_col: str,
     sink's own bucket expression, then a lag-based first-row-of-key
     filter inside a window PARTITIONED BY that same expression (same
     clustering — Catalyst inserts no second exchange). Sorting by
-    (pk asc, order desc) makes the first row of each key block the
-    max-``order_col`` row — the same winner ``latest_per_key``'s
-    row_number pick selects (ties within a key share the order value
-    and are arbitrary in both shapes). ``_write_bucketed`` then writes
-    the already-clustered rows without re-partitioning. Two callers:
-    the pipeline's per-branch dedup (order = the batch's order column)
-    and ``merge_upsert``'s fold of batch and target rows (order =
-    ``__prio``, batch over target).
+    (pk asc, each ``order`` column desc) makes the first row of each
+    key block the max-``order`` row — the same winner
+    ``latest_per_key``'s row_number pick selects (ties within a key
+    share the order values and are arbitrary in both shapes).
+    ``_write_bucketed`` then writes the already-clustered rows without
+    re-partitioning. ``merge_upsert`` runs every write through it: the
+    batch alone (order = the batch's order column) or the batch folded
+    over target rows (order = ``__prio`` then the order column, so
+    batch rows beat target rows and the newest batch row wins).
 
     ``files_per_bucket`` keeps the fused shape scale-adaptive: with
     one partition per bucket, a big batch sorts in only ``n_buckets``
@@ -438,7 +447,7 @@ def _dedup_in_bucket_layout(df: DataFrame, pk: list[str], order_col: str,
         exchanged = df.repartition(*parts)
     ks = F.struct(*[F.col(k) for k in pk])
     w = Window.partitionBy(*parts).orderBy(
-        *[F.col(k).asc() for k in pk], F.col(order_col).desc())
+        *[F.col(k).asc() for k in pk], *[F.col(c).desc() for c in order])
     return (
         exchanged
         .withColumn("__first", ~F.lag(ks).over(w).eqNullSafe(ks))
@@ -482,18 +491,34 @@ def _write_bucketed(df: DataFrame, key: Sequence[str], n_buckets: int,
     out.write.mode("overwrite").partitionBy("__bucket").parquet(data_dir)
 
 
-def _fold_batch_over(batch: DataFrame, target: DataFrame,
-                     key: list[str], n_buckets: int,
-                     files_per_bucket: int) -> DataFrame:
-    """Batch rows (``__prio`` 1) beat target rows (``__prio`` 0) per key,
-    deduped in the table's own bucket layout: one exchange of batch and
-    target rows together, and the result is clustered for a
-    ``pre_clustered`` write. Columns missing on one side fill with
-    null (schema evolution)."""
+def _upsert_rows(batch: DataFrame, target: DataFrame | None,
+                 key: list[str], order: list[str], n_buckets: int,
+                 files_per_bucket: int) -> tuple[DataFrame, Observation]:
+    """The newest batch row per key (by ``order``), over ``target``'s
+    rows when given (``__prio`` 1 beats 0; columns missing on one side
+    fill with null), deduped by one exchange and one window in the
+    table's bucket layout. The fresh observation (one attaches once)
+    counts the batch rows that win: the batch's distinct keys."""
+    obs = Observation()
+    if target is None:
+        rows = _dedup_in_bucket_layout(batch, key, order, n_buckets,
+                                       files_per_bucket)
+        return rows.observe(obs, F.count(F.lit(1)).alias("n")), obs
     both = batch.withColumn("__prio", F.lit(1)).unionByName(
         target.withColumn("__prio", F.lit(0)), allowMissingColumns=True)
-    return _dedup_in_bucket_layout(both, key, "__prio", n_buckets,
-                                   files_per_bucket).drop("__prio")
+    rows = _dedup_in_bucket_layout(both, key, ["__prio", *order],
+                                   n_buckets, files_per_bucket)
+    return (rows.observe(obs, F.sum("__prio").alias("n")).drop("__prio"),
+            obs)
+
+
+def _observed_count(obs: Observation) -> int | None:
+    """``n`` of an observation whose plan ran; None when empty-relation
+    propagation removed its metrics node (the row comes back empty)."""
+    try:
+        return int(obs.get["n"] or 0)
+    except Exception:  # noqa: BLE001 — see docstring
+        return None
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -516,9 +541,7 @@ def merge_upsert(spark: SparkSession, path: str, batch: DataFrame,
                  txn_version: int | None = None,
                  max_commit_retries: int = 3,
                  batch_replaces_touched_buckets: bool = False,
-                 expected_version: int | None = None,
-                 batch_is_unique: bool = False,
-                 batch_pre_clustered: bool = False) -> int:
+                 expected_version: int | None = None) -> int:
     """Upsert ``batch`` into the bucketed snapshot table at ``path`` on
     ``key``.
 
@@ -533,14 +556,17 @@ def merge_upsert(spark: SparkSession, path: str, batch: DataFrame,
     AND dtypes to match the manifest's recorded schema exactly — a
     same-name column with a changed type would otherwise split the
     snapshot across two physical schemas. Returns the new snapshot
-    version number.
+    version number; its manifest records how many distinct batch keys
+    the merge wrote (:func:`upserted_rows`).
 
     Partial-merge shape: one small job collects the batch's bucket ids;
     the touched bucket dirs are read with the recorded schema; batch
     (``__prio`` 1) and target rows (``__prio`` 0) fold through one
-    exchange on the bucket expression (``_dedup_in_bucket_layout``),
-    and the write keeps that clustering (no repartition). The full
-    rewrite takes the same fold over the whole target.
+    exchange on the bucket expression and one window ordered by
+    (``__prio``, ``order_col``) desc, which dedups the batch and lets it
+    beat the target at once (``_upsert_rows``); the write keeps that
+    clustering. The full rewrite folds over the whole target; table
+    creation and replace writes dedup the batch alone the same way.
 
     ``txn_app_id``/``txn_version`` (both or neither): idempotence stamp
     for at-least-once callers (foreachBatch epochs). If the current
@@ -568,29 +594,11 @@ def merge_upsert(spark: SparkSession, path: str, batch: DataFrame,
     WITHOUT retrying (a blind re-merge can't help: the caller must
     re-read and recompute). Plain merges leave it None and keep the
     re-merge retry loop.
-
-    ``batch_is_unique``: caller's promise that ``batch`` already holds
-    at most one row per ``key`` (e.g. the ETL pipeline's branches end in
-    their own per-key dedup) — the merge then skips its defensive
-    re-dedup, dropping one Window pass from every epoch's plan.
-
-    ``batch_pre_clustered`` (r13): caller's promise that ``batch`` is
-    already exchanged on THIS table's bucket expression
-    (``pmod(xxhash64(*key), n_buckets)`` with this call's
-    ``n_buckets`` — the fused-dedup pipeline shape). Writes that take
-    the batch as-is (table creation; ``batch_replaces_touched_buckets``
-    partial merges; no touched bucket exists yet) then skip the layout
-    repartition — one exchange per epoch serves dedup AND layout. Paths
-    that fold target rows in cluster in the fold's own exchange. A
-    wrong promise costs file fan-out, never correctness (the
-    partitioned write routes by value).
     """
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version go together")
     key = list(key)
-    order = [order_col] if order_col else key
-    batch_unique = (batch if batch_is_unique
-                    else latest_per_key(batch, key, order, desc=True))
+    order = [order_col] if order_col else []
 
     os.makedirs(path, exist_ok=True)
     for _attempt in range(max_commit_retries + 1):
@@ -612,8 +620,7 @@ def merge_upsert(spark: SparkSession, path: str, batch: DataFrame,
 
         carried: dict[str, str] = {}
         prev_txn: dict[str, int] = {}
-        merged = batch_unique
-        pre_clustered = batch_pre_clustered and batch_is_unique
+        target = None  # the rows the batch folds over; None: batch alone
         if prev is not None:
             if latest is not None:
                 man = _read_manifest(path, latest)
@@ -629,17 +636,16 @@ def merge_upsert(spark: SparkSession, path: str, batch: DataFrame,
                 # all referenced dirs share one physical schema
                 partial_ok = (man.get("n_buckets") == n_buckets
                               and man.get("key") == key
-                              and dict(batch_unique.dtypes) == tgt_dtypes)
+                              and dict(batch.dtypes) == tgt_dtypes)
             else:
                 # legacy dir-rename snapshot: migrate via one full rewrite
                 partial_ok = False
+            # the raw batch has the deduped batch's keys: a partial
+            # aggregate of bucket ids, no window, no payload shuffle
+            touched = ({r["b"] for r in batch.select(
+                _bucket_expr(key, n_buckets).alias("b")).distinct().collect()}
+                if partial_ok or batch_replaces_touched_buckets else set())
             if partial_ok:
-                # touched buckets: tiny distinct over the (deduped) batch
-                touched = {
-                    r["b"] for r in batch_unique.select(
-                        _bucket_expr(key, n_buckets).alias("b"))
-                    .distinct().collect()
-                }
                 carried = {s: rel for s, rel in man["buckets"].items()
                            if int(s) not in touched}
                 # path-level pruning: ONLY touched bucket dirs read
@@ -650,11 +656,8 @@ def merge_upsert(spark: SparkSession, path: str, batch: DataFrame,
                 # folded the touched buckets' rows in: the batch IS
                 # those buckets' content, no second read
                 if touched_rels and not batch_replaces_touched_buckets:
-                    merged = _fold_batch_over(
-                        batch_unique, _read_buckets(
-                            spark, path, touched_rels, man.get("schema")),
-                        key, n_buckets, files_per_bucket)
-                    pre_clustered = True
+                    target = _read_buckets(spark, path, touched_rels,
+                                           man.get("schema"))
             else:
                 # legacy/flat snapshot, bucket-count change, or schema
                 # evolution: one full rewrite into the bucketed layout.
@@ -668,19 +671,13 @@ def merge_upsert(spark: SparkSession, path: str, batch: DataFrame,
                 if batch_replaces_touched_buckets:
                     # replace semantics under a full rewrite: target rows
                     # in batch-touched buckets are superseded wholesale
-                    touched_df = batch_unique.select(
-                        _bucket_expr(key, n_buckets).alias("__tb")
-                    ).distinct()
-                    target = (target
-                              .withColumn("__tb", _bucket_expr(key, n_buckets))
-                              .join(F.broadcast(touched_df), on="__tb",
-                                    how="left_anti").drop("__tb"))
-                merged = _fold_batch_over(batch_unique, target, key,
-                                          n_buckets, files_per_bucket)
-                pre_clustered = True
+                    target = target.filter(
+                        ~_bucket_expr(key, n_buckets).isin(list(touched)))
 
+        merged, upserted = _upsert_rows(batch, target, key, order,
+                                        n_buckets, files_per_bucket)
         _write_bucketed(merged, key, n_buckets, data_dir, files_per_bucket,
-                        pre_clustered=pre_clustered)
+                        pre_clustered=True)
         manifest = {
             "n_buckets": n_buckets,
             "key": key,
@@ -688,6 +685,7 @@ def merge_upsert(spark: SparkSession, path: str, batch: DataFrame,
             "buckets": {**carried, **_scan_bucket_dirs(path, data_rel)},
             "txn": ({**prev_txn, txn_app_id: txn_version}
                     if txn_app_id is not None else prev_txn),
+            "upserted": _observed_count(upserted),
         }
         if _pre_commit_hook is not None:
             _pre_commit_hook()
@@ -863,6 +861,35 @@ def rebucket(spark: SparkSession, path: str, n_buckets: int,
     return new_v
 
 
+def _key_bucket(spark: SparkSession, values: list, dtypes: list[str],
+                n_buckets: int) -> int:
+    """``_bucket_expr`` of one key on the driver: Spark's interpreted
+    hash, one JVM call per column chained from seed 42 as ``xxhash64``
+    chains them (a null leaves the hash as it is). ``hash`` picks its
+    function by the value's class and a small Python int arrives as an
+    Integer, so a bigint calls ``hashLong``. Other key types take a
+    one-row Spark job."""
+    if not set(dtypes) <= {"string", "int", "bigint"}:
+        row = spark.createDataFrame(
+            [tuple(values)],
+            _schema_ddl({f"k{i}": t for i, t in enumerate(dtypes)}))
+        return row.select(_bucket_expr(row.columns, n_buckets)).head()[0]
+    jvm = spark._jvm
+    fns = jvm.org.apache.spark.sql.catalyst.expressions
+    h = 42
+    for v, t in zip(values, dtypes):
+        if v is None:
+            continue
+        if t == "bigint":
+            h = fns.XXH64.hashLong(v, h)
+            continue
+        if t == "string":
+            v = jvm.org.apache.spark.unsafe.types.UTF8String.fromString(v)
+        h = fns.XxHash64Function.hash(
+            v, jvm.org.apache.spark.sql.types.DataType.fromDDL(t), h)
+    return h % n_buckets  # Python's % is Spark's pmod for n_buckets > 0
+
+
 def lookup(spark: SparkSession, path: str, key_values: dict,
            version: int | None = None) -> DataFrame:
     """Indexed point lookup against the snapshot: the bucket id is a
@@ -876,7 +903,8 @@ def lookup(spark: SparkSession, path: str, key_values: dict,
     (order-insensitive); extra non-key columns are applied as plain
     pushed filters after the prune. The bucket dir is read with the
     manifest's recorded schema, so the lookup reads no footer to infer
-    one.
+    one, and the bucket id is hashed on the driver (``_key_bucket``), so
+    no Spark job runs before the read.
     """
     v = _latest_version(path) if version is None else version
     if v is None:
@@ -887,11 +915,8 @@ def lookup(spark: SparkSession, path: str, key_values: dict,
     if missing:
         raise ValueError(f"point lookup must bind the full key {key}; "
                          f"missing {missing}")
-    n_buckets = int(man["n_buckets"])
-    row = spark.createDataFrame(
-        [tuple(key_values[k] for k in key)],
-        _schema_ddl({k: man["schema"][k] for k in key}))
-    b = row.select(_bucket_expr(key, n_buckets).alias("b")).head()["b"]
+    b = _key_bucket(spark, [key_values[k] for k in key],
+                    [man["schema"][k] for k in key], int(man["n_buckets"]))
     rel = man["buckets"].get(str(b))
     if rel is None:
         # bucket never materialized -> key cannot exist

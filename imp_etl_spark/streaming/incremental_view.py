@@ -145,9 +145,6 @@ def run_incremental_view(spark: SparkSession, stream: DataFrame,
                        n_buckets=nb, txn_app_id=app_id,
                        txn_version=epoch_id,
                        batch_replaces_touched_buckets=True,
-                       # groupBy(key) aggregation => unique per key; the
-                       # merge's defensive re-dedup window is dead weight
-                       batch_is_unique=True,
                        expected_version=base_v if base_v is not None
                        else -1)
 

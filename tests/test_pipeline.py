@@ -7,7 +7,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from imp_etl_spark.plans.pipeline import build_pipeline, reference_keys
+from imp_etl_spark.plans.pipeline import build_pipeline, clean_queue
 from imp_etl_spark.plans.runner import run_etl
 from imp_etl_spark.plans.upsert import merge_upsert, read_target
 from tests.fixtures_b import make_frames
@@ -15,7 +15,8 @@ from tests.fixtures_b import make_frames
 
 def test_reference_keys_filters_queue(spark):
     queue, _, _ = make_frames(spark)
-    keys = {r["reference_no"] for r in reference_keys(queue).collect()}
+    keys = {r["reference_no"]
+            for r in clean_queue(queue).select("reference_no").collect()}
     # NULL/empty refs and NULL table rows dropped; duplicates collapsed
     assert keys == {"REF-1", "REF-2", "REF-GONE"}
 
@@ -80,9 +81,9 @@ def test_merge_upsert_idempotent_and_lww(spark, tmp_path):
 
 
 def test_merge_batch_is_unique_matches_default_path(spark, tmp_path):
-    """batch_is_unique=True on a pre-deduped batch commits the identical
-    sink state as the default defensive-re-dedup path on the raw batch
-    (the flag only elides a provably-no-op Window pass)."""
+    """A pre-deduped batch commits the identical sink state as the raw
+    batch it came from: the merge's own last-writer-wins window keeps
+    the same row per key, on table creation and on a partial merge."""
     from imp_etl_spark.operators.dedup import latest_per_key
 
     raw = spark.createDataFrame(
@@ -96,8 +97,7 @@ def test_merge_batch_is_unique_matches_default_path(spark, tmp_path):
     merge_upsert(spark, p_default, raw, key, "seq")
     p_flagged = str(tmp_path / "via_flag")
     merge_upsert(spark, p_flagged,
-                 latest_per_key(raw, key, ["seq"], desc=True), key, "seq",
-                 batch_is_unique=True)
+                 latest_per_key(raw, key, ["seq"], desc=True), key, "seq")
 
     rows = lambda p: sorted(map(tuple, read_target(spark, p).collect()))
     assert rows(p_flagged) == rows(p_default)
@@ -107,8 +107,8 @@ def test_merge_batch_is_unique_matches_default_path(spark, tmp_path):
     upd = spark.createDataFrame(
         [("V2", "R1", "upd", 5)],
         "voucher_id string, reference_no string, payload string, seq int")
-    merge_upsert(spark, p_default, upd, key, "seq")
-    merge_upsert(spark, p_flagged, upd, key, "seq", batch_is_unique=True)
+    merge_upsert(spark, p_default, raw.unionByName(upd), key, "seq")
+    merge_upsert(spark, p_flagged, upd, key, "seq")
     assert rows(p_flagged) == rows(p_default)
 
 
@@ -855,7 +855,7 @@ def test_fused_dedup_matches_latest_per_key(spark):
 
     df = _dup_frame(spark)
     fused = _dedup_in_bucket_layout(
-        df, ["voucher_id", "reference_no"], "seq", 16)
+        df, ["voucher_id", "reference_no"], ["seq"], 16)
     plain = latest_per_key(
         df, ["voucher_id", "reference_no"], ["seq"], desc=True)
     assert _rows(fused) == _rows(plain)
@@ -869,29 +869,28 @@ def test_fused_dedup_single_exchange(spark):
 
     df = _dup_frame(spark)
     plan = _dedup_in_bucket_layout(
-        df, ["voucher_id", "reference_no"], "seq", 16
+        df, ["voucher_id", "reference_no"], ["seq"], 16
     )._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
 def test_pre_clustered_merge_equals_replanned_merge(spark, tmp_path):
-    """merge_upsert(batch_pre_clustered=True) over a fused-dedup batch
-    commits the exact table the unfused path commits, with the same
-    one-file-per-bucket layout."""
+    """merge_upsert over a batch already deduped in the bucket layout
+    commits the exact table it commits from a latest_per_key batch,
+    with one file per bucket dir."""
     from imp_etl_spark.operators.dedup import latest_per_key
     from imp_etl_spark.plans.upsert import _dedup_in_bucket_layout
     from imp_etl_spark.plans.upsert import merge_upsert, read_target
 
     df = _dup_frame(spark)
     key = ["voucher_id", "reference_no"]
-    fused = _dedup_in_bucket_layout(df, key, "seq", 16)
+    fused = _dedup_in_bucket_layout(df, key, ["seq"], 16)
     plain = latest_per_key(df, key, ["seq"], desc=True)
 
     p_fused = str(tmp_path / "fused")
     p_plain = str(tmp_path / "plain")
-    merge_upsert(spark, p_fused, fused, key, "seq", batch_is_unique=True,
-                 batch_pre_clustered=True)
-    merge_upsert(spark, p_plain, plain, key, "seq", batch_is_unique=True)
+    merge_upsert(spark, p_fused, fused, key, "seq")
+    merge_upsert(spark, p_plain, plain, key, "seq")
     assert _rows(read_target(spark, p_fused)) == \
         _rows(read_target(spark, p_plain))
     # layout: one directory per non-empty bucket, one file each
@@ -905,14 +904,15 @@ def test_fused_dedup_sub_split_matches_and_single_exchange(spark, tmp_path):
     """files_per_bucket > 1 (the scale-adaptive sub-split that keeps a
     big epoch's dedup sort from funneling through n_buckets tasks):
     same rows as latest_per_key, still ONE exchange, and the
-    pre-clustered wide write commits the identical table."""
+    wide merge commits the identical table from either batch."""
     from imp_etl_spark.operators.dedup import latest_per_key
     from imp_etl_spark.plans.upsert import _dedup_in_bucket_layout
     from imp_etl_spark.plans.upsert import merge_upsert, read_target
 
     df = _dup_frame(spark)
     key = ["voucher_id", "reference_no"]
-    fused = _dedup_in_bucket_layout(df, key, "seq", 16, files_per_bucket=3)
+    fused = _dedup_in_bucket_layout(df, key, ["seq"], 16,
+                                    files_per_bucket=3)
     plain = latest_per_key(df, key, ["seq"], desc=True)
     assert _rows(fused) == _rows(plain)
     # AQE reprints the pre-execution plan under "== Initial Plan ==";
@@ -923,40 +923,32 @@ def test_fused_dedup_sub_split_matches_and_single_exchange(spark, tmp_path):
 
     p_fused = str(tmp_path / "fused_wide")
     p_plain = str(tmp_path / "plain")
-    merge_upsert(spark, p_fused, fused, key, "seq", batch_is_unique=True,
-                 files_per_bucket=3, batch_pre_clustered=True)
-    merge_upsert(spark, p_plain, plain, key, "seq", batch_is_unique=True)
+    merge_upsert(spark, p_fused, fused, key, "seq", files_per_bucket=3)
+    merge_upsert(spark, p_plain, plain, key, "seq")
     assert _rows(read_target(spark, p_fused)) == \
         _rows(read_target(spark, p_plain))
 
 
 def test_run_etl_plan_has_single_branch_exchange(spark, tmp_path):
-    """End-to-end pin of VERDICT r12 item 3: the voucher branch's valid
-    plan (what the MERGE executes) carries exactly ONE exchange —
-    the bucket-expression repartition — instead of hash(pk) + the
-    sink's hash(bucket)."""
-    from imp_etl_spark.plans.pipeline import build_pipeline
-    from imp_etl_spark.plans.upsert import DEFAULT_BUCKETS
-
-    queue = spark.createDataFrame(
-        [(1, "R1", "voucher"), (2, "R2", "voucher")],
-        "log_id int, reference_no string, `table` string")
-    voucher = spark.createDataFrame(
-        [("V1", "R1", "x"), ("V2", "R2", "y")],
-        "voucher_id string, reference_no string, first_name string")
-    txn = spark.createDataFrame(
-        [("T1", "R1", "1")],
-        "voucher_details_id string, reference_no string, quantity string")
-    res = build_pipeline(queue, voucher, txn, sink_buckets=DEFAULT_BUCKETS)
-    plan = res.voucher.valid._jdf.queryExecution().executedPlan().toString()
-    for b in (res.voucher, res.transaction):
-        b.cleansed.unpersist()
-    # exactly one branch-payload shuffle: the bucket-expression
-    # repartition. No hash(pk) dedup exchange remains (the keys-side
-    # distinct aggregate and the semi-prune broadcast are not payload
-    # shuffles).
-    assert plan.count("REPARTITION_BY_COL") == 1, plan
-    assert "Exchange hashpartitioning(voucher_id" not in plan, plan
+    """End-to-end pin of VERDICT r12 item 3 on the create path: each
+    branch's table-creating write shuffles its rows once, on the bucket
+    expression that dedups the batch and lays out the write. The branch
+    adds no exchange of its own: no hash(pk) dedup, no round-robin
+    spread, no dedup shuffle of the queue refs under the semi join's
+    broadcast."""
+    queue, voucher, txn = make_frames(spark)
+    store = _SqlStore(spark)
+    after_id = store.last_id()
+    summary = run_etl(spark, queue, voucher, txn, str(tmp_path / "v"),
+                      str(tmp_path / "t"))
+    assert summary["processedVoucherCount"] == 3
+    assert summary["processedTransactionCount"] == 3
+    writes = store.exchanges_per_write(after_id, str(tmp_path))
+    assert len(writes) == 2, writes
+    for exchanges in writes:
+        assert len(exchanges) == 1, exchanges
+        assert exchanges[0].startswith("Exchange hashpartitioning(cast("
+                                       "pmod(xxhash64("), exchanges
 
 
 # ---------------------------------------------------------------------------
@@ -997,11 +989,10 @@ class _SqlStore:
         newest = self._newest(1)
         return newest[-1]["executionId"] if newest else -1
 
-    def payload_exchanges_per_write(self, after_id: int, under: str):
+    def exchanges_per_write(self, after_id: int, under: str):
         """For every SQL execution after ``after_id`` that writes below
-        ``under``: its ``Exchange hashpartitioning`` nodes that shuffle
-        row payloads. The queue-key dedup under the semi join's
-        broadcast shuffles reference numbers only and is left out."""
+        ``under``: its shuffle ``Exchange`` nodes (of any partitioning;
+        broadcasts are ``BroadcastExchange`` nodes and left out)."""
         out = []
         for e in self._newest(200):
             if e["executionId"] <= after_id:
@@ -1010,20 +1001,17 @@ class _SqlStore:
                 self._store.planGraph(e["executionId"]).allNodes())
             if any("InsertIntoHadoopFsRelationCommand" in nd["name"]
                    and under in nd["desc"] for nd in nodes):
-                out.append([
-                    nd["desc"] for nd in nodes
-                    if nd["desc"].startswith("Exchange hashpartitioning")
-                    and not nd["desc"].startswith(
-                        "Exchange hashpartitioning(reference_no#")])
+                out.append([nd["desc"] for nd in nodes
+                            if nd["desc"].startswith("Exchange ")])
         return out
 
 
 def test_partial_merge_fire_cost(spark, tmp_path):
     """A cron fire into an existing table (the partial-merge path) stays
     within its measured job count, and each branch's write shuffles its
-    rows exactly twice: the batch's dedup exchange and the merge's fold
-    of batch and touched-bucket rows, both on the bucket expression.
-    The job bound is the count measured on this fixture."""
+    rows exactly once: the merge's one exchange on the bucket expression
+    dedups the batch and folds it over the touched buckets' rows. The
+    job bound is the count measured on this fixture."""
     queue, voucher, txn = make_frames(spark)
     v_path, t_path = str(tmp_path / "v"), str(tmp_path / "t")
     run_etl(spark, queue, voucher, txn, v_path, t_path)      # create
@@ -1034,18 +1022,20 @@ def test_partial_merge_fire_cost(spark, tmp_path):
     jobs = _next_job_id(spark) - job0
     assert summary["processedVoucherCount"] == 3
     assert summary["processedTransactionCount"] == 3
-    assert jobs <= 22, jobs
+    assert jobs <= 18, jobs
 
-    writes = store.payload_exchanges_per_write(after_id, str(tmp_path))
+    writes = store.exchanges_per_write(after_id, str(tmp_path))
     assert len(writes) == 2, writes
     for exchanges in writes:
-        assert len(exchanges) == 2, exchanges
-        assert all("xxhash64" in x for x in exchanges), exchanges
+        assert len(exchanges) == 1, exchanges
+        assert exchanges[0].startswith("Exchange hashpartitioning(cast("
+                                       "pmod(xxhash64("), exchanges
 
 
 def test_lookup_reads_recorded_schema(spark, tmp_path):
     """A point lookup reads its bucket dir with the manifest's recorded
-    schema, so it runs no footer-inference job: at most three Spark
+    schema, so it runs no footer-inference job, and hashes the key's
+    bucket on the driver, so it runs no hash job: at most two Spark
     jobs, and the lookup still finds the row."""
     from imp_etl_spark.plans.upsert import lookup
 
@@ -1056,7 +1046,7 @@ def test_lookup_reads_recorded_schema(spark, tmp_path):
     for _ in range(2):  # the first call also pays first-use codegen
         job0 = _next_job_id(spark)
         rows = lookup(spark, path, {"k": 7, "ref": "R1"}).collect()
-        assert _next_job_id(spark) - job0 <= 3
+        assert _next_job_id(spark) - job0 <= 2
         assert [r["p"] for r in rows] == ["p7"]
 
 
@@ -1080,3 +1070,152 @@ def test_read_target_without_recorded_schema(spark, tmp_path):
     df = read_target(spark, path)
     assert dict(df.dtypes) == {"k": "int", "p": "string"}
     assert df.count() == 20
+
+
+def test_key_bucket_matches_bucket_expr(spark):
+    """The lookup's driver-side bucket id equals ``_bucket_expr`` on
+    int, bigint and string keys — empty, non-ASCII, past 32 bits — and
+    on null key columns, alone and chained across a composite key."""
+    from imp_etl_spark.plans.upsert import _bucket_expr, _key_bucket
+
+    rows = [(7, 7, "R1"), (-3, 2 ** 40, ""), (None, -1, "ñé漢字"),
+            (2 ** 31 - 1, None, None), (0, 0, "voucher-0001")]
+    df = spark.createDataFrame(rows, "i int, l bigint, s string")
+    dtypes = dict(df.dtypes)
+    for key in (["i"], ["l"], ["s"], ["i", "l", "s"], ["s", "l"]):
+        for n in (16, 7):
+            want = [r["b"] for r in df.select(
+                _bucket_expr(key, n).alias("b")).collect()]
+            got = [_key_bucket(spark, [r[k] for k in key],
+                               [dtypes[k] for k in key], n)
+                   for r in df.collect()]
+            assert got == want, (key, n)
+
+
+def _lww_batch(spark, extra: bool = False):
+    """Duplicate keys with differing, tied (identical rows) and null
+    order values, three of them in ``_lww_target`` and one new;
+    ``extra`` adds a column the target lacks."""
+    rows = [("K1", "R1", "a", 1), ("K1", "R1", "c", 3), ("K1", "R1", "b", 2),
+            ("K2", "R1", "t", 5), ("K2", "R1", "t", 5),
+            ("K3", "R2", "x", 1), ("K3", "R2", "n", None),
+            ("K90", "R1", "z", 1)]
+    df = spark.createDataFrame(
+        rows, "voucher_id string, reference_no string, p string, seq int")
+    return df.withColumn("note", F.concat(F.lit("n-"), "p")) if extra else df
+
+
+def _lww_target(spark):
+    return spark.createDataFrame(
+        [(f"K{i}", "R1" if i <= 2 else "R2", f"old{i}", 0)
+         for i in range(1, 40)],
+        "voucher_id string, reference_no string, p string, seq int")
+
+
+def test_merge_fold_matches_preview(spark, tmp_path):
+    """One window dedups the batch and lets it beat the target: on the
+    create, partial-merge, schema-evolving full-rewrite and
+    replace-touched-buckets paths the committed table equals
+    ``merge_preview`` of the same batch, and the commit records the
+    batch's four distinct keys as upserted."""
+    from imp_etl_spark.plans.upsert import (
+        _bucket_expr,
+        _latest_version,
+        merge_preview,
+        upserted_rows,
+    )
+
+    key = ["voucher_id", "reference_no"]
+    batch, target = _lww_batch(spark), _lww_target(spark)
+    cols = target.columns
+
+    def committed(path):
+        return _rows(read_target(spark, path).select(*cols))
+
+    def check(path, base):
+        assert committed(path) == _rows(
+            merge_preview(batch, base, key, "seq").select(*cols)), path
+        assert upserted_rows(path, _latest_version(path)) == 4, path
+
+    created = str(tmp_path / "create")
+    merge_upsert(spark, created, batch, key, "seq", n_buckets=4)
+    check(created, target.limit(0))
+
+    for name, fpb in (("partial", 1), ("partial_wide", 3)):
+        path = str(tmp_path / name)
+        merge_upsert(spark, path, target, key, "seq", n_buckets=4)
+        merge_upsert(spark, path, batch, key, "seq", n_buckets=4,
+                     files_per_bucket=fpb)
+        check(path, target)
+
+    evolved = str(tmp_path / "evolve")
+    merge_upsert(spark, evolved, target, key, "seq", n_buckets=4)
+    merge_upsert(spark, evolved, _lww_batch(spark, extra=True), key, "seq",
+                 n_buckets=4)
+    check(evolved, target)
+    notes = {r["voucher_id"]: r["note"]
+             for r in read_target(spark, evolved).collect()}
+    assert len(notes) == 40
+    assert [notes[k] for k in ("K1", "K2", "K3", "K90", "K4")] == [
+        "n-c", "n-t", "n-x", "n-z", None]
+
+    replaced = str(tmp_path / "replace")
+    merge_upsert(spark, replaced, target, key, "seq", n_buckets=4)
+    merge_upsert(spark, replaced, batch, key, "seq", n_buckets=4,
+                 batch_replaces_touched_buckets=True)
+    touched = [r["b"] for r in batch.select(
+        _bucket_expr(key, 4).alias("b")).distinct().collect()]
+    check(replaced, target.filter(~_bucket_expr(key, 4).isin(touched)))
+
+
+def test_processed_exact_across_cas_retry(spark, tmp_path):
+    """A competing commit between a fire's write and its version check
+    makes that merge re-plan and write again; the processed counters
+    still equal the branches' distinct valid keys."""
+    import threading
+
+    from imp_etl_spark.plans import upsert as U
+
+    queue, voucher, txn = make_frames(spark)
+    v_path, t_path = str(tmp_path / "v"), str(tmp_path / "t")
+    run_etl(spark, queue, voucher, txn, v_path, t_path)
+    lock, calls = threading.Lock(), {"n": 0}
+
+    def competing_commits():
+        with lock:
+            calls["n"] += 1
+            if calls["n"] == 1:
+                for p in (v_path, t_path):
+                    U.rebucket(spark, p, U.current_n_buckets(p))
+
+    U._pre_commit_hook = competing_commits
+    try:
+        summary = run_etl(spark, queue, voucher, txn, v_path, t_path)
+    finally:
+        U._pre_commit_hook = None
+    assert calls["n"] >= 3  # two branches, at least one retried
+    assert summary["processedVoucherCount"] == 3
+    assert summary["processedTransactionCount"] == 3
+    assert summary["skippedVoucherCount"] == 2
+    assert read_target(spark, v_path).count() == 3
+    assert read_target(spark, t_path).count() == 3
+
+
+def test_fire_jobs_run_in_callers_job_group(spark, tmp_path):
+    """Every Spark job a fire runs, the warning sample's and the
+    watermark's from its thread pool included, carries the caller's
+    job group."""
+    queue, voucher, txn = make_frames(spark)
+    sc = spark.sparkContext
+    group = "fire-under-test"
+    sc.setJobGroup(group, "run_etl")
+    try:
+        job0 = _next_job_id(spark)
+        run_etl(spark, queue, voucher, txn, str(tmp_path / "v"),
+                str(tmp_path / "t"))
+        jobs = _next_job_id(spark) - job0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs > 0
