@@ -46,7 +46,6 @@ from pyspark.sql import functions as F
 # whitespace. Infinity is omitted (never occurs in the reference's data).
 _PARSEFLOAT_RE = r"^[+-]?(\d+\.?\d*([eE][+-]?\d+)?|\.\d+([eE][+-]?\d+)?)"
 _LEADING_WS_RE = r"^\s+"
-_ISO_OFFSET_FMT = "yyyy-MM-dd'T'HH:mm:ss[.SSS]XXX"
 
 
 def _c(col: Column | str) -> Column:
@@ -131,12 +130,13 @@ def date_norm_utc(col: str) -> Column:
     as UTC, matching a TZ=UTC node container), truncate to the UTC
     calendar day, else NULL. Requires session timezone UTC for string
     inputs carrying offsets (quirk Q4); timestamp-typed inputs are
-    timezone-free.
+    timezone-free. The format-less parse reads ISO-8601 on its own
+    (``T`` or space, 0-6 fraction digits, ``Z``/``±hh``/``±hhmm``/
+    ``±hh:mm``); the second arm adds the slash-separated date.
     """
     s = f"CAST({_q(col)} AS STRING)"
     return F.expr(
         f"date_format(coalesce(try_to_timestamp({s}), "
-        f"try_to_timestamp({s}, {_lit(_ISO_OFFSET_FMT)}), "
         f"try_to_timestamp({s}, 'yyyy/MM/dd')), 'yyyy-MM-dd')")
 
 

@@ -168,9 +168,11 @@ class EtlController:
             # stop BEFORE releasing the handle: if q.stop() raises (a
             # dying stream's py4j error), _query stays set and a retry
             # stop() can still succeed — popping first would strand the
-            # controller with is_running=True and no recovery path
+            # controller with is_running=True and no recovery path.
+            # q.stop() returns once the query has ended; no
+            # awaitTermination here: it re-raises a failed epoch's
+            # error, which the scheduler thread records as lastError
             q.stop()
-            q.awaitTermination(60)
         if cr is not None:
             # the scheduler thread exits promptly now that the epoch is
             # stopped; join it, then sweep for a fire that registered
@@ -181,7 +183,6 @@ class EtlController:
                 q2 = self._query if self._query is not q else None
             if q2 is not None:
                 q2.stop()
-                q2.awaitTermination(60)
         out = self.status()  # uptime snapshot before the claim clears
         if q is not None or cr is not None:
             with self._guard:

@@ -35,13 +35,16 @@ this merge began, discards the prepared snapshot and retries the whole
 merge against the new version (optimistic concurrency, the portable
 approximation of a conditional PUT; on S3/GCS the flip itself would be
 an If-Match/generation-precondition PUT, making check+flip one atomic
-request).
+request). Merges, compaction and re-bucketing all publish through this
+one commit (``_commit``) and write through one bucket clustering
+(``_bucket_exchange``).
 
 Exactly-once for read-modify-write streaming writers: a merge may carry
 a transaction stamp (``txn_app_id``, ``txn_version`` — the shape of
 Delta's txnAppId/txnVersion). The stamp rides IN the manifest, so it is
 published by the same single-object ``_latest.json`` flip as the data
 it describes. The incremental view (``streaming/incremental_view.py``)
+reads back the buckets an epoch touches with :func:`read_touched` and
 stamps its merges: a foreachBatch replay of an epoch that already
 committed sees its own stamp and becomes a no-op instead of adding its
 partials twice. The ETL epoch (``streaming/etl_stream.py``) carries no
@@ -84,11 +87,15 @@ from pyspark.sql import functions as F
 
 from imp_etl_spark.operators.dedup import latest_per_key
 
-_LEGACY_PREFIX = "v_"            # round-2 dir-rename layout (read-only)
 _LATEST = "_latest.json"
 _MANIFEST_FMT = "_manifest_v{}.json"
 _DATA_PREFIX = "data_"
 DEFAULT_BUCKETS = 16
+#: Snapshot versions a commit retains (the newest, always including the
+#: one just committed); older ones stop being readable by time travel.
+KEEP_VERSIONS = 2
+#: Re-merges a plain merge makes after losing the commit race.
+_COMMIT_RETRIES = 3
 
 
 # ---------------------------------------------------------------------------
@@ -201,26 +208,23 @@ def _schema_ddl(schema: dict) -> str:
 
 
 def _read_buckets(spark: SparkSession, path: str, rels: Sequence[str],
-                  schema: dict | None) -> DataFrame:
+                  schema: dict) -> DataFrame:
     """Read bucket directories with the manifest's recorded schema, so
-    no parquet footer is read (one Spark job) just to infer it;
-    manifests without a recorded schema still infer. The internal
+    no parquet footer is read (one Spark job) just to infer it; no
+    directory yields an empty frame of that schema. The internal
     ``__bucket`` partition column never escapes."""
-    reader = spark.read.schema(_schema_ddl(schema)) if schema else spark.read
-    df = reader.parquet(*[os.path.join(path, r) for r in rels])
+    if not rels:
+        return spark.createDataFrame([], schema=_schema_ddl(schema))
+    df = spark.read.schema(_schema_ddl(schema)).parquet(
+        *[os.path.join(path, r) for r in rels])
     return df.drop("__bucket") if "__bucket" in df.columns else df
 
 
 def _manifest_df(spark: SparkSession, path: str,
                  manifest: dict) -> DataFrame:
-    """Resolve a manifest to a DataFrame (reads exactly the referenced
-    bucket directories; an empty manifest yields an empty frame with
-    the recorded schema)."""
-    rels = list(manifest["buckets"].values())
-    if not rels:
-        ddl = _schema_ddl(manifest.get("schema", {}))
-        return spark.createDataFrame([], schema=ddl or "__empty STRING")
-    return _read_buckets(spark, path, rels, manifest.get("schema"))
+    """Every bucket directory a manifest references, as one frame."""
+    return _read_buckets(spark, path, list(manifest["buckets"].values()),
+                         manifest["schema"])
 
 
 def _scan_bucket_dirs(path: str, data_rel: str) -> dict[str, str]:
@@ -234,29 +238,6 @@ def _scan_bucket_dirs(path: str, data_rel: str) -> dict[str, str]:
         if entry.startswith("__bucket="):
             out[entry.split("=", 1)[1]] = f"{data_rel}/{entry}"
     return out
-
-
-# ---------------------------------------------------------------------------
-# legacy (round-2 dir-rename) layout — read + migrate only
-# ---------------------------------------------------------------------------
-
-def _legacy_versions(path: str) -> list[int]:
-    if not os.path.isdir(path):
-        return []
-    out = []
-    for d in os.listdir(path):
-        if d.startswith(_LEGACY_PREFIX):
-            try:
-                out.append(int(d[len(_LEGACY_PREFIX):]))
-            except ValueError:
-                pass
-    return sorted(out)
-
-
-def _read_legacy(spark: SparkSession, path: str, version: int) -> DataFrame:
-    df = spark.read.parquet(
-        os.path.join(path, f"{_LEGACY_PREFIX}{version}"))
-    return df.drop("__bucket") if "__bucket" in df.columns else df
 
 
 # ---------------------------------------------------------------------------
@@ -287,30 +268,25 @@ def _referenced_data_dirs(path: str) -> set[str]:
 _GC_MIN_AGE_S = 300.0
 
 
-def _older_than(p: str, min_age_s: float) -> bool:
+def _older_than_gc_age(p: str) -> bool:
     try:
-        return (os.path.getmtime(p) + min_age_s) < time.time()
+        return (os.path.getmtime(p) + _GC_MIN_AGE_S) < time.time()
     except OSError:
         return False  # vanished mid-scan: nothing to sweep
 
 
-def _gc_orphans(path: str, latest: int | None,
-                min_age_s: float = _GC_MIN_AGE_S) -> None:
-    """Sweep debris from crashed writers: legacy staging dirs, manifests
-    written after the last successful ``_latest.json`` flip, and data
-    dirs no manifest references — each only once older than
-    ``min_age_s`` (see ``_GC_MIN_AGE_S``: younger entries may belong to
-    a concurrent writer between its data write and its commit flip)."""
+def _gc_orphans(path: str, latest: int | None) -> None:
+    """Sweep debris from crashed writers: manifests written after the
+    last successful ``_latest.json`` flip, and data dirs no manifest
+    references — each only once older than ``_GC_MIN_AGE_S`` (younger
+    entries may belong to a concurrent writer between its data write
+    and its commit flip)."""
     if not os.path.isdir(path):
         return
-    for d in os.listdir(path):
-        if d.startswith("_staging_") and _older_than(
-                os.path.join(path, d), min_age_s):
-            shutil.rmtree(os.path.join(path, d), ignore_errors=True)
     for v in _manifest_versions(path):
         if latest is None or v > latest:
             mp = os.path.join(path, _MANIFEST_FMT.format(v))
-            if _older_than(mp, min_age_s):
+            if _older_than_gc_age(mp):
                 try:
                     os.remove(mp)
                 except OSError:
@@ -318,28 +294,21 @@ def _gc_orphans(path: str, latest: int | None,
     refs = _referenced_data_dirs(path)
     for d in os.listdir(path):
         if (d.startswith(_DATA_PREFIX) and d not in refs
-                and _older_than(os.path.join(path, d), min_age_s)):
+                and _older_than_gc_age(os.path.join(path, d))):
             shutil.rmtree(os.path.join(path, d), ignore_errors=True)
 
 
-def _apply_retention(path: str, new_v: int, keep_versions: int,
-                     legacy_vs: list[int]) -> None:
-    """Keep the newest ``keep_versions`` snapshot versions (always
+def _apply_retention(path: str, new_v: int) -> None:
+    """Keep the newest :data:`KEEP_VERSIONS` snapshot versions (always
     including the one just committed), then drop the data dirs those
     removed manifests were the last to reference. The before/after
     reference diff removes EXACTLY the dirs this retention orphaned —
     never a dir some concurrent writer wrote but has not published a
     manifest for yet (that is presumed in flight; genuine crash debris
     is ``_gc_orphans``' job, age-gated)."""
-    keep = keep_versions if keep_versions >= 1 else 1
-    all_vs = sorted(set(_manifest_versions(path)) | set(legacy_vs)
-                    | {new_v})
-    retained = set(all_vs[-keep:]) | {new_v}
+    all_vs = sorted(set(_manifest_versions(path)) | {new_v})
+    retained = set(all_vs[-KEEP_VERSIONS:]) | {new_v}
     refs_before = _referenced_data_dirs(path)
-    for v in legacy_vs:
-        if v not in retained:
-            shutil.rmtree(os.path.join(path, f"{_LEGACY_PREFIX}{v}"),
-                          ignore_errors=True)
     for v in _manifest_versions(path):
         if v not in retained:
             try:
@@ -368,25 +337,20 @@ def bucket_paths(path: str, version: int | None = None) -> dict[int, str]:
 def read_target(spark: SparkSession, path: str,
                 version: int | None = None) -> DataFrame | None:
     """Read the current snapshot, or a retained older one (time travel —
-    ``version`` from the ``merge_upsert`` return value; how many stay
-    readable is ``keep_versions``). The internal ``__bucket`` partition
-    column never escapes — callers see exactly the table schema."""
+    ``version`` from the ``merge_upsert`` return value; the newest
+    :data:`KEEP_VERSIONS` stay readable). The internal ``__bucket``
+    partition column never escapes — callers see exactly the table
+    schema."""
     latest = _latest_version(path)
-    mvs = set(_manifest_versions(path))
-    legacy = _legacy_versions(path)
     if version is None:
-        if latest is not None:
-            return _manifest_df(spark, path, _read_manifest(path, latest))
-        if legacy:
-            return _read_legacy(spark, path, legacy[-1])
-        return None
-    if version in mvs and (latest is None or version <= latest):
-        return _manifest_df(spark, path, _read_manifest(path, version))
-    if version in legacy:
-        return _read_legacy(spark, path, version)
-    have = sorted(mvs | set(legacy))
-    raise ValueError(
-        f"version {version} not retained at {path}; have {have}")
+        version = latest
+        if version is None:
+            return None
+    elif (latest is None or version > latest
+          or version not in _manifest_versions(path)):
+        raise ValueError(f"version {version} not retained at {path}; "
+                         f"have {_manifest_versions(path)}")
+    return _manifest_df(spark, path, _read_manifest(path, version))
 
 
 def _bucket_expr(key: Sequence[str], n_buckets: int):
@@ -394,11 +358,74 @@ def _bucket_expr(key: Sequence[str], n_buckets: int):
                   F.lit(n_buckets)).cast("int")
 
 
-def _sub_expr(key: Sequence[str], files_per_bucket: int):
-    """Second key hash that splits one bucket over ``files_per_bucket``
-    writer tasks."""
-    return F.pmod(F.xxhash64(*[F.col(k) for k in key], F.lit("sub")),
-                  F.lit(files_per_bucket))
+def _touched_ids(batch: DataFrame, key: Sequence[str],
+                 n_buckets: int) -> set[int]:
+    """The bucket ids ``batch``'s keys hash to: one small job, a partial
+    aggregate of bucket ids — no window, no payload shuffle."""
+    return {r["b"] for r in batch.select(
+        _bucket_expr(key, n_buckets).alias("b")).distinct().collect()}
+
+
+def read_touched(spark: SparkSession, path: str, batch: DataFrame,
+                 key: Sequence[str], version: int | None = None,
+                 ) -> tuple[DataFrame | None, int | None]:
+    """The rows of the snapshot's buckets that ``batch``'s ``key``
+    hashes to, and that snapshot's version (the current one by
+    default) — the read half of a read-modify-write. Only the touched
+    buckets' directories are read (path-level pruning: untouched dirs
+    are never listed), with the recorded schema (no footer read). A
+    table keyed on other columns has every bucket touched. The rows are
+    None when no touched bucket holds any; both are None when there is
+    no table."""
+    v = _latest_version(path) if version is None else version
+    if v is None:
+        return None, None
+    man = _read_manifest(path, v)
+    if man["key"] == list(key):
+        touched = _touched_ids(batch, key, man["n_buckets"])
+        rels = [man["buckets"][s] for s in (str(t) for t in touched)
+                if s in man["buckets"]]
+    else:
+        rels = list(man["buckets"].values())
+    if not rels:
+        return None, v
+    return _read_buckets(spark, path, rels, man["schema"]), v
+
+
+def _layout_exprs(key: Sequence[str], n_buckets: int,
+                  files_per_bucket: int) -> list:
+    """The sink's clustering: the bucket id, then a second key hash
+    that splits one bucket over ``files_per_bucket`` writer tasks."""
+    exprs = [_bucket_expr(key, n_buckets)]
+    if files_per_bucket > 1:
+        exprs.append(F.pmod(F.xxhash64(*[F.col(k) for k in key],
+                                       F.lit("sub")),
+                            F.lit(files_per_bucket)))
+    return exprs
+
+
+def _bucket_exchange(df: DataFrame, key: Sequence[str], n_buckets: int,
+                     files_per_bucket: int = 1) -> DataFrame:
+    """ONE exchange of ``df`` on the sink's bucket layout, after which
+    ``_write_bucketed`` lands each bucket as one directory without
+    re-partitioning.
+
+    ``files_per_bucket > 1`` widens each bucket to that many writer
+    tasks and files (sub-split by a second key hash), which keeps task
+    size bounded when a bucket holds gigabytes at 100 TB, and keeps a
+    big batch's sort from funneling through ``n_buckets`` tasks
+    (measured at 100x sf0.1: 45.7M rows through 16 tasks left half of
+    local[32] idle); ETL fires derive it from the session's parallelism
+    (:func:`sink_layout`). The sub-split fixes the partition count at
+    ``n_buckets * files_per_bucket``, so adaptive execution cannot
+    coalesce a small batch's (bucket, sub) tasks back into one file per
+    bucket. Readers are unaffected (a bucket is a directory either
+    way), and the merge cost model is unchanged: touched BUCKETS
+    rewrite whole."""
+    exprs = _layout_exprs(key, n_buckets, files_per_bucket)
+    if files_per_bucket > 1:
+        return df.repartition(n_buckets * files_per_bucket, *exprs)
+    return df.repartition(*exprs)
 
 
 def _dedup_in_bucket_layout(df: DataFrame, pk: list[str],
@@ -410,46 +437,28 @@ def _dedup_in_bucket_layout(df: DataFrame, pk: list[str],
     ``latest_per_key`` exchanges the full payload on hash(pk) and the
     bucketed write then re-exchanges it on hash(bucket) — two wide
     shuffles of every row to answer one clustering question, because
-    ``__bucket`` IS a pure function of pk. Instead: ONE exchange on the
-    sink's own bucket expression, then a lag-based first-row-of-key
-    filter inside a window PARTITIONED BY that same expression (same
-    clustering — Catalyst inserts no second exchange). Sorting by
-    (pk asc, each ``order`` column desc) makes the first row of each
-    key block the max-``order`` row — the same winner
+    ``__bucket`` IS a pure function of pk. Instead: the one
+    ``_bucket_exchange``, then a lag-based first-row-of-key filter
+    inside a window PARTITIONED BY that same layout (same clustering —
+    Catalyst inserts no second exchange; per-key dedup stays valid
+    under the sub-split because the sub key is a pure function of pk).
+    Sorting by (pk asc, each ``order`` column desc) makes the first row
+    of each key block the max-``order`` row — the same winner
     ``latest_per_key``'s row_number pick selects (ties within a key
     share the order values and are arbitrary in both shapes).
-    ``_write_bucketed`` then writes the already-clustered rows without
-    re-partitioning. ``merge_upsert`` runs every write through it: the
-    batch alone (order = the batch's order column) or the batch folded
-    over target rows (order = ``__prio`` then the order column, so
-    batch rows beat target rows and the newest batch row wins).
-
-    ``files_per_bucket`` keeps the fused shape scale-adaptive: with
-    one partition per bucket, a big batch sorts in only ``n_buckets``
-    tasks (measured at 100x sf0.1: 45.7M rows through 16 tasks left
-    half of local[32] idle). ``files_per_bucket > 1`` sub-splits each
-    bucket by ``_sub_expr`` — the EXACT expression the wide-write path
-    uses, so the pre-clustered promise still holds and each
-    (bucket, sub) task lands one file, the documented wide-bucket
-    layout. Per-key dedup stays valid because the sub key is a pure
-    function of pk. The sub-split fixes the partition count at
-    ``n_buckets * files_per_bucket``, the wide-write path's own count,
-    so adaptive execution cannot coalesce a small batch's (bucket, sub)
-    tasks back into one file per bucket.
+    ``merge_upsert`` runs every write through it: the batch alone
+    (order = the batch's order column) or the batch folded over target
+    rows (order = ``__prio`` then the order column, so batch rows beat
+    target rows and the newest batch row wins).
     """
     from pyspark.sql import Window
 
-    parts = [_bucket_expr(pk, n_buckets)]
-    if files_per_bucket > 1:
-        parts.append(_sub_expr(pk, files_per_bucket))
-        exchanged = df.repartition(n_buckets * files_per_bucket, *parts)
-    else:
-        exchanged = df.repartition(*parts)
     ks = F.struct(*[F.col(k) for k in pk])
-    w = Window.partitionBy(*parts).orderBy(
-        *[F.col(k).asc() for k in pk], *[F.col(c).desc() for c in order])
+    w = Window.partitionBy(*_layout_exprs(pk, n_buckets, files_per_bucket)
+                           ).orderBy(*[F.col(k).asc() for k in pk],
+                                     *[F.col(c).desc() for c in order])
     return (
-        exchanged
+        _bucket_exchange(df, pk, n_buckets, files_per_bucket)
         .withColumn("__first", ~F.lag(ks).over(w).eqNullSafe(ks))
         .filter(F.col("__first"))
         .drop("__first")
@@ -457,38 +466,18 @@ def _dedup_in_bucket_layout(df: DataFrame, pk: list[str],
 
 
 def _write_bucketed(df: DataFrame, key: Sequence[str], n_buckets: int,
-                    data_dir: str, files_per_bucket: int = 1,
-                    pre_clustered: bool = False) -> None:
-    """Write a (partial or full) snapshot hash-bucketed on the key.
-    One shuffle on the bucket id; each bucket lands as its own
-    ``__bucket=k`` directory (individually addressable by manifests).
+                    data_dir: str) -> None:
+    """Write rows clustered by ``_bucket_exchange`` as one ``__bucket=k``
+    directory per bucket (individually addressable by manifests).
+    Correctness never depends on the clustering (the dynamic
+    partitioned write routes rows by the ``__bucket`` VALUE); rows
+    clustered otherwise only cost extra files per directory."""
+    (df.withColumn("__bucket", _bucket_expr(key, n_buckets))
+     .write.mode("overwrite").partitionBy("__bucket").parquet(data_dir))
 
-    ``files_per_bucket > 1`` widens each bucket to that many writer
-    tasks/files (sub-partitioned by a second key hash), which keeps
-    task size bounded when a bucket holds gigabytes at 100 TB; ETL
-    fires derive it from the session's parallelism (:func:`sink_layout`).
-    Readers are unaffected (a bucket is a directory either way), and
-    the merge cost model is unchanged: touched BUCKETS rewrite whole.
 
-    ``pre_clustered`` (r13): the caller's promise that ``df`` is
-    ALREADY exchanged on this exact bucket expression (the output of
-    ``_dedup_in_bucket_layout``) — the write then skips its
-    repartition, so one exchange serves both the dedup window and the
-    layout. Correctness never depends on it (the
-    dynamic partitioned write routes rows by the ``__bucket`` VALUE);
-    a wrong promise only costs extra files per bucket directory.
-    """
-    out = df.withColumn("__bucket", _bucket_expr(key, n_buckets))
-    if pre_clustered:
-        pass  # caller already clustered on (bucket[, sub]) — any fpb
-    elif files_per_bucket > 1:
-        out = (out.withColumn("__sub", _sub_expr(key, files_per_bucket))
-               .repartition(n_buckets * files_per_bucket,
-                            "__bucket", "__sub")
-               .drop("__sub"))
-    else:
-        out = out.repartition("__bucket")
-    out.write.mode("overwrite").partitionBy("__bucket").parquet(data_dir)
+def _new_data_rel() -> str:
+    return f"{_DATA_PREFIX}{uuid.uuid4().hex[:12]}"
 
 
 def _upsert_rows(batch: DataFrame, target: DataFrame | None,
@@ -522,24 +511,53 @@ def _observed_count(obs: Observation) -> int | None:
 
 
 class ConcurrentWriteError(RuntimeError):
-    """Another writer advanced ``_latest.json`` while a merge was in
-    flight, and the merge exhausted its retry budget."""
+    """Another writer advanced ``_latest.json`` while a merge or a
+    maintenance rewrite was in flight, and it cannot (or may no longer)
+    retry."""
 
 
-# Test injection point: called once per commit attempt, right before the
-# CAS check. Lets tests interleave a competing writer at the worst
-# possible moment without threads. Never set in production code.
+# Test injection point: ``_commit`` calls it once per attempt of a merge,
+# compaction or re-bucketing, right before the CAS check. Lets tests
+# interleave a competing writer at the worst possible moment without
+# threads. Never set in production code.
 _pre_commit_hook = None
+
+
+def _commit(path: str, latest: int | None, data_rel: str,
+            manifest: dict) -> bool:
+    """Publish ``manifest`` (whose new buckets live in ``data_rel``) as
+    the version after ``latest``. Version CAS, two portable checks: (1)
+    the manifest name for the new version must be ours alone
+    (create-if-absent — a same-version racer can never clobber a
+    committed manifest); (2) the snapshot the caller read must still be
+    current, else a committed writer's buckets would be dropped. Either
+    failure removes the prepared data dir and any manifest just created
+    (a surviving one would reference deleted dirs) and returns False.
+    Otherwise the one atomic ``_latest.json`` flip commits, retention
+    runs, and the result is True."""
+    if _pre_commit_hook is not None:
+        _pre_commit_hook()
+    new_v = 0 if latest is None else latest + 1
+    man_path = os.path.join(path, _MANIFEST_FMT.format(new_v))
+    won = _create_exclusive_json(man_path, manifest)
+    if won and _latest_version(path) != latest:
+        os.remove(man_path)
+        won = False
+    if not won:
+        shutil.rmtree(os.path.join(path, data_rel), ignore_errors=True)
+        return False
+    # THE commit point: one atomic single-object publish, written last
+    _atomic_write_json(os.path.join(path, _LATEST), {"version": new_v})
+    _apply_retention(path, new_v)
+    return True
 
 
 def merge_upsert(spark: SparkSession, path: str, batch: DataFrame,
                  key: Sequence[str], order_col: str | None = None,
-                 keep_versions: int = 2,
                  n_buckets: int = DEFAULT_BUCKETS,
                  files_per_bucket: int = 1,
                  txn_app_id: str | None = None,
                  txn_version: int | None = None,
-                 max_commit_retries: int = 3,
                  batch_replaces_touched_buckets: bool = False,
                  expected_version: int | None = None) -> int:
     """Upsert ``batch`` into the bucketed snapshot table at ``path`` on
@@ -559,32 +577,38 @@ def merge_upsert(spark: SparkSession, path: str, batch: DataFrame,
     version number; its manifest records how many distinct batch keys
     the merge wrote (:func:`upserted_rows`).
 
-    Partial-merge shape: one small job collects the batch's bucket ids;
-    the touched bucket dirs are read with the recorded schema; batch
+    Partial-merge shape: ``read_touched`` reads the touched buckets'
+    rows (one small job collects the batch's bucket ids); batch
     (``__prio`` 1) and target rows (``__prio`` 0) fold through one
     exchange on the bucket expression and one window ordered by
     (``__prio``, ``order_col``) desc, which dedups the batch and lets it
     beat the target at once (``_upsert_rows``); the write keeps that
-    clustering. The full rewrite folds over the whole target; table
-    creation and replace writes dedup the batch alone the same way.
+    clustering, and ``files_per_bucket`` sub-splits it
+    (``_bucket_exchange``). Every touched bucket holds a batch row, so
+    the write replaces each of them, and the new manifest is the old
+    one with the written buckets overlaid. The full rewrite folds over
+    the whole target; table creation and replace writes dedup the batch
+    alone the same way.
 
     ``txn_app_id``/``txn_version`` (both or neither): idempotence stamp
     for at-least-once callers (foreachBatch epochs). If the current
     manifest already records ``txn_version`` (or newer) for this app
     id, the merge is a no-op returning the current version — the replay
     guard. The stamp commits atomically with the data (same
-    ``_latest.json`` flip). ``max_commit_retries`` bounds the CAS retry
-    loop (module doc, Concurrency); each retry re-reads the then-current
-    snapshot and re-merges, so no committed writer's buckets are lost.
+    ``_latest.json`` flip). A merge that loses the commit race re-reads
+    the then-current snapshot and re-merges (module doc), up to
+    ``_COMMIT_RETRIES`` times, so no committed writer's buckets are
+    lost.
 
     ``batch_replaces_touched_buckets``: caller's promise that the batch
     holds EVERY surviving row of every bucket it touches (the
     read-modify-write shape: the caller already read those buckets back
-    and folded them in). The merge then skips re-reading the touched
-    buckets — each epoch reads them exactly once instead of twice — and
-    rows absent from the batch are dropped from touched buckets (on the
-    fallback full rewrite too). Meaningless without the schema/bucket
-    preconditions of a partial merge holding OR a full rewrite.
+    with :func:`read_touched` and folded them in). The merge then skips
+    re-reading the touched buckets — each epoch reads them exactly once
+    instead of twice — and rows absent from the batch are dropped from
+    touched buckets (on the fallback full rewrite too). Meaningless
+    without the schema/bucket preconditions of a partial merge holding
+    OR a full rewrite.
 
     ``expected_version``: optimistic concurrency for read-modify-write
     callers — the snapshot version the caller's read was based on (-1
@@ -601,7 +625,7 @@ def merge_upsert(spark: SparkSession, path: str, batch: DataFrame,
     order = [order_col] if order_col else []
 
     os.makedirs(path, exist_ok=True)
-    for _attempt in range(max_commit_retries + 1):
+    for _attempt in range(_COMMIT_RETRIES + 1):
         latest = _latest_version(path)
         if expected_version is not None:
             base = latest if latest is not None else -1
@@ -610,74 +634,48 @@ def merge_upsert(spark: SparkSession, path: str, batch: DataFrame,
                     f"{path} moved to version {base} but the caller's "
                     f"read-modify-write was based on {expected_version}; "
                     "re-read and recompute")
-        legacy_vs = _legacy_versions(path)
         _gc_orphans(path, latest)
-        prev = latest if latest is not None else (
-            legacy_vs[-1] if legacy_vs else None)
-        new_v = prev + 1 if prev is not None else 0
-        data_rel = f"{_DATA_PREFIX}{uuid.uuid4().hex[:12]}"
-        data_dir = os.path.join(path, data_rel)
 
         carried: dict[str, str] = {}
         prev_txn: dict[str, int] = {}
         target = None  # the rows the batch folds over; None: batch alone
-        if prev is not None:
-            if latest is not None:
-                man = _read_manifest(path, latest)
-                prev_txn = dict(man.get("txn", {}))
-                if (txn_app_id is not None
-                        and prev_txn.get(txn_app_id) is not None
-                        and int(prev_txn[txn_app_id]) >= txn_version):
-                    return latest  # replayed epoch: already applied
-                tgt_dtypes = (man.get("schema")
-                              or dict(_manifest_df(spark, path, man).dtypes))
-                # exact column-set + dtype equality: anything else (new,
-                # dropped, or RETYPED columns) forces the full rewrite so
-                # all referenced dirs share one physical schema
-                partial_ok = (man.get("n_buckets") == n_buckets
-                              and man.get("key") == key
-                              and dict(batch.dtypes) == tgt_dtypes)
-            else:
-                # legacy dir-rename snapshot: migrate via one full rewrite
-                partial_ok = False
-            # the raw batch has the deduped batch's keys: a partial
-            # aggregate of bucket ids, no window, no payload shuffle
-            touched = ({r["b"] for r in batch.select(
-                _bucket_expr(key, n_buckets).alias("b")).distinct().collect()}
-                if partial_ok or batch_replaces_touched_buckets else set())
-            if partial_ok:
-                carried = {s: rel for s, rel in man["buckets"].items()
-                           if int(s) not in touched}
-                # path-level pruning: ONLY touched bucket dirs read
-                touched_rels = [man["buckets"][s]
-                                for s in (str(t) for t in touched)
-                                if s in man["buckets"]]
+        if latest is not None:
+            man = _read_manifest(path, latest)
+            prev_txn = man["txn"]
+            if (txn_app_id is not None
+                    and prev_txn.get(txn_app_id) is not None
+                    and int(prev_txn[txn_app_id]) >= txn_version):
+                return latest  # replayed epoch: already applied
+            # exact column-set + dtype equality: anything else (new,
+            # dropped, or RETYPED columns) forces the full rewrite so
+            # all referenced dirs share one physical schema
+            if (man["n_buckets"] == n_buckets and man["key"] == key
+                    and dict(batch.dtypes) == man["schema"]):
+                # every touched bucket holds a batch row, so the write
+                # replaces each one: its dirs overlay the carried map
+                carried = man["buckets"]
                 # with batch_replaces_touched_buckets the caller already
                 # folded the touched buckets' rows in: the batch IS
                 # those buckets' content, no second read
-                if touched_rels and not batch_replaces_touched_buckets:
-                    target = _read_buckets(spark, path, touched_rels,
-                                           man.get("schema"))
+                if not batch_replaces_touched_buckets:
+                    target, _ = read_touched(spark, path, batch, key, latest)
             else:
-                # legacy/flat snapshot, bucket-count change, or schema
-                # evolution: one full rewrite into the bucketed layout.
-                # Schema evolution keeps ALL columns from both sides — a
-                # new batch column backfills null on historical rows, a
-                # dropped one stays (null on updated rows), so readers
-                # never break.
-                target = (_manifest_df(spark, path, man)
-                          if latest is not None
-                          else _read_legacy(spark, path, legacy_vs[-1]))
+                # bucket-count change or schema evolution: one full
+                # rewrite into the bucketed layout. Schema evolution
+                # keeps ALL columns from both sides — a new batch column
+                # backfills null on historical rows, a dropped one stays
+                # (null on updated rows), so readers never break.
+                target = _manifest_df(spark, path, man)
                 if batch_replaces_touched_buckets:
                     # replace semantics under a full rewrite: target rows
                     # in batch-touched buckets are superseded wholesale
-                    target = target.filter(
-                        ~_bucket_expr(key, n_buckets).isin(list(touched)))
+                    target = target.filter(~_bucket_expr(key, n_buckets).isin(
+                        list(_touched_ids(batch, key, n_buckets))))
 
         merged, upserted = _upsert_rows(batch, target, key, order,
                                         n_buckets, files_per_bucket)
-        _write_bucketed(merged, key, n_buckets, data_dir, files_per_bucket,
-                        pre_clustered=True)
+        data_rel = _new_data_rel()
+        _write_bucketed(merged, key, n_buckets, os.path.join(path, data_rel))
         manifest = {
             "n_buckets": n_buckets,
             "key": key,
@@ -687,31 +685,10 @@ def merge_upsert(spark: SparkSession, path: str, batch: DataFrame,
                     if txn_app_id is not None else prev_txn),
             "upserted": _observed_count(upserted),
         }
-        if _pre_commit_hook is not None:
-            _pre_commit_hook()
-        # Version CAS, two portable checks: (1) the manifest name for
-        # new_v must be ours alone (create-if-absent — a same-version
-        # racer can never clobber a committed manifest); (2) the
-        # snapshot we merged against must still be current, else a
-        # committed writer's buckets would be dropped. Either failure
-        # discards the prepared snapshot and re-merges from the top.
-        man_path = os.path.join(path, _MANIFEST_FMT.format(new_v))
-        if not _create_exclusive_json(man_path, manifest):
-            shutil.rmtree(data_dir, ignore_errors=True)
-            continue
-        if _latest_version(path) != latest:
-            try:
-                os.remove(man_path)
-            except OSError:
-                pass
-            shutil.rmtree(data_dir, ignore_errors=True)
-            continue
-        # THE commit point: one atomic single-object publish, written last
-        _atomic_write_json(os.path.join(path, _LATEST), {"version": new_v})
-        _apply_retention(path, new_v, keep_versions, legacy_vs)
-        return new_v
+        if _commit(path, latest, data_rel, manifest):
+            return 0 if latest is None else latest + 1
     raise ConcurrentWriteError(
-        f"lost the commit race at {path} {max_commit_retries + 1} times; "
+        f"lost the commit race at {path} {_COMMIT_RETRIES + 1} times; "
         "writers are expected to be serialized (ST6 overlap guard)")
 
 
@@ -746,18 +723,46 @@ def _bucket_file_counts(path: str, manifest: dict) -> dict[str, int]:
     return out
 
 
-def compact_snapshot(spark: SparkSession, path: str,
-                     max_files_per_bucket: int = 1,
-                     keep_versions: int = 2) -> int:
+def _rewrite(spark: SparkSession, path: str, latest: int, man: dict,
+             buckets: dict[str, str], n_buckets: int) -> int:
+    """Maintenance's tail: re-cluster the rows of ``buckets`` (a subset
+    of ``man``'s, the snapshot at ``latest``) into ``n_buckets`` buckets
+    of one file each in a fresh data dir, carry the manifest's other
+    buckets by reference, and commit. Maintenance runs under the same
+    single-writer rule as merges; the commit's version CAS is the
+    backstop, not the lock — if another writer committed first, it
+    raises ``ConcurrentWriteError`` (re-run it against the new
+    snapshot)."""
+    key = man["key"]
+    data_rel = _new_data_rel()
+    rows = _read_buckets(spark, path, list(buckets.values()), man["schema"])
+    _write_bucketed(_bucket_exchange(rows, key, n_buckets), key, n_buckets,
+                    os.path.join(path, data_rel))
+    manifest = {
+        "n_buckets": n_buckets,
+        "key": key,
+        "schema": man["schema"],
+        "buckets": {**{b: rel for b, rel in man["buckets"].items()
+                       if b not in buckets},
+                    **_scan_bucket_dirs(path, data_rel)},
+        "txn": man["txn"],  # maintenance keeps the stamps
+    }
+    if not _commit(path, latest, data_rel, manifest):
+        raise ConcurrentWriteError(
+            f"maintenance lost the commit race at {path}; re-run it")
+    return latest + 1
+
+
+def compact_snapshot(spark: SparkSession, path: str) -> int:
     """Compact fragmented buckets of the current snapshot: any bucket
-    holding more than ``max_files_per_bucket`` parquet files (e.g.
-    written wide via ``files_per_bucket`` > 1, or whose writer task
-    count drifted) is rewritten into a fresh data dir at the target
-    file count; every other bucket carries into the new manifest BY
-    REFERENCE, unread and unmoved. Publishes a new snapshot version via
-    the same manifest-pointer commit as ``merge_upsert`` — readers
-    never see a half-compacted table, and time travel to the
-    pre-compaction version keeps working until retention drops it.
+    holding more than one parquet file (e.g. written wide via
+    ``files_per_bucket`` > 1, or whose writer task count drifted) is
+    rewritten into a fresh data dir at one file; every other bucket
+    carries into the new manifest BY REFERENCE, unread and unmoved.
+    Publishes a new snapshot version through the same commit as
+    ``merge_upsert`` — readers never see a half-compacted table, and
+    time travel to the pre-compaction version keeps working until
+    retention drops it.
 
     Returns the committed version (the CURRENT version unchanged if
     nothing is fragmented — compaction is a no-op then, not an empty
@@ -774,91 +779,30 @@ def compact_snapshot(spark: SparkSession, path: str,
     if latest is None:
         raise ValueError(f"no snapshot at {path}")
     man = _read_manifest(path, latest)
-    target = max(1, max_files_per_bucket)
     counts = _bucket_file_counts(path, man)
     frag = {b: rel for b, rel in man["buckets"].items()
-            if counts.get(b, 0) > target}
+            if counts.get(b, 0) > 1}
     if not frag:
         return latest
-
-    key = list(man["key"])
-    n_buckets = int(man["n_buckets"])
-    new_v = latest + 1
-    data_rel = f"{_DATA_PREFIX}{uuid.uuid4().hex[:12]}"
-    df = _read_buckets(spark, path, list(frag.values()), man.get("schema"))
-    _write_bucketed(df, key, n_buckets, os.path.join(path, data_rel),
-                    files_per_bucket=target)
-    carried = {b: rel for b, rel in man["buckets"].items()
-               if b not in frag}
-    manifest = {
-        "n_buckets": n_buckets,
-        "key": key,
-        "schema": man.get("schema") or dict(df.dtypes),
-        "buckets": {**carried, **_scan_bucket_dirs(path, data_rel)},
-        "txn": dict(man.get("txn", {})),  # maintenance keeps the stamps
-    }
-    _maintenance_commit(path, new_v, latest, data_rel, manifest)
-    _apply_retention(path, new_v, keep_versions, _legacy_versions(path))
-    return new_v
+    return _rewrite(spark, path, latest, man, frag, man["n_buckets"])
 
 
-def _maintenance_commit(path: str, new_v: int, latest: int,
-                        data_rel: str, manifest: dict) -> None:
-    """Same commit protocol as merge_upsert: create-if-absent manifest +
-    version CAS before the flip (maintenance runs under the same
-    single-writer rule; this is the backstop, not the lock). On either
-    failure the prepared data dir AND the just-created manifest are
-    removed — a surviving manifest would reference deleted dirs and
-    skew retention/`bucket_paths` until the next GC sweep."""
-    man_path = os.path.join(path, _MANIFEST_FMT.format(new_v))
-    if not _create_exclusive_json(man_path, manifest):
-        shutil.rmtree(os.path.join(path, data_rel), ignore_errors=True)
-        raise ConcurrentWriteError(
-            f"maintenance lost the commit race at {path}; re-run it")
-    if _latest_version(path) != latest:
-        try:
-            os.remove(man_path)
-        except OSError:
-            pass
-        shutil.rmtree(os.path.join(path, data_rel), ignore_errors=True)
-        raise ConcurrentWriteError(
-            f"maintenance lost the commit race at {path}; re-run it")
-    _atomic_write_json(os.path.join(path, _LATEST), {"version": new_v})
-
-
-def rebucket(spark: SparkSession, path: str, n_buckets: int,
-             keep_versions: int = 2,
-             files_per_bucket: int = 1) -> int:
-    """Re-hash the current snapshot into ``n_buckets`` buckets (one
-    full rewrite + manifest-pointer commit). The growth path for the
-    merge cost model: buckets are sized at table creation, and when the
-    table outgrows them (bucket dirs exceeding a healthy task size even
-    at ``files_per_bucket`` fan-out), doubling ``n_buckets`` here
-    restores the b/N partial-rewrite economics — subsequent
-    ``merge_upsert(..., n_buckets=<new>)`` calls take the partial path
-    against the new layout. Single full shuffle on the new bucket id;
-    idempotent under re-run (a crash before the ``_latest.json`` flip
-    leaves the old version live)."""
+def rebucket(spark: SparkSession, path: str, n_buckets: int) -> int:
+    """Re-hash the current snapshot into ``n_buckets`` buckets of one
+    file each (one full rewrite + the same commit as ``merge_upsert``).
+    The growth path for the merge cost model: buckets are sized at
+    table creation, and when the table outgrows them (bucket dirs
+    exceeding a healthy task size even at ``files_per_bucket`` fan-out),
+    doubling ``n_buckets`` here restores the b/N partial-rewrite
+    economics — subsequent ``merge_upsert(..., n_buckets=<new>)`` calls
+    take the partial path against the new layout. Single full shuffle
+    on the new bucket id; idempotent under re-run (a crash before the
+    ``_latest.json`` flip leaves the old version live)."""
     latest = _latest_version(path)
     if latest is None:
         raise ValueError(f"no snapshot at {path}")
     man = _read_manifest(path, latest)
-    key = list(man["key"])
-    df = _manifest_df(spark, path, _read_manifest(path, latest))
-    new_v = latest + 1
-    data_rel = f"{_DATA_PREFIX}{uuid.uuid4().hex[:12]}"
-    _write_bucketed(df, key, n_buckets, os.path.join(path, data_rel),
-                    files_per_bucket=files_per_bucket)
-    manifest = {
-        "n_buckets": n_buckets,
-        "key": key,
-        "schema": man.get("schema") or dict(df.dtypes),
-        "buckets": _scan_bucket_dirs(path, data_rel),
-        "txn": dict(man.get("txn", {})),  # maintenance keeps the stamps
-    }
-    _maintenance_commit(path, new_v, latest, data_rel, manifest)
-    _apply_retention(path, new_v, keep_versions, _legacy_versions(path))
-    return new_v
+    return _rewrite(spark, path, latest, man, man["buckets"], n_buckets)
 
 
 def _key_bucket(spark: SparkSession, values: list, dtypes: list[str],
@@ -918,11 +862,8 @@ def lookup(spark: SparkSession, path: str, key_values: dict,
     b = _key_bucket(spark, [key_values[k] for k in key],
                     [man["schema"][k] for k in key], int(man["n_buckets"]))
     rel = man["buckets"].get(str(b))
-    if rel is None:
-        # bucket never materialized -> key cannot exist
-        return _manifest_df(spark, path, {"buckets": {},
-                                          "schema": man.get("schema", {})})
-    df = _read_buckets(spark, path, [rel], man.get("schema"))
+    # a bucket never materialized holds no key: an empty frame
+    df = _read_buckets(spark, path, [rel] if rel else [], man["schema"])
     for col, val in key_values.items():
         df = df.filter(F.col(col) == F.lit(val))
     return df

@@ -9,10 +9,11 @@ re-scanning the full queue every run (services/etlService.js:549-570):
 
 - each micro-batch aggregates ONLY its own rows into partials;
 - the current partials for the AFFECTED BUCKETS are read back
-  (path-level pruning via the manifest — untouched buckets are never
-  listed), combined monoid-wise (add counts/sums, least/greatest
-  bounds), and MERGEd — which rewrites exactly those buckets and
-  carries the rest by reference;
+  (``upsert.read_touched``: path-level pruning via the manifest —
+  untouched buckets are never listed — read with the recorded schema,
+  so no footer is read to infer one), combined monoid-wise (add
+  counts/sums, least/greatest bounds), and MERGEd — which rewrites
+  exactly those buckets and carries the rest by reference;
 - replays are fenced by a transaction stamp, NOT by last-writer-wins:
   foreachBatch is only at-least-once (a crash between the sink commit
   and the offset-log commit replays the epoch), and because this epoch
@@ -29,8 +30,8 @@ Per-epoch cost is O(batch + touched buckets), never O(view): the
 read-back rows are precisely the rows the merge rewrites, and the
 merge is told so (``batch_replaces_touched_buckets``) — each touched
 bucket is read ONCE per epoch and replaced wholesale, with
-``expected_version`` pinning the commit to the snapshot the read-back
-came from (OCC for the read-modify-write).
+``expected_version`` pinning the commit to the snapshot version
+``read_touched`` returned with the rows (OCC for the read-modify-write).
 
 Dtype stability across epochs: the sum partial re-aggregates its own
 column, which would widen DECIMAL precision every epoch and trip the
@@ -74,30 +75,6 @@ def _combine(frames: list[DataFrame], key: Sequence[str]) -> DataFrame:
         F.max("last_seen").alias("last_seen")))
 
 
-def _current_touched_partials(spark: SparkSession, path: str,
-                              part: DataFrame,
-                              key: Sequence[str]) -> DataFrame | None:
-    """Read back the stored partials for exactly the buckets this
-    batch touches (manifest path pruning — the same dirs the merge will
-    rewrite)."""
-    latest = U._latest_version(path)
-    if latest is None:
-        return None
-    man = U._read_manifest(path, latest)
-    if man.get("key") != list(key):
-        return U.read_target(spark, path)  # layout change: full fallback
-    n_buckets = int(man["n_buckets"])
-    touched = {r["b"] for r in part.select(
-        U._bucket_expr(list(key), n_buckets).alias("b"))
-        .distinct().collect()}
-    rels = [man["buckets"][s] for s in (str(b) for b in touched)
-            if s in man["buckets"]]
-    if not rels:
-        return None
-    df = spark.read.parquet(*[os.path.join(path, r) for r in rels])
-    return df.drop("__bucket") if "__bucket" in df.columns else df
-
-
 def run_incremental_view(spark: SparkSession, stream: DataFrame,
                          path: str, key: Sequence[str], value_col: str,
                          order_col: str, checkpoint_dir: str,
@@ -130,10 +107,9 @@ def run_incremental_view(spark: SparkSession, stream: DataFrame,
         if not batch.head(1):
             return
         sp = batch.sparkSession
-        base_v = U._latest_version(path)
         nb = U.current_n_buckets(path) or n_buckets
         part = _partials(batch, key, value_col, order_col)
-        cur = _current_touched_partials(sp, path, part, key)
+        cur, base_v = U.read_touched(sp, path, part, key)
         merged = part if cur is None else _combine([part, cur], key)
         # `merged` holds EVERY surviving row of the buckets it touches
         # (cur was the full read-back of exactly those buckets), so the

@@ -52,7 +52,7 @@ def test_parse_float_compat(spark, value, expected):
 
 # Rows where a slip in the SQL-text rules' literal escaping would show: a
 # regex backslash class (\s, \d, \.) lost to string unescaping, or the
-# quoted 'T' of the ISO-offset format. Expected values are JS parity
+# slashes of the 'yyyy/MM/dd' format. Expected values are JS parity
 # (module docstring): parseFloat prefix-parses after leading whitespace.
 @pytest.mark.parametrize("value,expected", [
     ("  3.75", 3.75),
@@ -77,15 +77,13 @@ def test_date_norm_utc_escape_sensitive_rows(spark, value, expected):
 
 
 def test_sql_literals_round_trip(spark):
-    """The SQL-text rules' literals reach the engine verbatim: the ISO
-    offset format with its quoted 'T' (whose parse arm the default
-    parse shadows for every value tried, so no date row can show a slip
-    there) and the parseFloat regex with its backslash classes."""
-    texts = [cleanse._ISO_OFFSET_FMT, "a'b\\c", cleanse._PARSEFLOAT_RE,
-             cleanse._LEADING_WS_RE]
+    """The SQL-text rules' literals reach the engine verbatim: a string
+    with a quote and a backslash, and the parseFloat regexes with their
+    backslash classes."""
+    texts = ["a'b\\c", cleanse._PARSEFLOAT_RE, cleanse._LEADING_WS_RE]
     row = spark.range(1).select(
-        F.expr(cleanse._lit(texts[0])), F.expr(cleanse._lit(texts[1])),
-        F.expr(cleanse._raw(texts[2])), F.expr(cleanse._raw(texts[3]))
+        F.expr(cleanse._lit(texts[0])), F.expr(cleanse._raw(texts[1])),
+        F.expr(cleanse._raw(texts[2]))
     ).collect()[0]
     assert list(row) == texts
 
@@ -104,6 +102,31 @@ def test_parse_float_clean_keeps_zero(spark):
     ("", None),
     (None, None),
     ("2000-02-29", "2000-02-29"),
+    # ISO-8601 offsets, fractions and separators the format-less parse
+    # reads on its own (a negative offset shifts a day forward)
+    ("2024-03-05T23:30:00-05:00", "2024-03-06"),
+    ("2024-03-05T01:30:00Z", "2024-03-05"),
+    ("2024-03-05T01:30:00.1+08:00", "2024-03-04"),
+    ("2024-03-05T01:30:00.12+08:00", "2024-03-04"),
+    ("2024-03-05T01:30:00.123+08:00", "2024-03-04"),
+    ("2024-03-05T01:30:00.1234+08:00", "2024-03-04"),
+    ("2024-03-05T01:30:00.12345+08:00", "2024-03-04"),
+    ("2024-03-05T01:30:00.123456+08:00", "2024-03-04"),
+    ("2024-03-05T01:30:00.123456Z", "2024-03-05"),
+    ("2024-03-05T01:30:00+0800", "2024-03-04"),
+    ("2024-03-05T01:30:00+08", "2024-03-04"),
+    ("2024-03-05 01:30:00+08:00", "2024-03-04"),
+    ("2024-03-05T07:59:59.999+08:00", "2024-03-04"),
+    ("0001-01-01T00:00:00+00:00", "0001-01-01"),
+    # perfbench's generated date vocabulary (perfbench/gen.py _DATE)
+    ("2024-03-05", "2024-03-05"),
+    ("2024-03-05T01:30:00+08:00", "2024-03-04"),
+    ("2024/03/05", "2024-03-05"),
+    ("garbage", None),
+    ("2023-12-31T23:59:59+08:00", "2023-12-31"),
+    ("2024-02-29", "2024-02-29"),
+    ("2024-13-45", None),
+    ("2025-01-01T00:00:00Z", "2025-01-01"),
 ])
 def test_date_norm_utc(spark, value, expected):
     assert _one(spark, cleanse.date_norm_utc("x"), value) == expected

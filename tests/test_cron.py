@@ -533,6 +533,32 @@ def test_every_minute_schedule_waits_for_first_match(monkeypatch):
     assert starts[0] >= _dt(2026, 8, 12, 9, 0, 0), starts[0]
 
 
+def test_stop_returns_while_failing_fire_in_flight(monkeypatch):
+    """stop() on a fire whose epoch fails once stopped ends the epoch
+    and returns the controller status without raising the epoch's
+    error: the scheduler thread records that error as ``lastError``."""
+    import threading
+
+    fired = threading.Event()
+    queries: list[FakeQuery] = []
+
+    def failing_stream(*args, **kwargs):
+        q = FakeQuery(error=RuntimeError("epoch failed"))
+        queries.append(q)
+        fired.set()
+        return q
+
+    clock = FakeClock(_dt(2026, 8, 12, 8, 59, 59), step=0.5)
+    ctl = _schedule_fake(monkeypatch, failing_stream, "0 9 * * 1-5", clock)
+    assert fired.wait(30), "fire never started"
+    assert _wait_for(lambda: ctl._query is not None)
+    assert queries[0].isActive  # the epoch runs until stopped
+    st = ctl.stop()
+    assert queries[0].stop_calls >= 1
+    assert st["lastError"] == "RuntimeError: epoch failed"
+    assert ctl.is_running is False
+
+
 def test_failed_fires_keep_bounded_error_record(monkeypatch):
     """A schedule whose every fire fails keeps one error count and the
     last error, not one exception per fire, and status shows it while

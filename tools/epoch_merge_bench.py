@@ -22,6 +22,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from imp_etl_spark.operators.dedup import latest_per_key
 from imp_etl_spark.plans import upsert as U
 from imp_etl_spark.session import get_spark
 from imp_etl_spark.sources.parquet import read_table
@@ -39,14 +40,7 @@ def one_epoch(spark, path: str, version: int, replace: bool) -> float:
         "k", (F.col("n") + 1).alias("n"), (F.col("ord") + 1).alias("ord"))
     # read back the touched bucket's rows and fold the batch in (the
     # read-modify-write half every variant pays)
-    touched = {r["b"] for r in batch.select(
-        U._bucket_expr(["k"], N_BUCKETS).alias("b")).distinct().collect()}
-    man = U._read_manifest(path, version)
-    rels = [man["buckets"][str(b)] for b in touched
-            if str(b) in man["buckets"]]
-    cur = spark.read.parquet(*[os.path.join(path, r) for r in rels])
-    cur = cur.drop("__bucket") if "__bucket" in cur.columns else cur
-    from imp_etl_spark.operators.dedup import latest_per_key
+    cur, _ = U.read_touched(spark, path, batch, ["k"], version)
     folded = latest_per_key(
         batch.unionByName(cur), ["k"], ["ord"], desc=True)
     U.merge_upsert(spark, path, folded, ["k"], "ord",

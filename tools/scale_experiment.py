@@ -144,7 +144,7 @@ def time_partial_merge(spark, sf_dir: str) -> tuple[float, float, str]:
     """Initial full merge of lineitem-as-table, then a 1-key batch:
     wall of the partial merge + fraction of buckets rewritten."""
     from imp_etl_spark.plans.upsert import (
-        _read_manifest,
+        bucket_paths,
         merge_upsert,
         read_target,
     )
@@ -166,10 +166,9 @@ def time_partial_merge(spark, sf_dir: str) -> tuple[float, float, str]:
     t0 = time.perf_counter()
     v1 = merge_upsert(spark, path, one, ["k"], "ord")
     part_s = time.perf_counter() - t0
-    m0, m1 = _read_manifest(path, v0), _read_manifest(path, v1)
-    rewritten = sum(1 for b in m1["buckets"]
-                    if m0["buckets"].get(b) != m1["buckets"][b])
-    frac = f"{rewritten}/{len(m1['buckets'])}"
+    m0, m1 = bucket_paths(path, v0), bucket_paths(path, v1)
+    rewritten = sum(1 for b in m1 if m0.get(b) != m1[b])
+    frac = f"{rewritten}/{len(m1)}"
     n = read_target(spark, path).count()
     shutil.rmtree(os.path.dirname(path), ignore_errors=True)
     return full_s, part_s, f"{frac} buckets, {n} rows"
